@@ -175,6 +175,52 @@ def _struct_stats_jsonable(v):
     return None
 
 
+#: checkpoint columns :meth:`DeltaLogTable._snapshot` consumes — the
+#: rest (remove, commitInfo, checkpointMetadata, …) is never decoded
+_CHECKPOINT_COLS = (
+    "add", "metaData", "protocol", "txn", "domainMetadata", "sidecar",
+)
+
+
+def _arrow_value(v, t):
+    """One pyarrow ``to_pylist`` value → the plain form the JSON log
+    replay yields: maps (key/value pair lists) become dicts, structs
+    stay dicts, and tz-aware timestamps become naive UTC datetimes so
+    ``stats_parsed`` renders the naive isoformat the JSON stats carry,
+    whatever the process time zone."""
+    import datetime
+
+    import pyarrow as pa
+
+    if v is None:
+        return None
+    if pa.types.is_map(t):
+        return {k: _arrow_value(x, t.item_type) for k, x in v}
+    if pa.types.is_struct(t):
+        return {f.name: _arrow_value(v.get(f.name), f.type) for f in t}
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return [_arrow_value(x, t.value_type) for x in v]
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+    return v
+
+
+def _checkpoint_rows(path: str) -> list[dict]:
+    """A checkpoint (or V2 sidecar) parquet file's action rows as
+    ``{column: value}`` dicts, decoded on the driver."""
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
+    cols = [c for c in _CHECKPOINT_COLS if c in pf.schema_arrow.names]
+    tbl = pf.read(columns=cols)
+    out: list[dict] = [{} for _ in range(tbl.num_rows)]
+    for c in cols:
+        t = tbl.schema.field(c).type
+        for row, v in zip(out, tbl.column(c).to_pylist()):
+            row[c] = _arrow_value(v, t)
+    return out
+
+
 class LakeTable:
     """A named, versioned, ACID table at a directory path."""
 
@@ -1774,33 +1820,29 @@ class DeltaLogTable:
         start = 0
         cp = self._checkpoint()
         if cp and cp[0] <= target:
-            # bootstrap from the checkpoint (control-plane read; one
-            # parquet scan of the action table, not the data)
+            # bootstrap from the checkpoint: decoded on the DRIVER with
+            # pyarrow, one file at a time (parts of a multi-part
+            # checkpoint may carry different column sets), never as a
+            # Spark job — the action table is control-plane sized and a
+            # Spark read costs ~200 ms of job scheduling per call where
+            # the decode costs a few ms. No snapshot cache: every call
+            # still lists the log and replays from here.
             sidecars: list[str] = []
 
-            def consume(df_cp) -> None:
+            def consume(rows: list[dict]) -> None:
                 nonlocal meta, schema_str, part_cols, proto
-                cols = df_cp.columns
-                for r in df_cp.collect():
-                    md = r["metaData"] if "metaData" in cols else None
-                    if md is not None and md["schemaString"]:
-                        meta = md.asDict(recursive=True)
+                for r in rows:
+                    md = r.get("metaData")
+                    if md is not None and md.get("schemaString"):
+                        meta = md
                         schema_str = md["schemaString"]
-                        part_cols = list(md["partitionColumns"] or [])
-                    pr = r["protocol"] if "protocol" in cols else None
-                    if pr is not None and pr["minReaderVersion"] is not None:
-                        proto = {
-                            k: v
-                            for k, v in pr.asDict(recursive=True).items()
-                            if v is not None
-                        }
+                        part_cols = list(md.get("partitionColumns") or [])
+                    pr = r.get("protocol")
+                    if pr is not None and pr.get("minReaderVersion") is not None:
+                        proto = {k: v for k, v in pr.items() if v is not None}
                         self._check_protocol(proto)
-                    a = r["add"] if "add" in cols else None
-                    if a is not None and a["path"]:
-                        dv = None
-                        if "deletionVector" in (a.__fields__ or []) and a["deletionVector"]:
-                            dv = a["deletionVector"].asDict()
-                        flds = a.__fields__ or []
+                    a = r.get("add")
+                    if a is not None and a.get("path"):
                         # delta-spark may write checkpoint stats as a
                         # TYPED STRUCT instead of (or alongside) the
                         # JSON string (`delta.checkpoint.writeStatsAsJson
@@ -1810,82 +1852,54 @@ class DeltaLogTable:
                         # form so data skipping prunes from a peer's
                         # struct-stats checkpoint too (VERDICT r12
                         # item 7).
-                        stats = a["stats"] if "stats" in flds else None
-                        if not stats and "stats_parsed" in flds and a["stats_parsed"] is not None:
-                            # sanitize BEFORE dumping: default=str would
-                            # render timestamps 'YYYY-MM-DD HH:MM:SS'
-                            # (str(datetime)) while _file_stats emits
-                            # isoformat 'YYYY-MM-DDTHH:MM:SS'; skipping
-                            # compares the strings lexicographically
-                            # (' ' < 'T' at position 10), so the mixed
-                            # forms could unsoundly prune. Emit isoformat
-                            # and fold non-orderable values (Decimal,
-                            # bytes) to null — null min/max disables
-                            # pruning for that column, never corrupts it.
-                            stats = json.dumps(
-                                _struct_stats_jsonable(
-                                    a["stats_parsed"].asDict(recursive=True)
-                                )
-                            )
-                        pv = (
-                            dict(a["partitionValues"] or {})
-                            if "partitionValues" in flds
-                            else {}
-                        )
-                        if (
-                            not pv
-                            and "partitionValues_parsed" in flds
-                            and a["partitionValues_parsed"] is not None
-                        ):
+                        stats = a.get("stats")
+                        if not stats and a.get("stats_parsed") is not None:
+                            # isoformat timestamps (naive UTC, see
+                            # _checkpoint_rows), Decimal/bytes folded to
+                            # null: skipping compares the strings
+                            # lexicographically, and null min/max
+                            # disables pruning for a column, never
+                            # corrupts it
+                            stats = json.dumps(_struct_stats_jsonable(a["stats_parsed"]))
+                        pv = a.get("partitionValues") or {}
+                        if not pv and a.get("partitionValues_parsed") is not None:
                             pv = {
                                 k: (None if v is None else str(v))
-                                for k, v in a["partitionValues_parsed"]
-                                .asDict()
-                                .items()
+                                for k, v in a["partitionValues_parsed"].items()
                             }
                         adds[a["path"]] = {
                             "partitionValues": pv,
-                            "deletionVector": dv,
+                            "deletionVector": a.get("deletionVector") or None,
                             # stats survive the bootstrap when the
                             # checkpoint carries them (ours do); foreign
                             # checkpoints without the column just see
                             # "no stats" — pruning stays sound
                             "stats": stats,
-                            "size": a["size"] if "size" in flds else None,
-                            "baseRowId": a["baseRowId"] if "baseRowId" in flds else None,
-                            "defaultRowCommitVersion": (
-                                a["defaultRowCommitVersion"]
-                                if "defaultRowCommitVersion" in flds
-                                else None
-                            ),
+                            "size": a.get("size"),
+                            "baseRowId": a.get("baseRowId"),
+                            "defaultRowCommitVersion": a.get("defaultRowCommitVersion"),
                         }
-                    tx = r["txn"] if "txn" in cols else None
-                    if tx is not None and tx["appId"]:
+                    tx = r.get("txn")
+                    if tx is not None and tx.get("appId"):
                         txns[tx["appId"]] = int(tx["version"])
-                    dm = r["domainMetadata"] if "domainMetadata" in cols else None
-                    if dm is not None and dm["domain"]:
-                        if dm["removed"]:
+                    dm = r.get("domainMetadata")
+                    if dm is not None and dm.get("domain"):
+                        if dm.get("removed"):
                             domains.pop(dm["domain"], None)
                         else:
-                            domains[dm["domain"]] = dm["configuration"]
+                            domains[dm["domain"]] = dm.get("configuration")
                     # V2 checkpoints (spec: 'V2 Spec Checkpoint'): the
                     # top-level file carries checkpointMetadata + sidecar
                     # actions; the add actions live in the referenced
                     # ``_delta_log/_sidecars/`` parquet files
-                    sc = r["sidecar"] if "sidecar" in cols else None
-                    if sc is not None and sc["path"]:
+                    sc = r.get("sidecar")
+                    if sc is not None and sc.get("path"):
                         sidecars.append(sc["path"])
 
-            consume(self.spark.read.parquet(*cp[1]))
-            if sidecars:
-                consume(
-                    self.spark.read.parquet(
-                        *[
-                            os.path.join(self.log_path, "_sidecars", p)
-                            for p in sidecars
-                        ]
-                    )
-                )
+            for cp_file in cp[1]:
+                consume(_checkpoint_rows(cp_file))
+            for sc_path in sidecars:
+                consume(_checkpoint_rows(os.path.join(self.log_path, "_sidecars", sc_path)))
             start = cp[0] + 1
         versions = self._json_versions()
         # minor log compactions (spec: 'Log Compaction Files',
@@ -4033,9 +4047,14 @@ class DeltaLogTable:
             return [], self._stage_adds(add_df, part_cols, pmap, fid_of)
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.util import inheritable_thread_target
+
+        # the workers inherit the caller's job group (job groups are
+        # thread-local properties)
+        inherit = inheritable_thread_target(self.spark)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fc = pool.submit(self._stage_cdc, cdc_df, part_cols, pmap, fid_of)
-            fa = pool.submit(self._stage_adds, add_df, part_cols, pmap, fid_of)
+            fc = pool.submit(inherit(self._stage_cdc), cdc_df, part_cols, pmap, fid_of)
+            fa = pool.submit(inherit(self._stage_adds), add_df, part_cols, pmap, fid_of)
             return fc.result(), fa.result()
 
     def _cdc_protocol_actions(self) -> list[dict]:
@@ -4762,149 +4781,167 @@ class DeltaLogTable:
                 }
             )
 
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark.util import inheritable_thread_target
+
         encoded = []
-        cdc_pool = cdc_future = None
-        if parts:
-            scan = parts[0]
-            for p in parts[1:]:
-                scan = scan.unionByName(p)
-            # change data feed: emit the newly-masked rows as explicit
-            # cdc delete files — the predicate-matched scan minus rows
-            # a PRIOR DV already masked (those were emitted by the
-            # commit that masked them). The cdc write depends only on
-            # PRIOR table state, never on the encode job's result, so
-            # it stages CONCURRENTLY with the bitmap encode (guide
-            # §2.6, r15); an empty delete removes the staged files
-            # before the early return below.
-            if self._cdf_on(_meta):
-                del_rows = scan.filter(predicate)
-                dvf = [(full, json.loads(d)) for full, d in sorted(desc_of.items())]
-                if dvf:
-                    masked = (
-                        self._dv_deleted_df(dvf)
-                        .withColumnRenamed("_fp", "_dv_fp")
-                        .withColumnRenamed("_ri", "_dv_ri")
+        cdc_future = None
+        # the staged cdc files are removed on every path that does not
+        # commit (an unreferenced DV sidecar is left to vacuum, as after
+        # a crash)
+        committed = False
+        with ThreadPoolExecutor(max_workers=1) as cdc_pool:
+            try:
+                if parts:
+                    scan = parts[0]
+                    for p in parts[1:]:
+                        scan = scan.unionByName(p)
+                    # change data feed: emit the newly-masked rows as explicit
+                    # cdc delete files — the predicate-matched scan minus rows
+                    # a PRIOR DV already masked (those were emitted by the
+                    # commit that masked them). The cdc write depends only on
+                    # PRIOR table state, never on the encode job's result, so
+                    # it stages CONCURRENTLY with the bitmap encode (guide
+                    # §2.6, r15), in a worker that keeps the caller's job
+                    # group.
+                    if self._cdf_on(_meta):
+                        del_rows = scan.filter(predicate)
+                        dvf = [(full, json.loads(d)) for full, d in sorted(desc_of.items())]
+                        if dvf:
+                            masked = (
+                                self._dv_deleted_df(dvf)
+                                .withColumnRenamed("_fp", "_dv_fp")
+                                .withColumnRenamed("_ri", "_dv_ri")
+                            )
+                            del_rows = del_rows.join(
+                                masked, ["_dv_fp", "_dv_ri"], "left_anti"
+                            )
+                        cdc_future = cdc_pool.submit(
+                            inheritable_thread_target(self.spark)(self._stage_cdc),
+                            del_rows.select(
+                                *[f.name for f in schema.fields]
+                            ).withColumn("_change_type", F.lit("delete")),
+                            part_cols,
+                            _del_pmap,
+                            _del_fids,
+                        )
+                    encoded = (
+                        scan.filter(predicate)
+                        .select("_dv_fp", "_dv_ri")
+                        .groupBy("_dv_fp")
+                        .applyInPandas(
+                            encode, "_fp string, payload binary, card long, matched long"
+                        )
+                        .collect()
                     )
-                    del_rows = del_rows.join(
-                        masked, ["_dv_fp", "_dv_ri"], "left_anti"
+
+                new_adds: list[dict] = []
+                rows_deleted = 0
+                for r in sorted(encoded, key=lambda r: r["_fp"]):
+                    rel = rel_by_full[r["_fp"]]
+                    info = adds[rel]
+                    rows_deleted += r["matched"]
+                    payload = bytes(r["payload"])
+                    u = _uuid.uuid4()
+                    with open(
+                        os.path.join(self.path, f"deletion_vector_{u}.bin"), "wb"
+                    ) as fh:
+                        fh.write(b"\x01")
+                        fh.write(struct.pack(">i", len(payload)))
+                        fh.write(payload)
+                        fh.write(struct.pack(">I", zlib.crc32(payload)))
+                    add_act = {
+                        "path": rel,
+                        "partitionValues": info["partitionValues"],
+                        "size": os.path.getsize(r["_fp"]),
+                        "modificationTime": now,
+                        "dataChange": True,
+                        "deletionVector": {
+                            "storageType": "u",
+                            "pathOrInlineDv": base64.b85encode(u.bytes).decode(),
+                            "offset": 1,
+                            "sizeInBytes": len(payload),
+                            "cardinality": int(r["card"]),
+                        },
+                    }
+                    # a DV only removes rows, so the file's original min/max
+                    # stats stay valid (wide) bounds — dropping them here would
+                    # silently disable file skipping on every later read
+                    if info.get("stats"):
+                        add_act["stats"] = info["stats"]
+                    # row tracking: the file keeps its rows in place, so the
+                    # survivors' ids MUST stay stable — carry the original
+                    # baseRowId through the DV re-add (fresh-id assignment in
+                    # _commit_actions skips adds that already have one)
+                    if info.get("baseRowId") is not None:
+                        add_act["baseRowId"] = info["baseRowId"]
+                        add_act["defaultRowCommitVersion"] = info.get("defaultRowCommitVersion")
+                    new_adds.append({"add": add_act})
+                cdc_actions: list[dict] = []
+                if cdc_future is not None:
+                    cdc_actions = cdc_future.result()
+                if not new_adds:
+                    # nothing to commit — the concurrently staged cdc files
+                    # (exactly the newly-masked rows: none) are unreferenced;
+                    # the cleanup below drops them
+                    return {"rows_deleted": 0, "files_touched": 0}
+                # _feature_protocol STARTS from the log's actual latest
+                # protocol, so existing feature gates (columnMapping,
+                # timestampNtz, variantType, …) survive the upgrade — a
+                # hardcoded protocol here would silently drop them and leave
+                # the metadata requiring features the protocol no longer lists
+                proto_action = {
+                    "protocol": self._feature_protocol(
+                        reader_feats={"deletionVectors"},
+                        writer_feats=(
+                            {"deletionVectors", "changeDataFeed"}
+                            if cdc_actions
+                            else {"deletionVectors"}
+                        ),
                     )
-                from concurrent.futures import ThreadPoolExecutor
-
-                cdc_pool = ThreadPoolExecutor(max_workers=1)
-                cdc_future = cdc_pool.submit(
-                    self._stage_cdc,
-                    del_rows.select(
-                        *[f.name for f in schema.fields]
-                    ).withColumn("_change_type", F.lit("delete")),
-                    part_cols,
-                    _del_pmap,
-                    _del_fids,
-                )
-            encoded = (
-                scan.filter(predicate)
-                .select("_dv_fp", "_dv_ri")
-                .groupBy("_dv_fp")
-                .applyInPandas(
-                    encode, "_fp string, payload binary, card long, matched long"
-                )
-                .collect()
-            )
-
-        new_adds: list[dict] = []
-        rows_deleted = 0
-        for r in sorted(encoded, key=lambda r: r["_fp"]):
-            rel = rel_by_full[r["_fp"]]
-            info = adds[rel]
-            rows_deleted += r["matched"]
-            payload = bytes(r["payload"])
-            u = _uuid.uuid4()
-            with open(os.path.join(self.path, f"deletion_vector_{u}.bin"), "wb") as fh:
-                fh.write(b"\x01")
-                fh.write(struct.pack(">i", len(payload)))
-                fh.write(payload)
-                fh.write(struct.pack(">I", zlib.crc32(payload)))
-            add_act = {
-                "path": rel,
-                "partitionValues": info["partitionValues"],
-                "size": os.path.getsize(r["_fp"]),
-                "modificationTime": now,
-                "dataChange": True,
-                "deletionVector": {
-                    "storageType": "u",
-                    "pathOrInlineDv": base64.b85encode(u.bytes).decode(),
-                    "offset": 1,
-                    "sizeInBytes": len(payload),
-                    "cardinality": int(r["card"]),
-                },
-            }
-            # a DV only removes rows, so the file's original min/max
-            # stats stay valid (wide) bounds — dropping them here would
-            # silently disable file skipping on every later read
-            if info.get("stats"):
-                add_act["stats"] = info["stats"]
-            # row tracking: the file keeps its rows in place, so the
-            # survivors' ids MUST stay stable — carry the original
-            # baseRowId through the DV re-add (fresh-id assignment in
-            # _commit_actions skips adds that already have one)
-            if info.get("baseRowId") is not None:
-                add_act["baseRowId"] = info["baseRowId"]
-                add_act["defaultRowCommitVersion"] = info.get("defaultRowCommitVersion")
-            new_adds.append({"add": add_act})
-        cdc_actions: list[dict] = []
-        if cdc_future is not None:
-            cdc_actions = cdc_future.result()
-            cdc_pool.shutdown()
-        if not new_adds:
-            # nothing to commit — the concurrently staged cdc files
-            # (exactly the newly-masked rows: none) are unreferenced;
-            # drop them so an empty delete leaves no debris
-            for act in cdc_actions:
-                try:
-                    os.remove(os.path.join(self.path, act["cdc"]["path"]))
-                except OSError:
-                    pass
-            return {"rows_deleted": 0, "files_touched": 0}
-        # _feature_protocol STARTS from the log's actual latest
-        # protocol, so existing feature gates (columnMapping,
-        # timestampNtz, variantType, …) survive the upgrade — a
-        # hardcoded protocol here would silently drop them and leave
-        # the metadata requiring features the protocol no longer lists
-        proto_action = {
-            "protocol": self._feature_protocol(
-                reader_feats={"deletionVectors"},
-                writer_feats=(
-                    {"deletionVectors", "changeDataFeed"}
-                    if cdc_actions
-                    else {"deletionVectors"}
-                ),
-            )
-        }
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now,
-                    "operation": "DELETE",
-                    "operationParameters": {"predicate": predicate},
-                    "engineInfo": "ent_fins_lakehouse_spark/delta-shim",
                 }
-            },
-            proto_action,
-            *cdc_actions,
-            *new_adds,
-        ]
-        version = self._commit_planned(
-            actions, "delete", base=_planned_at
-        )
+                actions: list[dict] = [
+                    {
+                        "commitInfo": {
+                            "timestamp": now,
+                            "operation": "DELETE",
+                            "operationParameters": {"predicate": predicate},
+                            "engineInfo": "ent_fins_lakehouse_spark/delta-shim",
+                        }
+                    },
+                    proto_action,
+                    *cdc_actions,
+                    *new_adds,
+                ]
+                self._commit_planned(actions, "delete", base=_planned_at)
+                committed = True
+            finally:
+                if not committed and cdc_future is not None:
+                    try:
+                        staged = cdc_future.result()
+                    except Exception:
+                        staged = []  # staging failed: nothing of it to remove
+                    for act in staged:
+                        try:
+                            os.remove(os.path.join(self.path, act["cdc"]["path"]))
+                        except OSError:
+                            pass
         return {"rows_deleted": rows_deleted, "files_touched": len(new_adds)}
 
     # ------------------------------------------------------ DML (public log)
 
     def _read_with_fp(self):
         """Current snapshot as a DataFrame of LOGICAL columns plus
-        ``_fp`` (normalized absolute data-file path) — the row→file
-        attribution :meth:`update` / :meth:`merge` need to rewrite only
-        touched files. Deletion vectors are applied with the same
-        bounded anti-join as :meth:`read`. Column-mapped tables read
+        ``_fp`` (normalized absolute data-file path) and ``_ri`` (the
+        row's index in that file) — the row→file attribution
+        :meth:`update` / :meth:`merge` need to rewrite only touched
+        files. All files are ONE scan. Deletion vectors whose summed
+        descriptor ``cardinality`` is at most :data:`DV_ISIN_MAX` are
+        decoded on the driver and applied as one literal filter over
+        ``(_fp, _ri)``; larger ones anti-join against the
+        executor-decoded :meth:`_dv_deleted_df`, which keeps driver
+        memory and plan size bounded. Column-mapped tables read
         through the mapping — name mode by physical name, id mode by
         parquet FIELD ID — and the caller stages rewrites back under
         physical names (and field ids) via the returned ``pmap`` /
@@ -4947,7 +4984,13 @@ class DeltaLogTable:
         if not adds:
             empty = self.spark.createDataFrame(
                 [],
-                T.StructType([*schema.fields, T.StructField("_fp", T.StringType())]),
+                T.StructType(
+                    [
+                        *schema.fields,
+                        T.StructField("_fp", T.StringType()),
+                        T.StructField("_ri", T.LongType()),
+                    ]
+                ),
             )
             return empty, adds, schema, part_cols, rel_of, pmap, fid_of
         groups: dict[tuple, list[str]] = {}
@@ -4986,9 +5029,23 @@ class DeltaLogTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        if dv_files:
+        card = sum(int(dv.get("cardinality") or 0) for _, dv in dv_files)
+        if dv_files and card <= self.DV_ISIN_MAX:
+            masked = [
+                (F.col("_fp") == fp) & F.col("_ri").isin(self._dv_row_indexes(dv))
+                for fp, dv in dv_files
+            ]
+            # balanced OR tree: plan depth log2(files), not one level per
+            # file
+            while len(masked) > 1:
+                masked = [
+                    masked[i] | masked[i + 1] if i + 1 < len(masked) else masked[i]
+                    for i in range(0, len(masked), 2)
+                ]
+            out = out.filter(~masked[0])
+        elif dv_files:
             out = out.join(self._dv_deleted_df(dv_files), ["_fp", "_ri"], "left_anti")
-        return out.drop("_ri"), adds, schema, part_cols, rel_of, pmap, fid_of
+        return out, adds, schema, part_cols, rel_of, pmap, fid_of
 
     def _merge_candidate_files(
         self,
@@ -5244,11 +5301,22 @@ class DeltaLogTable:
         accepts a source carrying just the ``on`` columns, the
         delete-feed shape view maintenance produces).
 
-        Physical shape: row→file attribution via the parquet
-        ``_metadata.file_path`` column; only files holding matched keys
-        are rewritten (``remove``+``add`` actions), inserts and updated
-        rows land in new staged files. Joins are Spark-planned — no
-        forced broadcast; AQE picks broadcast when the source is small.
+        Physical shape: two Spark passes over the touched data. The
+        attribution pass joins the key-range-pruned, DV-masked scan
+        (:meth:`_read_with_fp`, rows carry ``_fp``) with the source's
+        per-key row counts and collects, per file, the largest count
+        among its matched keys: the touched-file list and the
+        duplicate-source-key refusal come from one action. The rewrite
+        pass joins the touched files' rows with the source once (full
+        outer when inserts are possible, else left); every clause is a
+        ``when`` over matched / target-only / source-only markers, and
+        with change data feed on, the same joined rows (persisted once)
+        also yield the cdc pre/post-image, delete and insert rows.
+        Touched files are rewritten (``remove``+``add`` actions),
+        untouched ones keep their ``add``. Each matched target row is
+        updated on its own, so duplicate target keys all take the
+        update (delta-spark's semantics). Joins are Spark-planned — AQE
+        picks broadcast when the source is small.
         Returns ``{"files_rewritten"}``.
 
         ``with_schema_evolution=True`` (delta-spark's
@@ -5337,39 +5405,6 @@ class DeltaLogTable:
                 f"merge source schema {source.schema.simpleString()} does not "
                 f"match table schema {schema.simpleString()}"
             )
-        delete_only = matched_delete and not when_not_matched_insert_all
-        # In the full-row shapes the source (Δ feed) is consumed by up
-        # to six downstream plans (dup guard, key distinct, clause
-        # joins, cdc derivations) — persist it once so a non-trivial
-        # feed (a CDF read subtree) is computed exactly once per merge,
-        # and a nondeterministic source cannot diverge between clauses
-        # (delta-spark materializes its merge source for the same two
-        # reasons). A delete-only merge reduces the source to a key
-        # projection whose two consumers are cheap distincts — there a
-        # persist just adds a materialization pass (measured on q374's
-        # delete-only maintenance merges, r14).
-        source = source.select(
-            *(on if delete_only else [f.name for f in schema.fields])
-        )
-        if not delete_only:
-            source = source.persist()
-        if not delete_only:
-            self._enforce_constraints(source, "merge")
-        full = df.drop("_fp")
-        # merge-key data skipping: restrict the scan to files whose
-        # stats ranges can hold a source key. Sound for every clause
-        # here — matched update/delete and the insert anti-join only
-        # need table rows whose keys COULD equal a source key; the
-        # NOT MATCHED BY SOURCE clause must see every file, so it
-        # opts out. `touched`/`kept` below then attribute rows over
-        # the pruned scan instead of the whole table.
-        if not not_matched_by_source_delete:
-            _cand = self._merge_candidate_files(
-                source, on, adds, schema, part_cols, pmap
-            )
-            if _cand is not None and len(_cand) < len(rel_of):
-                df = self._only_files(df, sorted(_cand))
-                full = df.drop("_fp")
         do_update = when_matched_update_all or matched_update is not None
         if matched_delete and do_update:
             raise ValueError(
@@ -5382,261 +5417,187 @@ class DeltaLogTable:
                 raise ValueError(f"UPDATE SET targets unknown columns {sorted(unknown)}")
             if set(matched_update) & set(on):
                 raise ValueError("UPDATE SET cannot reassign MERGE key columns")
-        # the table's distinct key set feeds the dup guard, the
-        # update-all matched-source semi-join, the insert anti-join and
-        # their cdc twins — persist it ONLY when at least two of those
-        # will actually evaluate it, so the pruned table scan + distinct
-        # runs once, not once per consumer; a single-consumer persist
-        # would add a materialization pass for nothing (r14)
-        _cdf = self._cdf_on(_meta)
-        _update_all = do_update and matched_update is None
-        _fk_consumers = (
-            (1 if do_update else 0)  # dup guard
-            + (1 if _update_all else 0)  # matched-source semi-join
-            + (1 if when_not_matched_insert_all else 0)  # insert anti
-            + (1 if _cdf and _update_all else 0)  # cdc postimage semi
-            + (1 if _cdf and when_not_matched_insert_all else 0)  # cdc insert
+        delete_only = matched_delete and not when_not_matched_insert_all
+        # The full-row source (Δ feed) is read by the constraint check,
+        # the key-range pruning, the attribution pass and the rewrite —
+        # persist it so a non-trivial feed (a CDF read subtree) is
+        # computed once and a nondeterministic source cannot diverge
+        # between passes (delta-spark materializes its merge source for
+        # the same two reasons). A delete-only merge's key projection is
+        # cheaper to recompute than to materialize (q374, r14).
+        source = source.select(
+            *(on if delete_only else [f.name for f in schema.fields])
         )
-        full_keys = full.select(*on).distinct()
-        if _fk_consumers >= 2:
-            full_keys = full_keys.persist()
-        keys = source.select(*on).distinct()
-        # The dup guard and the touched-file attribution are
-        # INDEPENDENT jobs over prior state (both must finish before
-        # anything is staged or committed, and the guard still raises
-        # before any file moves) — submit them concurrently (guide
-        # §2.6, r15) instead of paying two serial job waits.
-        dup_f = touched_f = None
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        with _TPE(max_workers=2) as _pool:
-            if do_update:
-                # Delta errors when one target row matches multiple
-                # source rows (nondeterministic update) — same refusal
-                dup_keys = (
-                    source.groupBy(*on)
-                    .agg(F.count(F.lit(1)).alias("_n"))
-                    .filter(F.col("_n") > 1)
-                    .drop("_n")
-                )
-                dup_f = _pool.submit(
-                    lambda: dup_keys.join(full_keys, on=on, how="left_semi")
-                    .limit(1)
-                    .collect()
-                )
-            if not not_matched_by_source_delete:
-                touched_f = _pool.submit(
-                    lambda: sorted(
-                        r["_fp"]
-                        for r in df.join(keys, on=on, how="left_semi")
-                        .select("_fp")
-                        .distinct()
-                        .collect()
-                    )
-                )
-            dup_matched = dup_f.result() if dup_f is not None else []
-            if dup_matched:
-                raise ValueError(
-                    f"MERGE source has multiple rows for key "
-                    f"{dup_matched[0].asDict()} matching the target — "
-                    "dedup the source change feed before merging"
-                )
-            touched = (
-                sorted(rel_of)  # any file may hold unmatched rows
-                if not_matched_by_source_delete
-                else touched_f.result()
+        if not delete_only:
+            source = source.persist()
+            self._enforce_constraints(source, "merge")
+        # merge-key data skipping: restrict the scan to files whose
+        # stats ranges can hold a source key. Sound for every clause but
+        # NOT MATCHED BY SOURCE, which must see every file.
+        if not not_matched_by_source_delete:
+            _cand = self._merge_candidate_files(
+                source, on, adds, schema, part_cols, pmap
             )
-        # touched-file rows feed the kept-rows pass, the clause joins
-        # and their cdc twins — persist when at least two consumers
-        # will evaluate them so the parquet scan (+ DV anti-join) runs
-        # once, not once per consumer. With a single consumer (e.g. a
-        # delete-only merge on a non-CDF table, the MV maintenance
-        # shape) a persist materializes the whole touched-file row set
-        # for nothing — measured 3x on q374's refresh (r14).
-        _tdf_consumers = (
-            1  # kept-rows pass
-            + (1 if do_update and matched_condition else 0)  # upd_keys
-            + (1 if matched_delete and matched_condition else 0)  # del_keys
-            + (1 if matched_update is not None else 0)  # update projection
-            + (
-                (
-                    (2 if matched_update is not None else (1 if do_update else 0))
-                    + (1 if matched_delete else 0)
-                    + (1 if not_matched_by_source_delete else 0)
-                )
-                if _cdf
-                else 0
+            if _cand is not None and len(_cand) < len(rel_of):
+                df = self._only_files(df, sorted(_cand))
+        # Pass 1, attribution: ONE action joins the (pruned, DV-masked)
+        # scan with the source's per-key row counts and returns, per
+        # touched file, the largest count among its matched keys — the
+        # touched-file list AND the duplicate check in one job set.
+        per_file = None
+        if do_update or not not_matched_by_source_delete:
+            per_file = (
+                df.join(source.groupBy(*on).agg(F.count(F.lit(1)).alias("_n")), on=on)
+                .groupBy("_fp")
+                .agg(F.max("_n").alias("_n"))
+                .collect()
             )
-        )
-        tdf = self._only_files(df, touched).drop("_fp") if touched else None
-        if tdf is not None and _tdf_consumers >= 2:
-            tdf = tdf.persist()
-        upd_keys = keys
-        if do_update and matched_condition and tdf is not None:
-            upd_keys = (
-                tdf.alias("t")
-                .join(source.alias("s"), on=on, how="inner")
-                .filter(F.expr(matched_condition))
+        src_dups = per_file is None or any(r["_n"] > 1 for r in per_file)
+        if do_update and src_dups:
+            # Delta errors when one target row matches multiple source
+            # rows (nondeterministic update); name the key
+            dup = (
+                source.groupBy(*on)
+                .count()
+                .filter(F.col("count") > 1)
                 .select(*on)
-                .distinct()
+                .join(df.select(*on), on=on, how="left_semi")
+                .limit(1)
+                .collect()
             )
-        del_keys = keys
-        if matched_delete and matched_condition and tdf is not None:
-            del_keys = (
-                tdf.alias("t")
-                .join(source.alias("s"), on=on, how="inner")
-                .filter(F.expr(matched_condition))
-                .select(*on)
-                .distinct()
-            )
-        parts: list[DataFrame] = []
-        if tdf is not None:
-            if do_update:
-                kept = tdf.join(upd_keys, on=on, how="left_anti")
-            elif matched_delete:
-                kept = tdf.join(del_keys, on=on, how="left_anti")
-            else:
-                kept = tdf
-            if not_matched_by_source_delete:
-                kept_matched = kept.join(keys, on=on, how="left_semi")
-                if not_matched_by_source_condition:
-                    survivors = (
-                        kept.join(keys, on=on, how="left_anti")
-                        .alias("t")
-                        .filter(~F.expr(not_matched_by_source_condition))
-                    )
-                    kept = kept_matched.unionByName(survivors)
-                else:
-                    kept = kept_matched
-            parts.append(kept)
-        if do_update:
-            if matched_update is not None:
-                if tdf is not None:
-                    joined = tdf.alias("t").join(source.alias("s"), on=on, how="inner")
-                    if matched_condition:
-                        joined = joined.filter(F.expr(matched_condition))
-                    parts.append(
-                        joined.select(
-                            *[
-                                F.expr(matched_update[f.name]).cast(f.dataType).alias(f.name)
-                                if f.name in matched_update
-                                else F.col(f"t.{f.name}").alias(f.name)
-                                for f in schema.fields
-                            ]
-                        )
-                    )
-            else:
-                matched_src = source.join(full_keys, on=on, how="left_semi")
-                if matched_condition:
-                    matched_src = matched_src.join(upd_keys, on=on, how="left_semi")
-                parts.append(matched_src)
-        if when_not_matched_insert_all:
-            parts.append(source.join(full_keys, on=on, how="left_anti"))
-        if not parts:
             source.unpersist()
-            full_keys.unpersist()
-            if tdf is not None:
-                tdf.unpersist()
-            return {"files_rewritten": 0}
-        # change data feed: re-derive each clause's row set with the
-        # SAME joins the merge plan uses, labeled per spec —
-        # update_preimage/update_postimage for matched updates, delete
-        # for NOT MATCHED BY SOURCE, insert for not-matched source rows
-        cdc_parts: list[DataFrame] = []
-        if self._cdf_on(_meta):
-            if do_update and tdf is not None:
-                if matched_update is not None:
-                    j = tdf.alias("t").join(source.alias("s"), on=on, how="inner")
-                    if matched_condition:
-                        j = j.filter(F.expr(matched_condition))
-                    # r14 (update()'s rule): one explode-of-structs
-                    # pass emits the pre/post pair per matched row —
-                    # the former two selects over j executed the
-                    # tdf⨝source join twice inside the cdc staging job
-                    # (both inputs are cached, but the join itself is
-                    # not).
-                    cdc_parts.append(
-                        j.select(
-                            F.explode(
-                                F.array(
-                                    F.struct(
-                                        *[
-                                            F.col(f"t.{f.name}").alias(f.name)
-                                            for f in schema.fields
-                                        ],
-                                        F.lit("update_preimage").alias(
-                                            "_change_type"
-                                        ),
-                                    ),
-                                    F.struct(
-                                        *[
-                                            F.expr(matched_update[f.name])
-                                            .cast(f.dataType)
-                                            .alias(f.name)
-                                            if f.name in matched_update
-                                            else F.col(f"t.{f.name}").alias(
-                                                f.name
-                                            )
-                                            for f in schema.fields
-                                        ],
-                                        F.lit("update_postimage").alias(
-                                            "_change_type"
-                                        ),
-                                    ),
-                                )
-                            ).alias("_pair")
-                        ).select("_pair.*")
-                    )
-                else:
-                    cdc_parts.append(
-                        tdf.join(upd_keys, on=on, how="left_semi").withColumn(
-                            "_change_type", F.lit("update_preimage")
-                        )
-                    )
-                    post = source.join(
-                        full_keys, on=on, how="left_semi"
-                    )
-                    if matched_condition:
-                        post = post.join(upd_keys, on=on, how="left_semi")
-                    cdc_parts.append(
-                        post.withColumn("_change_type", F.lit("update_postimage"))
-                    )
-            if matched_delete and tdf is not None:
-                cdc_parts.append(
-                    tdf.join(del_keys, on=on, how="left_semi").withColumn(
-                        "_change_type", F.lit("delete")
-                    )
-                )
-            if not_matched_by_source_delete and tdf is not None:
-                deleted = tdf.join(keys, on=on, how="left_anti")
-                if not_matched_by_source_condition:
-                    deleted = deleted.alias("t").filter(
-                        F.expr(not_matched_by_source_condition)
-                    )
-                cdc_parts.append(
-                    deleted.withColumn("_change_type", F.lit("delete"))
-                )
-            if when_not_matched_insert_all:
-                cdc_parts.append(
-                    source.join(
-                        full_keys, on=on, how="left_anti"
-                    ).withColumn("_change_type", F.lit("insert"))
-                )
-        cdc_df: DataFrame | None = None
-        if cdc_parts:
-            cdc_df = cdc_parts[0]
-            for p in cdc_parts[1:]:
-                cdc_df = cdc_df.unionByName(p)
-        combined = parts[0]
-        for p in parts[1:]:
-            combined = combined.unionByName(p)
-        cdc_actions, new_adds = self._stage_cdc_and_adds(
-            cdc_df, combined, part_cols, pmap, fid_of
+            raise ValueError(
+                f"MERGE source has multiple rows for key "
+                f"{dup[0].asDict()} matching the target — "
+                "dedup the source change feed before merging"
+            )
+        touched = (
+            sorted(rel_of)  # any file may hold unmatched rows
+            if not_matched_by_source_delete
+            else sorted(r["_fp"] for r in per_file)
         )
-        source.unpersist()
-        full_keys.unpersist()
-        if tdf is not None:
-            tdf.unpersist()
+        if not touched and not when_not_matched_insert_all:
+            if not delete_only:
+                source.unpersist()
+            return {"files_rewritten": 0}
+        # Pass 2, rewrite: ONE join of the touched files' rows with the
+        # source (full outer when source-only rows insert, else left);
+        # the markers say matched / target-only / source-only and each
+        # clause is a `when` over them.
+        tdf = self._only_files(df, touched) if touched else df.filter(F.lit(False))
+        if not_matched_by_source_delete and not_matched_by_source_condition:
+            # evaluated over target rows alone, where unqualified names
+            # cannot collide with source columns
+            tdf = tdf.alias("t").withColumn(
+                "_nmbs_hit",
+                F.coalesce(F.expr(not_matched_by_source_condition), F.lit(False)),
+            )
+        j = tdf.withColumn("_in_t", F.lit(True)).alias("t").join(
+            source.withColumn("_in_s", F.lit(True)).alias("s"),
+            on=on,
+            how="full_outer" if when_not_matched_insert_all else "left",
+        )
+        in_t, in_s = F.col("_in_t").isNotNull(), F.col("_in_s").isNotNull()
+        hit = in_t & in_s
+        if matched_condition and (do_update or matched_delete):
+            hit = hit & F.coalesce(F.expr(matched_condition), F.lit(False))
+        upd = hit if do_update else F.lit(False)
+        dele = hit if matched_delete else F.lit(False)
+        if not_matched_by_source_delete:
+            nm = in_t & ~in_s
+            if not_matched_by_source_condition:
+                nm = nm & F.col("_nmbs_hit")
+            dele = dele | nm
+        ins = (~in_t & in_s) if when_not_matched_insert_all else F.lit(False)
+        t_row = in_t
+        if src_dups:
+            # no update clause, so duplicate source keys may match: a
+            # target row then appears once per matching source row —
+            # keep its first copy, deleted if ANY copy says so
+            from pyspark.sql import Window
+
+            w = Window.partitionBy(*on, "_fp", "_ri")
+            t_row = in_t & (F.row_number().over(w.orderBy("_ri")) == 1)
+            dele = F.max(dele.cast("int")).over(w) == 1
+
+        def post(f: T.StructField):
+            c = f.name
+            if c in on:
+                return F.col(c)
+            if matched_update is not None:
+                new = (
+                    F.expr(matched_update[c]).cast(f.dataType)
+                    if c in matched_update
+                    else F.col(f"t.{c}")
+                )
+            else:
+                new = F.col(f"s.{c}") if do_update else None
+            e = F.when(ins, F.col(f"s.{c}")) if when_not_matched_insert_all else None
+            if do_update:
+                e = F.when(upd, new) if e is None else e.when(upd, new)
+            return (F.col(f"t.{c}") if e is None else e.otherwise(F.col(f"t.{c}"))).alias(c)
+
+        cols = [f.name for f in schema.fields]
+        _cdf = self._cdf_on(_meta)
+        flagged = j.select(
+            *[post(f) for f in schema.fields],
+            *(
+                [
+                    (
+                        F.col(c)
+                        if c in on
+                        else F.when(ins, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}"))
+                        if when_not_matched_insert_all
+                        else F.col(f"t.{c}")
+                    ).alias(f"_pre_{c}")
+                    for c in cols
+                ]
+                if _cdf
+                else []
+            ),
+            ((t_row & ~dele) | ins).alias("_keep"),
+            (t_row & upd).alias("_upd"),
+            (t_row & dele).alias("_del"),
+            ins.alias("_ins"),
+        )
+        cdc_df: DataFrame | None = None
+        if _cdf:
+            # change data feed from the same joined rows: a pre-image
+            # (target values, or the source row for an insert) and, for
+            # updates, a post-image, labeled per spec
+            flagged = flagged.persist()
+            kind = (
+                F.when(F.col("_upd"), "update_preimage")
+                .when(F.col("_del"), "delete")
+                .when(F.col("_ins"), "insert")
+            )
+            cdc_df = (
+                flagged.select(
+                    F.explode(
+                        F.array(
+                            F.struct(
+                                *[F.col(f"_pre_{c}").alias(c) for c in cols],
+                                kind.alias("_change_type"),
+                            ),
+                            F.struct(
+                                *[F.col(c) for c in cols],
+                                F.when(F.col("_upd"), "update_postimage").alias(
+                                    "_change_type"
+                                ),
+                            ),
+                        )
+                    ).alias("_c")
+                )
+                .select("_c.*")
+                .filter(F.col("_change_type").isNotNull())
+            )
+        cdc_actions, new_adds = self._stage_cdc_and_adds(
+            cdc_df, flagged.filter("_keep").select(*cols), part_cols, pmap, fid_of
+        )
+        if _cdf:
+            flagged.unpersist()
+        if not delete_only:
+            source.unpersist()
         now = int(time.time() * 1000)
         actions: list[dict] = [
             {

@@ -6366,3 +6366,220 @@ def test_struct_stats_non_orderable_values_fold_to_null(spark, tmp_path):
     assert got["minValues"]["k"] == 1 and got["minValues"]["s"] == "abc"
     assert got["minValues"]["b"] is None
     _json.dumps(got)  # everything left is JSON-serializable
+
+
+# ------------------------------------- Delta DML commit path: job shape
+
+
+def test_delta_merge_update_all_updates_every_duplicate_target_row(spark, tmp_path):
+    """An update-all MERGE updates EVERY matched target row
+    (delta-spark's semantics): two target rows with key 1 both take
+    the source row, they are not collapsed into one. The explicit
+    ``matched_update`` form gives the same rows."""
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    target = spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], "k INT, v STRING")
+    src = spark.createDataFrame([(1, "z"), (3, "n")], "k INT, v STRING")
+    expect = [(1, "z"), (1, "z"), (2, "c"), (3, "n")]
+    for name, kw in (
+        ("all", {}),
+        ("set", {"matched_update": {"v": "s.v"}}),
+    ):
+        dl = DeltaLogTable(spark, str(tmp_path / name))
+        dl.write(target, mode="append")
+        dl.merge(src, on=["k"], **kw)
+        got = sorted((r["k"], r["v"]) for r in dl.read().collect())
+        assert got == expect, (name, got)
+
+
+def test_delta_merge_duplicate_source_keys_without_update_keep_target_rows(spark, tmp_path):
+    """Without an update clause duplicate source keys are legal; each
+    matched target row must still come out once (kept, or deleted
+    when any matching source row satisfies the delete condition)."""
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    target = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k INT, v STRING")
+    src = spark.createDataFrame(
+        [(1, "x"), (1, "y"), (2, "y"), (2, "y"), (4, "n"), (4, "m")], "k INT, v STRING"
+    )
+    dl = DeltaLogTable(spark, str(tmp_path / "ins"))
+    dl.write(target, mode="append")
+    dl.merge(src, on=["k"], when_matched_update_all=False)
+    assert sorted((r["k"], r["v"]) for r in dl.read().collect()) == [
+        (1, "a"), (2, "b"), (3, "c"), (4, "m"), (4, "n")
+    ]
+    dl = DeltaLogTable(spark, str(tmp_path / "del"))
+    dl.write(target, mode="append")
+    dl.merge(
+        src, on=["k"], when_matched_update_all=False, matched_delete=True,
+        matched_condition="s.v = 'x'",
+    )
+    assert sorted((r["k"], r["v"]) for r in dl.read().collect()) == [
+        (2, "b"), (3, "c"), (4, "m"), (4, "n")
+    ]
+
+
+def _jobs_by_group(sc, group):
+    st = sc.statusTracker()
+    return set(st.getJobIdsForGroup(group)), set(st.getJobIdsForGroup(None))
+
+
+def test_delta_checkpoint_snapshot_runs_no_spark_job(spark, tmp_path):
+    """The checkpoint bootstrap is decoded on the driver: replaying a
+    checkpointed log starts no Spark job at all."""
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    td = str(tmp_path / "cp")
+    dl = DeltaLogTable(spark, td)
+    for i in range(3):
+        dl.write(spark.createDataFrame([(i, "x")], "k INT, v STRING"), mode="append")
+    dl.checkpoint()
+    dl.write(spark.createDataFrame([(9, "y")], "k INT, v STRING"), mode="append")
+    sc = spark.sparkContext
+    _, ungrouped0 = _jobs_by_group(sc, None)
+    sc.setJobGroup("snapshot-no-jobs", "checkpoint bootstrap")
+    try:
+        adds, _schema, _parts, _meta = DeltaLogTable(spark, td)._snapshot()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    grouped, ungrouped = _jobs_by_group(sc, "snapshot-no-jobs")
+    assert adds
+    assert grouped == set() and ungrouped == ungrouped0
+
+
+def test_delta_merge_on_dv_table_jobs_stay_in_caller_group(spark, tmp_path, monkeypatch):
+    """A MERGE into a DV-bearing table runs every Spark job inside the
+    caller's job group, and masks small DVs on the driver: the
+    executor-side ``_dv_deleted_df`` anti-join is used only once the
+    summed DV cardinality exceeds ``DV_ISIN_MAX``."""
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    calls = []
+    orig = DeltaLogTable._dv_deleted_df
+
+    def counting(self, dv_files):
+        calls.append(len(dv_files))
+        return orig(self, dv_files)
+
+    monkeypatch.setattr(DeltaLogTable, "_dv_deleted_df", counting)
+    sc = spark.sparkContext
+    rows = [(i, f"v{i}") for i in range(40)]
+    src = spark.createDataFrame([(3, "new3"), (20, "new20"), (50, "n50")], "k INT, v STRING")
+    # k < 5 is deleted through a DV first, so key 3 inserts again
+    expect = sorted(
+        [(k, v) for k, v in rows if k >= 5 and k != 20]
+        + [(3, "new3"), (20, "new20"), (50, "n50")]
+    )
+    for name, isin_max in (("small", DeltaLogTable.DV_ISIN_MAX), ("big", 2)):
+        monkeypatch.setattr(DeltaLogTable, "DV_ISIN_MAX", isin_max)
+        dl = DeltaLogTable(spark, str(tmp_path / name))
+        dl.write(spark.createDataFrame(rows, "k INT, v STRING").coalesce(2), mode="append")
+        dl.delete("k < 5")
+        calls.clear()
+        _, ungrouped0 = _jobs_by_group(sc, None)
+        group = f"merge-dv-{name}"
+        sc.setJobGroup(group, "merge into a DV table")
+        try:
+            dl.merge(src, on=["k"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        grouped, ungrouped = _jobs_by_group(sc, group)
+        assert grouped, "the merge ran no job in the caller's group"
+        assert ungrouped == ungrouped0, "jobs ran outside the caller's group"
+        assert bool(calls) == (name == "big"), (name, calls)
+        got = sorted((r["k"], r["v"]) for r in dl.read().collect())
+        assert got == expect, (name, got)
+
+
+def test_delta_delete_cdc_failure_leaves_no_debris(spark, tmp_path, monkeypatch):
+    """A CDF delete whose bitmap-encode job fails must not leave the
+    concurrently staged ``_change_data/`` files or its staging pool's
+    thread behind."""
+    import threading
+
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    DataFrame = type(spark.range(1))
+    td = str(tmp_path / "cdcfail")
+    dl = DeltaLogTable(spark, td)
+    dl.write(spark.createDataFrame([(i, float(i)) for i in range(20)], "id BIGINT, x DOUBLE"))
+    dl.set_property("delta.enableChangeDataFeed", "true")
+    v0 = dl.latest_version()
+    orig_collect = DataFrame.collect
+
+    def failing_collect(self):
+        if "FlatMapGroupsInPandas" in self._jdf.queryExecution().logical().toString():
+            raise RuntimeError("bitmap encode failed")
+        return orig_collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", failing_collect)
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="bitmap encode failed"):
+        dl.delete("id < 5")
+    monkeypatch.undo()
+    left = [
+        t for t in threading.enumerate()
+        if t not in before and t.name.startswith("ThreadPoolExecutor")
+    ]
+    assert not left, left
+    cdc_dir = os.path.join(td, "_change_data")
+    debris = [
+        f for _, _, fs in os.walk(cdc_dir) for f in fs if f.endswith(".parquet")
+    ]
+    assert debris == []
+    assert dl.latest_version() == v0
+    assert dl.read().count() == 20
+
+
+@pytest.mark.parametrize("shape", ["single", "parts3", "v2"])
+def test_delta_checkpoint_decode_matches_json_replay(spark, tmp_path, shape):
+    """The driver-side checkpoint decode yields exactly the snapshot a
+    JSON-only replay of the same log yields: adds (stats strings,
+    partition values, DVs, row ids), metaData, protocol and txns."""
+    import glob as _glob
+    import shutil
+
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    td = str(tmp_path / "t")
+    dl = DeltaLogTable(spark, td)
+    rows = [(i, f"p{i % 3}", float(i), f"s{i}") for i in range(30)]
+    dl.write(
+        spark.createDataFrame(rows, "id BIGINT, p STRING, x DOUBLE, s STRING"),
+        partition_by=["p"],
+        txn=("app-a", 3),
+    )
+    dl.set_property("delta.enableChangeDataFeed", "true")
+    if shape == "v2":
+        dl.set_property("delta.checkpointPolicy", "v2")
+    dl.enable_row_tracking()
+    dl.delete("id < 4")
+    dl.merge(
+        spark.createDataFrame([(7, "p1", 70.0, "u7"), (99, "p0", 9.9, "n")], "id BIGINT, p STRING, x DOUBLE, s STRING"),
+        on=["id"],
+    )
+    dl.write(
+        spark.createDataFrame([(100, "p2", 1.0, "a")], "id BIGINT, p STRING, x DOUBLE, s STRING"),
+        txn=("app-b", 7),
+    )
+    dl.checkpoint(parts=3 if shape == "parts3" else None)
+    dl.write(
+        spark.createDataFrame([(101, "p0", 2.0, "b")], "id BIGINT, p STRING, x DOUBLE, s STRING"),
+        txn=("app-a", 4),
+    )
+    json_only = str(tmp_path / "json_only")
+    os.makedirs(os.path.join(json_only, "_delta_log"))
+    for f in _glob.glob(os.path.join(td, "_delta_log", "*.json")):
+        shutil.copy(f, os.path.join(json_only, "_delta_log"))
+
+    a, b = DeltaLogTable(spark, td), DeltaLogTable(spark, json_only)
+    assert a._checkpoint() is not None and b._checkpoint() is None
+    adds_a, schema_a, parts_a, meta_a = a._snapshot()
+    adds_b, schema_b, parts_b, meta_b = b._snapshot()
+    assert any(i["deletionVector"] for i in adds_a.values())
+    assert any(i["baseRowId"] is not None for i in adds_a.values())
+    assert adds_a == adds_b
+    assert (schema_a, parts_a, meta_a) == (schema_b, parts_b, meta_b)
+    assert a._last_protocol == b._last_protocol
+    assert a._last_txns == b._last_txns == {"app-a": 4, "app-b": 7}
+    assert a._last_domains == b._last_domains
