@@ -1041,6 +1041,25 @@ def test_delta_small_dv_stays_literal_isin(spark, tmp_path):
     assert out.count() == 90
 
 
+def test_in_row_indexes_keeps_exactly_listed_rows(spark):
+    """The one-expression row-index filter keeps exactly the listed
+    rows, for an empty list, INT and BIGINT literals (present and
+    absent), and a DV_ISIN_MAX-sized list."""
+    from ent_fins_lakehouse_spark.sources.lakehouse import (
+        DeltaLogTable,
+        _in_row_indexes,
+    )
+
+    vals = [i * 1000003 for i in range(9000)]  # crosses 2**31
+    df = spark.range(0, 9000).selectExpr("id * 1000003 AS _ri")
+    big = vals[::2][: DeltaLogTable.DV_ISIN_MAX]
+    for idxs in ([], [0, 3000009, 5], [2**31 + 7, vals[-1]], big):
+        want = sorted(set(idxs) & set(vals))
+        got = df.filter(_in_row_indexes("_ri", idxs)).orderBy("_ri").collect()
+        assert [r["_ri"] for r in got] == want
+        assert df.filter(~_in_row_indexes("_ri", idxs)).count() == 9000 - len(want)
+
+
 # --------------------------------------------------------------- iceberg
 
 
