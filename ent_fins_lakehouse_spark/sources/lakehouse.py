@@ -1581,10 +1581,15 @@ def _in_row_indexes(col: str, idxs) -> F.Column:
     deletion vector cost ~6 s of driver time before any job ran). The
     parsed ``In`` is the same expression, so the plan and the result
     are unchanged."""
+    return F.expr(_in_row_indexes_sql(col, idxs))
+
+
+def _in_row_indexes_sql(col: str, idxs) -> str:
+    """SQL text of :func:`_in_row_indexes`."""
     idxs = [int(i) for i in idxs]
     if not idxs:
-        return F.lit(False)
-    return F.expr(f"`{col}` IN ({','.join(map(str, idxs))})")
+        return "false"
+    return f"`{col}` IN ({','.join(map(str, idxs))})"
 
 
 def _assign_identity(df: DataFrame, name: str, spec: dict) -> DataFrame:
@@ -2071,20 +2076,48 @@ class DeltaLogTable:
         (driver-side convenience over :func:`_dv_row_indexes_of`)."""
         return _dv_row_indexes_of(self.path, dv)
 
-    #: DVs at or below this cardinality are applied as a literal
-    #: ``isin`` filter — cheap, joins nothing. Above it the indexes are
-    #: decoded ON THE EXECUTORS and anti-joined: a production DV can
-    #: mask 10^7+ rows of a large file (DVs exist precisely to avoid
-    #: rewriting big files), and a multi-million-literal ``In``
-    #: expression is a driver-memory and plan-size bomb.
+    #: DVs whose summed cardinality is at most this are decoded on the
+    #: driver and applied as one literal filter (:meth:`_mask_dvs`) —
+    #: cheap, joins nothing. Above it the indexes are decoded ON THE
+    #: EXECUTORS and anti-joined: a production DV can mask 10^7+ rows
+    #: of a large file (DVs exist precisely to avoid rewriting big
+    #: files), and a multi-million-literal ``In`` expression is a
+    #: driver-memory and plan-size bomb.
     DV_ISIN_MAX = 4096
 
-    #: …and at most this many files may take the isin path in one read:
-    #: each isin file is its own scan branch in the union, so the
-    #: branch count — not just the literal count — must stay bounded
-    #: (32 small-DV files = a 32-branch plan; the anti-join path scans
-    #: them all in ONE multi-path branch).
-    DV_ISIN_MAX_FILES = 4
+    #: …and at most this many DV-bearing files may take the literal
+    #: filter: each file is one ``_fp`` comparison every scanned row
+    #: evaluates and one DV blob the driver reads, so the file count —
+    #: not just the literal count — must stay bounded. Measured on a
+    #: 4-core host (one masked row per file): the filter scanned 33 DV
+    #: files in 0.74 s against the anti-join's 3.0 s and 53 in 1.1 s
+    #: against 3.1 s; at 166 files its generated code outgrew the JVM's
+    #: 64 KB method limit and Spark fell back to interpreting it.
+    DV_ISIN_MAX_FILES = 32
+
+    def _mask_dvs(self, df: DataFrame, dv_files: list[tuple[str, dict]]) -> DataFrame:
+        """Drop the rows of ``df`` (carrying ``_fp``/``_ri``) that the
+        given files' deletion vectors mask — the one place every
+        snapshot scan chooses how. Within :data:`DV_ISIN_MAX_FILES`
+        files and :data:`DV_ISIN_MAX` summed descriptor cardinality the
+        bitmaps are decoded on the driver into ONE SQL filter
+        ``NOT ((_fp = f1 AND _ri IN (…)) OR …)`` (one Py4J call however
+        many files or rows); above either bound the rows anti-join
+        against the executor-decoded :meth:`_dv_deleted_df`, which keeps
+        driver memory and plan size bounded."""
+        if not dv_files:
+            return df
+        card = sum(int(dv.get("cardinality") or 0) for _, dv in dv_files)
+        if len(dv_files) > self.DV_ISIN_MAX_FILES or card > self.DV_ISIN_MAX:
+            return df.join(self._dv_deleted_df(dv_files), ["_fp", "_ri"], "left_anti")
+        # the path goes in as a hex BINARY literal cast to STRING: no
+        # quoting rule (nor the escapedStringLiterals setting) applies
+        terms = [
+            f"(`_fp` = CAST(X'{fp.encode('utf-8').hex()}' AS STRING) AND "
+            f"{_in_row_indexes_sql('_ri', self._dv_row_indexes(dv))})"
+            for fp, dv in dv_files
+        ]
+        return df.filter(F.expr(f"NOT ({' OR '.join(terms)})"))
 
     def _dv_deleted_df(self, dv_files: list[tuple[str, dict]]) -> DataFrame:
         """``(_fp, _ri)`` rows for every row masked by the given files'
@@ -2613,88 +2646,60 @@ class DeltaLogTable:
                 df = df.withColumn(c, F.lit(pv.get(pmap[c])).cast(types[c]))
             return df.select(*[f.name for f in schema.fields])
 
-        # group plain files by partition tuple for bulk multi-path
-        # scans. DV-bearing files route on the PLAN-AGGREGATE cost (no
-        # decode needed to choose): the literal-isin fast path is used
-        # only when the DVs are few files AND few total rows — its cost
-        # is one scan branch per file plus one literal per deleted row,
-        # so 32 files × 2k rows each is a 64k-literal 32-branch plan
-        # even though every file is individually "small" (the round-6
-        # interop octave probe measured exactly that: 39 s of plan
-        # time at 1x). Beyond the aggregate budget, ALL DV-bearing
-        # files are scanned together with the parquet file-path /
-        # row-index metadata columns and applied as ONE distributed
-        # left-anti join against executor-decoded (_fp, _ri) rows —
-        # plan size and driver memory stay bounded no matter how many
-        # rows the bitmaps mask (a production DV can cover 10^7+ rows
-        # of one file) or how many files carry one.
-        dv_adds = {
-            p: info for p, info in adds.items() if info["deletionVector"]
-        }
-        total_dv_card = sum(
-            int(info["deletionVector"].get("cardinality") or 0)
-            for info in dv_adds.values()
-        )
-        use_isin = (
-            len(dv_adds) <= self.DV_ISIN_MAX_FILES and total_dv_card <= self.DV_ISIN_MAX
-        )
+        # group files by partition tuple for bulk multi-path scans.
+        # DV-bearing files are scanned in groups of their own that carry
+        # the parquet file-path / row-index metadata columns, and
+        # _mask_dvs drops the masked rows — a driver-built literal
+        # filter for few small vectors, a distributed anti-join against
+        # executor-decoded (_fp, _ri) rows otherwise, so plan size and
+        # driver memory stay bounded however many rows the bitmaps mask
+        # (a production DV can cover 10^7+ rows of one file) or however
+        # many files carry one. Plain files skip the metadata columns.
         groups: dict[tuple, list[str]] = {}
         pv_of: dict[tuple, dict] = {}
-        dv_parts: list[DataFrame] = []
-        big_groups: dict[tuple, list[str]] = {}
-        big_pv: dict[tuple, dict] = {}
-        big_dvs: list[tuple[str, dict]] = []
+        dv_groups: dict[tuple, list[str]] = {}
+        dv_pv: dict[tuple, dict] = {}
+        dv_files: list[tuple[str, dict]] = []
         for p, info in sorted(adds.items()):
             full = os.path.join(self.path, p)
             pv = info["partitionValues"]
-            dv = info["deletionVector"]
-            if dv and not use_isin:
-                key = tuple(pv.get(pmap[c]) for c in part_cols)
-                big_groups.setdefault(key, []).append(full)
-                big_pv[key] = pv
-                big_dvs.append((os.path.abspath(full), dv))
-            elif dv:
-                deleted = self._dv_row_indexes(dv)
-                df = (
-                    self.spark.read.schema(phys)
-                    .parquet(full)
-                    .select("*", F.col("_metadata.row_index").alias("_dv_ri"))
-                    .filter(~_in_row_indexes("_dv_ri", deleted))
-                )
-                df = logical(df)
-                dv_parts.append(attach_parts(df, pv) if part_cols else df)
+            key = tuple(pv.get(pmap[c]) for c in part_cols)
+            if info["deletionVector"]:
+                dv_groups.setdefault(key, []).append(full)
+                dv_pv[key] = pv
+                dv_files.append((os.path.abspath(full), info["deletionVector"]))
             else:
-                key = tuple(pv.get(pmap[c]) for c in part_cols)
                 groups.setdefault(key, []).append(full)
                 pv_of[key] = pv
-        if big_groups:
+        dv_parts: list[DataFrame] = []
+        if dv_groups:
             norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
+            lsel = (
+                [F.col(f.name) for f in data_fields]
+                if mode == "id"
+                else [F.col(pmap[f.name]).alias(f.name) for f in data_fields]
+            )
             bparts = []
             for key in sorted(
-                big_groups, key=lambda k: tuple("" if v is None else str(v) for v in k)
+                dv_groups, key=lambda k: tuple("" if v is None else str(v) for v in k)
             ):
-                lsel = (
-                    [F.col(f.name) for f in data_fields]
-                    if mode == "id"
-                    else [F.col(pmap[f.name]).alias(f.name) for f in data_fields]
-                )
                 df = (
                     self.spark.read.schema(phys)
-                    .parquet(*sorted(big_groups[key]))
+                    .parquet(*sorted(dv_groups[key]))
                     .select(
                         *lsel,
                         norm(F.col("_metadata.file_path")).alias("_fp"),
                         F.col("_metadata.row_index").alias("_ri"),
                     )
                 )
-                bpv = big_pv[key]
+                bpv = dv_pv[key]
                 for c in part_cols:
                     df = df.withColumn(c, F.lit(bpv.get(pmap[c])).cast(types[c]))
                 bparts.append(df)
             big = bparts[0]
             for b in bparts[1:]:
                 big = big.unionByName(b)
-            big = big.join(self._dv_deleted_df(big_dvs), ["_fp", "_ri"], "left_anti")
+            big = self._mask_dvs(big, dv_files)
             dv_parts.append(big.select(*[f.name for f in schema.fields]))
         parts = []
         for key in sorted(groups, key=lambda k: tuple("" if v is None else str(v) for v in k)):
@@ -4937,15 +4942,33 @@ class DeltaLogTable:
             finally:
                 if not committed and cdc_future is not None:
                     try:
-                        staged = cdc_future.result()
+                        staged = {a["cdc"]["path"] for a in cdc_future.result()}
                     except Exception:
-                        staged = []  # staging failed: nothing of it to remove
-                    for act in staged:
-                        try:
-                            os.remove(os.path.join(self.path, act["cdc"]["path"]))
-                        except OSError:
-                            pass
+                        staged = set()  # staging failed: nothing of it to remove
+                    # _commit_planned can raise AFTER the log entry is
+                    # durable (the auto-checkpoint, the checksum file):
+                    # files a published commit references must stay
+                    if staged and not self._log_references_cdc(staged, _planned_at):
+                        for rel in staged:
+                            try:
+                                os.remove(os.path.join(self.path, rel))
+                            except OSError:
+                                pass
         return {"rows_deleted": rows_deleted, "files_touched": len(new_adds)}
+
+    def _log_references_cdc(self, paths: set[str], since: int) -> bool:
+        """Whether a log version after ``since`` references one of the
+        cdc ``paths`` — i.e. whether a commit that raised did publish
+        its log entry before the error."""
+        for v, log in self._json_versions().items():
+            if v <= since:
+                continue
+            with open(log, encoding="utf-8") as fh:
+                for ln in fh:
+                    cdc = json.loads(ln).get("cdc") if ln.strip() else None
+                    if cdc is not None and cdc.get("path") in paths:
+                        return True
+        return False
 
     # ------------------------------------------------------ DML (public log)
 
@@ -4954,12 +4977,10 @@ class DeltaLogTable:
         ``_fp`` (normalized absolute data-file path) and ``_ri`` (the
         row's index in that file) — the row→file attribution
         :meth:`update` / :meth:`merge` need to rewrite only touched
-        files. All files are ONE scan. Deletion vectors whose summed
-        descriptor ``cardinality`` is at most :data:`DV_ISIN_MAX` are
-        decoded on the driver and applied as one literal filter over
-        ``(_fp, _ri)``; larger ones anti-join against the
-        executor-decoded :meth:`_dv_deleted_df`, which keeps driver
-        memory and plan size bounded. Column-mapped tables read
+        files. All files are ONE scan, and :meth:`_mask_dvs` drops the
+        rows their deletion vectors mask (a driver-built literal filter
+        over ``(_fp, _ri)`` for few, small vectors, else the
+        executor-decoded anti-join). Column-mapped tables read
         through the mapping — name mode by physical name, id mode by
         parquet FIELD ID — and the caller stages rewrites back under
         physical names (and field ids) via the returned ``pmap`` /
@@ -5047,22 +5068,7 @@ class DeltaLogTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        card = sum(int(dv.get("cardinality") or 0) for _, dv in dv_files)
-        if dv_files and card <= self.DV_ISIN_MAX:
-            masked = [
-                (F.col("_fp") == fp) & _in_row_indexes("_ri", self._dv_row_indexes(dv))
-                for fp, dv in dv_files
-            ]
-            # balanced OR tree: plan depth log2(files), not one level per
-            # file
-            while len(masked) > 1:
-                masked = [
-                    masked[i] | masked[i + 1] if i + 1 < len(masked) else masked[i]
-                    for i in range(0, len(masked), 2)
-                ]
-            out = out.filter(~masked[0])
-        elif dv_files:
-            out = out.join(self._dv_deleted_df(dv_files), ["_fp", "_ri"], "left_anti")
+        out = self._mask_dvs(out, dv_files)
         return out, adds, schema, part_cols, rel_of, pmap, fid_of
 
     def _merge_candidate_files(
@@ -5446,176 +5452,178 @@ class DeltaLogTable:
         source = source.select(
             *(on if delete_only else [f.name for f in schema.fields])
         )
+        persisted: list[DataFrame] = []
         if not delete_only:
             source = source.persist()
-            self._enforce_constraints(source, "merge")
-        # merge-key data skipping: restrict the scan to files whose
-        # stats ranges can hold a source key. Sound for every clause but
-        # NOT MATCHED BY SOURCE, which must see every file.
-        if not not_matched_by_source_delete:
-            _cand = self._merge_candidate_files(
-                source, on, adds, schema, part_cols, pmap
-            )
-            if _cand is not None and len(_cand) < len(rel_of):
-                df = self._only_files(df, sorted(_cand))
-        # Pass 1, attribution: ONE action joins the (pruned, DV-masked)
-        # scan with the source's per-key row counts and returns, per
-        # touched file, the largest count among its matched keys — the
-        # touched-file list AND the duplicate check in one job set.
-        per_file = None
-        if do_update or not not_matched_by_source_delete:
-            per_file = (
-                df.join(source.groupBy(*on).agg(F.count(F.lit(1)).alias("_n")), on=on)
-                .groupBy("_fp")
-                .agg(F.max("_n").alias("_n"))
-                .collect()
-            )
-        src_dups = per_file is None or any(r["_n"] > 1 for r in per_file)
-        if do_update and src_dups:
-            # Delta errors when one target row matches multiple source
-            # rows (nondeterministic update); name the key
-            dup = (
-                source.groupBy(*on)
-                .count()
-                .filter(F.col("count") > 1)
-                .select(*on)
-                .join(df.select(*on), on=on, how="left_semi")
-                .limit(1)
-                .collect()
-            )
-            source.unpersist()
-            raise ValueError(
-                f"MERGE source has multiple rows for key "
-                f"{dup[0].asDict()} matching the target — "
-                "dedup the source change feed before merging"
-            )
-        touched = (
-            sorted(rel_of)  # any file may hold unmatched rows
-            if not_matched_by_source_delete
-            else sorted(r["_fp"] for r in per_file)
-        )
-        if not touched and not when_not_matched_insert_all:
+            persisted.append(source)
+        try:
             if not delete_only:
-                source.unpersist()
-            return {"files_rewritten": 0}
-        # Pass 2, rewrite: ONE join of the touched files' rows with the
-        # source (full outer when source-only rows insert, else left);
-        # the markers say matched / target-only / source-only and each
-        # clause is a `when` over them.
-        tdf = self._only_files(df, touched) if touched else df.filter(F.lit(False))
-        if not_matched_by_source_delete and not_matched_by_source_condition:
-            # evaluated over target rows alone, where unqualified names
-            # cannot collide with source columns
-            tdf = tdf.alias("t").withColumn(
-                "_nmbs_hit",
-                F.coalesce(F.expr(not_matched_by_source_condition), F.lit(False)),
-            )
-        j = tdf.withColumn("_in_t", F.lit(True)).alias("t").join(
-            source.withColumn("_in_s", F.lit(True)).alias("s"),
-            on=on,
-            how="full_outer" if when_not_matched_insert_all else "left",
-        )
-        in_t, in_s = F.col("_in_t").isNotNull(), F.col("_in_s").isNotNull()
-        hit = in_t & in_s
-        if matched_condition and (do_update or matched_delete):
-            hit = hit & F.coalesce(F.expr(matched_condition), F.lit(False))
-        upd = hit if do_update else F.lit(False)
-        dele = hit if matched_delete else F.lit(False)
-        if not_matched_by_source_delete:
-            nm = in_t & ~in_s
-            if not_matched_by_source_condition:
-                nm = nm & F.col("_nmbs_hit")
-            dele = dele | nm
-        ins = (~in_t & in_s) if when_not_matched_insert_all else F.lit(False)
-        t_row = in_t
-        if src_dups:
-            # no update clause, so duplicate source keys may match: a
-            # target row then appears once per matching source row —
-            # keep its first copy, deleted if ANY copy says so
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*on, "_fp", "_ri")
-            t_row = in_t & (F.row_number().over(w.orderBy("_ri")) == 1)
-            dele = F.max(dele.cast("int")).over(w) == 1
-
-        def post(f: T.StructField):
-            c = f.name
-            if c in on:
-                return F.col(c)
-            if matched_update is not None:
-                new = (
-                    F.expr(matched_update[c]).cast(f.dataType)
-                    if c in matched_update
-                    else F.col(f"t.{c}")
+                self._enforce_constraints(source, "merge")
+            # merge-key data skipping: restrict the scan to files whose
+            # stats ranges can hold a source key. Sound for every clause but
+            # NOT MATCHED BY SOURCE, which must see every file.
+            if not not_matched_by_source_delete:
+                _cand = self._merge_candidate_files(
+                    source, on, adds, schema, part_cols, pmap
                 )
-            else:
-                new = F.col(f"s.{c}") if do_update else None
-            e = F.when(ins, F.col(f"s.{c}")) if when_not_matched_insert_all else None
-            if do_update:
-                e = F.when(upd, new) if e is None else e.when(upd, new)
-            return (F.col(f"t.{c}") if e is None else e.otherwise(F.col(f"t.{c}"))).alias(c)
+                if _cand is not None and len(_cand) < len(rel_of):
+                    df = self._only_files(df, sorted(_cand))
+            # Pass 1, attribution: ONE action joins the (pruned, DV-masked)
+            # scan with the source's per-key row counts and returns, per
+            # touched file, the largest count among its matched keys — the
+            # touched-file list AND the duplicate check in one job set.
+            per_file = None
+            if do_update or not not_matched_by_source_delete:
+                per_file = (
+                    df.join(source.groupBy(*on).agg(F.count(F.lit(1)).alias("_n")), on=on)
+                    .groupBy("_fp")
+                    .agg(F.max("_n").alias("_n"))
+                    .collect()
+                )
+            src_dups = per_file is None or any(r["_n"] > 1 for r in per_file)
+            if do_update and src_dups:
+                # Delta errors when one target row matches multiple source
+                # rows (nondeterministic update); name the key
+                dup = (
+                    source.groupBy(*on)
+                    .count()
+                    .filter(F.col("count") > 1)
+                    .select(*on)
+                    .join(df.select(*on), on=on, how="left_semi")
+                    .limit(1)
+                    .collect()
+                )
+                raise ValueError(
+                    f"MERGE source has multiple rows for key "
+                    f"{dup[0].asDict()} matching the target — "
+                    "dedup the source change feed before merging"
+                )
+            touched = (
+                sorted(rel_of)  # any file may hold unmatched rows
+                if not_matched_by_source_delete
+                else sorted(r["_fp"] for r in per_file)
+            )
+            if not touched and not when_not_matched_insert_all:
+                return {"files_rewritten": 0}
+            # Pass 2, rewrite: ONE join of the touched files' rows with the
+            # source (full outer when source-only rows insert, else left);
+            # the markers say matched / target-only / source-only and each
+            # clause is a `when` over them.
+            tdf = self._only_files(df, touched) if touched else df.filter(F.lit(False))
+            if not_matched_by_source_delete and not_matched_by_source_condition:
+                # evaluated over target rows alone, where unqualified names
+                # cannot collide with source columns
+                tdf = tdf.alias("t").withColumn(
+                    "_nmbs_hit",
+                    F.coalesce(F.expr(not_matched_by_source_condition), F.lit(False)),
+                )
+            j = tdf.withColumn("_in_t", F.lit(True)).alias("t").join(
+                source.withColumn("_in_s", F.lit(True)).alias("s"),
+                on=on,
+                how="full_outer" if when_not_matched_insert_all else "left",
+            )
+            in_t, in_s = F.col("_in_t").isNotNull(), F.col("_in_s").isNotNull()
+            hit = in_t & in_s
+            if matched_condition and (do_update or matched_delete):
+                hit = hit & F.coalesce(F.expr(matched_condition), F.lit(False))
+            upd = hit if do_update else F.lit(False)
+            dele = hit if matched_delete else F.lit(False)
+            if not_matched_by_source_delete:
+                nm = in_t & ~in_s
+                if not_matched_by_source_condition:
+                    nm = nm & F.col("_nmbs_hit")
+                dele = dele | nm
+            ins = (~in_t & in_s) if when_not_matched_insert_all else F.lit(False)
+            t_row = in_t
+            if src_dups:
+                # no update clause, so duplicate source keys may match: a
+                # target row then appears once per matching source row —
+                # keep its first copy, deleted if ANY copy says so
+                from pyspark.sql import Window
 
-        cols = [f.name for f in schema.fields]
-        _cdf = self._cdf_on(_meta)
-        flagged = j.select(
-            *[post(f) for f in schema.fields],
-            *(
-                [
-                    (
-                        F.col(c)
-                        if c in on
-                        else F.when(ins, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}"))
-                        if when_not_matched_insert_all
+                w = Window.partitionBy(*on, "_fp", "_ri")
+                t_row = in_t & (F.row_number().over(w.orderBy("_ri")) == 1)
+                dele = F.max(dele.cast("int")).over(w) == 1
+
+            def post(f: T.StructField):
+                c = f.name
+                if c in on:
+                    return F.col(c)
+                if matched_update is not None:
+                    new = (
+                        F.expr(matched_update[c]).cast(f.dataType)
+                        if c in matched_update
                         else F.col(f"t.{c}")
-                    ).alias(f"_pre_{c}")
-                    for c in cols
-                ]
-                if _cdf
-                else []
-            ),
-            ((t_row & ~dele) | ins).alias("_keep"),
-            (t_row & upd).alias("_upd"),
-            (t_row & dele).alias("_del"),
-            ins.alias("_ins"),
-        )
-        cdc_df: DataFrame | None = None
-        if _cdf:
-            # change data feed from the same joined rows: a pre-image
-            # (target values, or the source row for an insert) and, for
-            # updates, a post-image, labeled per spec
-            flagged = flagged.persist()
-            kind = (
-                F.when(F.col("_upd"), "update_preimage")
-                .when(F.col("_del"), "delete")
-                .when(F.col("_ins"), "insert")
+                    )
+                else:
+                    new = F.col(f"s.{c}") if do_update else None
+                e = F.when(ins, F.col(f"s.{c}")) if when_not_matched_insert_all else None
+                if do_update:
+                    e = F.when(upd, new) if e is None else e.when(upd, new)
+                return (F.col(f"t.{c}") if e is None else e.otherwise(F.col(f"t.{c}"))).alias(c)
+
+            cols = [f.name for f in schema.fields]
+            _cdf = self._cdf_on(_meta)
+            flagged = j.select(
+                *[post(f) for f in schema.fields],
+                *(
+                    [
+                        (
+                            F.col(c)
+                            if c in on
+                            else F.when(ins, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}"))
+                            if when_not_matched_insert_all
+                            else F.col(f"t.{c}")
+                        ).alias(f"_pre_{c}")
+                        for c in cols
+                    ]
+                    if _cdf
+                    else []
+                ),
+                ((t_row & ~dele) | ins).alias("_keep"),
+                (t_row & upd).alias("_upd"),
+                (t_row & dele).alias("_del"),
+                ins.alias("_ins"),
             )
-            cdc_df = (
-                flagged.select(
-                    F.explode(
-                        F.array(
-                            F.struct(
-                                *[F.col(f"_pre_{c}").alias(c) for c in cols],
-                                kind.alias("_change_type"),
-                            ),
-                            F.struct(
-                                *[F.col(c) for c in cols],
-                                F.when(F.col("_upd"), "update_postimage").alias(
-                                    "_change_type"
-                                ),
-                            ),
-                        )
-                    ).alias("_c")
+            cdc_df: DataFrame | None = None
+            if _cdf:
+                # change data feed from the same joined rows: a pre-image
+                # (target values, or the source row for an insert) and, for
+                # updates, a post-image, labeled per spec
+                flagged = flagged.persist()
+                persisted.append(flagged)
+                kind = (
+                    F.when(F.col("_upd"), "update_preimage")
+                    .when(F.col("_del"), "delete")
+                    .when(F.col("_ins"), "insert")
                 )
-                .select("_c.*")
-                .filter(F.col("_change_type").isNotNull())
+                cdc_df = (
+                    flagged.select(
+                        F.explode(
+                            F.array(
+                                F.struct(
+                                    *[F.col(f"_pre_{c}").alias(c) for c in cols],
+                                    kind.alias("_change_type"),
+                                ),
+                                F.struct(
+                                    *[F.col(c) for c in cols],
+                                    F.when(F.col("_upd"), "update_postimage").alias(
+                                        "_change_type"
+                                    ),
+                                ),
+                            )
+                        ).alias("_c")
+                    )
+                    .select("_c.*")
+                    .filter(F.col("_change_type").isNotNull())
+                )
+            cdc_actions, new_adds = self._stage_cdc_and_adds(
+                cdc_df, flagged.filter("_keep").select(*cols), part_cols, pmap, fid_of
             )
-        cdc_actions, new_adds = self._stage_cdc_and_adds(
-            cdc_df, flagged.filter("_keep").select(*cols), part_cols, pmap, fid_of
-        )
-        if _cdf:
-            flagged.unpersist()
-        if not delete_only:
-            source.unpersist()
+        finally:
+            # released on every path, a refusal or a failed stage too
+            for d in persisted:
+                d.unpersist()
         now = int(time.time() * 1000)
         actions: list[dict] = [
             {
@@ -6295,8 +6303,7 @@ class DeltaLogTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        if dv_files:
-            out = out.join(self._dv_deleted_df(dv_files), ["_fp", "_ri"], "left_anti")
+        out = self._mask_dvs(out, dv_files)
         rid_map = self.spark.createDataFrame(
             rid_rows, "_fp string, _rt_base long, _rt_dcv long"
         )
@@ -6803,10 +6810,7 @@ class DeltaLogTable:
         packed = parts[0]
         for df in parts[1:]:
             packed = packed.unionByName(df)
-        if dv_files:
-            packed = packed.join(
-                self._dv_deleted_df(dv_files), ["_fp", "_ri"], "left_anti"
-            )
+        packed = self._mask_dvs(packed, dv_files)
         n_out = max(
             1,
             math.ceil(
@@ -6933,9 +6937,7 @@ class DeltaLogTable:
         for df in parts[1:]:
             clean = clean.unionByName(df)
         clean = (
-            clean.join(
-                self._dv_deleted_df(dv_files), ["_fp", "_ri"], "left_anti"
-            )
+            self._mask_dvs(clean, dv_files)
             .drop("_fp", "_ri")
             .select(*[f.name for f in schema.fields])
         )

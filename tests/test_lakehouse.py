@@ -6470,7 +6470,8 @@ def test_delta_merge_on_dv_table_jobs_stay_in_caller_group(spark, tmp_path, monk
     """A MERGE into a DV-bearing table runs every Spark job inside the
     caller's job group, and masks small DVs on the driver: the
     executor-side ``_dv_deleted_df`` anti-join is used only once the
-    summed DV cardinality exceeds ``DV_ISIN_MAX``."""
+    summed DV cardinality exceeds ``DV_ISIN_MAX`` or the DV-bearing
+    files outnumber ``DV_ISIN_MAX_FILES``."""
     from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
 
     calls = []
@@ -6489,8 +6490,13 @@ def test_delta_merge_on_dv_table_jobs_stay_in_caller_group(spark, tmp_path, monk
         [(k, v) for k, v in rows if k >= 5 and k != 20]
         + [(3, "new3"), (20, "new20"), (50, "n50")]
     )
-    for name, isin_max in (("small", DeltaLogTable.DV_ISIN_MAX), ("big", 2)):
+    for name, isin_max, max_files in (
+        ("small", DeltaLogTable.DV_ISIN_MAX, DeltaLogTable.DV_ISIN_MAX_FILES),
+        ("big", 2, DeltaLogTable.DV_ISIN_MAX_FILES),
+        ("files", DeltaLogTable.DV_ISIN_MAX, 0),
+    ):
         monkeypatch.setattr(DeltaLogTable, "DV_ISIN_MAX", isin_max)
+        monkeypatch.setattr(DeltaLogTable, "DV_ISIN_MAX_FILES", max_files)
         dl = DeltaLogTable(spark, str(tmp_path / name))
         dl.write(spark.createDataFrame(rows, "k INT, v STRING").coalesce(2), mode="append")
         dl.delete("k < 5")
@@ -6505,7 +6511,7 @@ def test_delta_merge_on_dv_table_jobs_stay_in_caller_group(spark, tmp_path, monk
         grouped, ungrouped = _jobs_by_group(sc, group)
         assert grouped, "the merge ran no job in the caller's group"
         assert ungrouped == ungrouped0, "jobs ran outside the caller's group"
-        assert bool(calls) == (name == "big"), (name, calls)
+        assert bool(calls) == (name != "small"), (name, calls)
         got = sorted((r["k"], r["v"]) for r in dl.read().collect())
         assert got == expect, (name, got)
 
@@ -6548,6 +6554,85 @@ def test_delta_delete_cdc_failure_leaves_no_debris(spark, tmp_path, monkeypatch)
     assert debris == []
     assert dl.latest_version() == v0
     assert dl.read().count() == 20
+
+
+def test_delta_delete_keeps_cdc_files_when_checkpoint_fails_after_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A CDF delete whose log entry is published but whose
+    auto-checkpoint then raises has committed: the ``_change_data/``
+    files the commit references must survive, so the version's change
+    feed stays readable."""
+    import json
+
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    td = str(tmp_path / "cdccp")
+    dl = DeltaLogTable(spark, td)
+    dl.write(spark.createDataFrame([(i, float(i)) for i in range(20)], "id BIGINT, x DOUBLE"))
+    dl.set_property("delta.enableChangeDataFeed", "true")
+    v = dl.latest_version() + 1
+    dl.CHECKPOINT_INTERVAL = v + 1  # the delete's commit is a checkpoint version
+
+    def failing_checkpoint(self, version=None, parts=None):
+        raise RuntimeError("checkpoint failed")
+
+    monkeypatch.setattr(DeltaLogTable, "checkpoint", failing_checkpoint)
+    with pytest.raises(RuntimeError, match="checkpoint failed"):
+        dl.delete("id < 5")
+    monkeypatch.undo()
+    assert dl.latest_version() == v
+    with open(os.path.join(td, "_delta_log", f"{v:020d}.json")) as fh:
+        cdc = [a["cdc"]["path"] for a in map(json.loads, fh) if "cdc" in a]
+    assert cdc
+    assert all(os.path.isfile(os.path.join(td, p)) for p in cdc), cdc
+    feed = dl.read_changes(v, v).collect()
+    assert sorted(r["id"] for r in feed if r["_change_type"] == "delete") == [0, 1, 2, 3, 4]
+    assert dl.read().count() == 15
+
+
+def test_delta_merge_releases_persisted_frames_on_failure(spark, tmp_path, monkeypatch):
+    """A MERGE that raises — the duplicate-source-key refusal, or a
+    failed staging write on a CDF table — leaves no persisted
+    DataFrame behind."""
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    jsc = spark.sparkContext._jsc
+    dl = DeltaLogTable(spark, str(tmp_path / "m"))
+    dl.write(spark.createDataFrame([(i, f"v{i}") for i in range(10)], "k INT, v STRING"))
+    dl.set_property("delta.enableChangeDataFeed", "true")
+    n0 = jsc.getPersistentRDDs().size()
+    dup = spark.createDataFrame([(1, "a"), (1, "b")], "k INT, v STRING")
+    with pytest.raises(ValueError, match="multiple rows"):
+        dl.merge(dup, on=["k"])
+    assert jsc.getPersistentRDDs().size() == n0
+
+    def failing_stage(self, *args, **kwargs):
+        raise RuntimeError("stage failed")
+
+    monkeypatch.setattr(DeltaLogTable, "_stage_cdc_and_adds", failing_stage)
+    with pytest.raises(RuntimeError, match="stage failed"):
+        dl.merge(spark.createDataFrame([(1, "u"), (50, "n")], "k INT, v STRING"), on=["k"])
+    assert jsc.getPersistentRDDs().size() == n0
+
+
+def test_delta_small_dv_mask_with_quote_in_path(spark, tmp_path):
+    """The driver-built DV filter carries file paths as SQL literals; a
+    quote in the table path must not break it (read and MERGE)."""
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    dl = DeltaLogTable(spark, str(tmp_path / "it's"))
+    dl.write(
+        spark.createDataFrame([(i, f"v{i}") for i in range(30)], "k INT, v STRING").coalesce(3),
+        mode="append",
+    )
+    dl.delete("k % 10 = 0")
+    out = dl.read()
+    assert "LeftAnti" not in out._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(r["k"] for r in out.collect()) == [k for k in range(30) if k % 10]
+    dl.merge(spark.createDataFrame([(1, "u1"), (10, "n10")], "k INT, v STRING"), on=["k"])
+    got = dict((r["k"], r["v"]) for r in dl.read().collect())
+    assert got[1] == "u1" and got[10] == "n10" and 20 not in got and len(got) == 28
 
 
 @pytest.mark.parametrize("shape", ["single", "parts3", "v2"])
