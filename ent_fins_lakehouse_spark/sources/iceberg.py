@@ -4124,228 +4124,309 @@ class IcebergTable:
         _src_consumers = (2 if do_update else 0) + 1 + (
             1 if when_not_matched_insert_all else 0
         )
-        if _src_consumers >= 2:
-            source = source.persist()
-            _cached.append(source)
-
-        def _release() -> None:
-            for _c in _cached:
-                _c.unpersist()
-        # v3 row lineage: updated rows KEEP the target row's _row_id
-        # (one id across a row's versions — lineage's point) with this
-        # commit's sequence as _last_updated_sequence_number; CoW
-        # survivors keep both; inserts carry nulls and inherit fresh
-        # ids from their file's (over-allocated) first_row_id.
-        lineage = "next-row-id" in meta
-        lin_cols = ["_row_id", "_last_updated_sequence_number"] if lineage else []
-        new_seq = int(meta.get("last-sequence-number") or 0) + 1
-        scan_schema = self._lineage_ext_schema(schema) if lineage else schema
-        target = self._scan_with_pos(scan_schema, cand, pos_deletes, eq_deletes, seq_of)
-        if lineage:
-            target = self._lineage_scan_cols(target, seq_of, self._first_row_ids())
-        tkeys = target.select(*on).distinct()
-        # each tkeys consumer re-runs the TARGET scan (candidate files
-        # + delete anti-joins) — persist when ≥2 consume it
-        _tkeys_consumers = (
-            (1 if do_update else 0)
-            + (1 if do_update and not matched_condition else 0)
-            + (1 if when_not_matched_insert_all else 0)
-        )
-        if _tkeys_consumers >= 2:
-            tkeys = tkeys.persist()
-            _cached.append(tkeys)
-        if do_update:
-            # one target row matching multiple source rows is a
-            # nondeterministic update — refuse, as Delta does
-            dup_keys = (
-                source.groupBy(*on)
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .filter(F.col("_n") > 1)
-                .drop("_n")
+        try:
+            if _src_consumers >= 2:
+                source = source.persist()
+                _cached.append(source)
+            # v3 row lineage: updated rows KEEP the target row's _row_id
+            # (one id across a row's versions — lineage's point) with this
+            # commit's sequence as _last_updated_sequence_number; CoW
+            # survivors keep both; inserts carry nulls and inherit fresh
+            # ids from their file's (over-allocated) first_row_id.
+            lineage = "next-row-id" in meta
+            lin_cols = ["_row_id", "_last_updated_sequence_number"] if lineage else []
+            new_seq = int(meta.get("last-sequence-number") or 0) + 1
+            scan_schema = self._lineage_ext_schema(schema) if lineage else schema
+            target = self._scan_with_pos(scan_schema, cand, pos_deletes, eq_deletes, seq_of)
+            if lineage:
+                target = self._lineage_scan_cols(target, seq_of, self._first_row_ids())
+            tkeys = target.select(*on).distinct()
+            # each tkeys consumer re-runs the TARGET scan (candidate files
+            # + delete anti-joins) — persist when ≥2 consume it
+            _tkeys_consumers = (
+                (1 if do_update else 0)
+                + (1 if do_update and not matched_condition else 0)
+                + (1 if when_not_matched_insert_all else 0)
             )
-            dup_matched = dup_keys.join(tkeys, on=on, how="left_semi").limit(1).collect()
-            if dup_matched:
-                raise ValueError(
-                    f"MERGE source has multiple rows for key "
-                    f"{dup_matched[0].asDict()} matching the target — "
-                    "dedup the source change feed before merging"
-                )
-        keys = source.select(*on).distinct()
-        # keys that actually match a target row (and the matched
-        # condition, when given) — the update clause applies to these
-        upd_keys = keys.join(tkeys, on=on, how="left_semi")
-        if do_update and matched_condition:
-            upd_keys = (
-                target.drop("file_path", "pos")
-                .alias("t")
-                .join(source.alias("s"), on=on, how="inner")
-                .filter(F.expr(matched_condition))
-                .select(*on)
-                .distinct()
-            )
-        # upd_keys gates the update-delete pass, the updated-rows
-        # clause, and (with lineage) the row-id carryover — each a
-        # separate job re-running its target-semi-join subtree
-        _upd_consumers = (
-            (1 if do_update else 0)
-            + (1 if do_update and matched_update is None else 0)
-            + (1 if do_update and lineage and matched_update is None else 0)
-        )
-        if _upd_consumers >= 2:
-            upd_keys = upd_keys.persist()
-            _cached.append(upd_keys)
-        del_parts: list[DataFrame] = []
-        n_upd_del = 0
-        if do_update:
-            del_parts.append(target.join(upd_keys, on=on, how="left_semi"))
-        if not_matched_by_source_delete:
-            # only target columns are in scope; alias as "t" so the
-            # condition may use either bare or t.-prefixed names
-            nm = target.alias("t").join(keys, on=on, how="left_anti")
-            if not_matched_by_source_condition:
-                nm = nm.filter(F.expr(not_matched_by_source_condition))
-            del_parts.append(nm.select(target.columns))
-        def _new_parts_for(seq_: int) -> list[DataFrame]:
-            # lineage stamps the commit SEQUENCE into the updated rows'
-            # data files, so a rebase retry rebuilds these frames under
-            # the new sequence (see update()'s twin)
-            new_parts: list[DataFrame] = []
+            if _tkeys_consumers >= 2:
+                tkeys = tkeys.persist()
+                _cached.append(tkeys)
             if do_update:
-                if matched_update is None:
-                    # WHEN MATCHED THEN UPDATE SET * — the new row IS the
-                    # source row (source keys are unique among matched)
-                    part = source.join(upd_keys, on=on, how="left_semi")
-                    if lineage:
-                        # multi-target-row matches collapse to one updated
-                        # row — it inherits the smallest matched _row_id
-                        tgt_ids = (
-                            target.join(upd_keys, on=on, how="left_semi")
-                            .groupBy(*on)
-                            .agg(F.min("_row_id").alias("_row_id"))
-                        )
-                        part = part.join(tgt_ids, on=on, how="left").withColumn(
-                            "_last_updated_sequence_number",
-                            F.lit(seq_).cast("long"),
-                        )
-                    new_parts.append(part.select(*cols, *lin_cols))
-                else:
-                    joined = (
-                        target.drop("file_path", "pos")
-                        .alias("t")
-                        .join(source.alias("s"), on=on, how="inner")
-                    )
-                    if matched_condition:
-                        joined = joined.filter(F.expr(matched_condition))
-                    new_parts.append(
-                        joined.select(
-                            *[
-                                (
-                                    F.col(c)
-                                    if c in on
-                                    else (
-                                        F.expr(matched_update[c]).cast(want[c])
-                                        if c in matched_update
-                                        else F.col(f"t.{c}")
-                                    )
-                                ).alias(c)
-                                for c in cols
-                            ],
-                            *(
-                                [
-                                    F.col("t._row_id").alias("_row_id"),
-                                    F.lit(seq_)
-                                    .cast("long")
-                                    .alias("_last_updated_sequence_number"),
-                                ]
-                                if lineage
-                                else []
-                            ),
-                        )
-                    )
-            if when_not_matched_insert_all:
-                ins = source.join(tkeys, on=on, how="left_anti")
-                if lineage:
-                    ins = ins.withColumn(
-                        "_row_id", F.lit(None).cast("long")
-                    ).withColumn(
-                        "_last_updated_sequence_number", F.lit(None).cast("long")
-                    )
-                new_parts.append(ins)
-            return new_parts
-
-        new_parts = _new_parts_for(new_seq)
-
-        now = int(time.time() * 1000)
-        seq = int(meta.get("last-sequence-number") or 0) + 1
-        snaps = list(meta.get("snapshots") or [])
-        snap_id = max((s["snapshot-id"] for s in snaps), default=0) + 1
-        if mode == "cow":
-            # copy-on-write: every file holding a to-be-removed row
-            # version is rewritten (its untouched rows + the updated
-            # rows + the inserts land as new data files); no
-            # position-delete manifest, so reads pay zero anti-join
-            part_counts = [
-                p.select(F.count(F.lit(1))).first()[0] for p in del_parts
-            ]
-            n_deleted = sum(part_counts)
-            n_upd_del = part_counts[0] if do_update and del_parts else 0
-            affected: set[str] = set()
-            survivors = None
-            if del_parts:
-                del_df = del_parts[0].select("file_path", "pos")
-                for p in del_parts[1:]:
-                    del_df = del_df.unionByName(p.select("file_path", "pos"))
-                affected = {
-                    r["file_path"]
-                    for r in del_df.select("file_path").distinct().collect()
-                }
-                if affected:
-                    surv = self._scan_with_pos(
-                        scan_schema, sorted(affected), pos_deletes, eq_deletes, seq_of
-                    )
-                    if lineage:
-                        surv = self._lineage_scan_cols(
-                            surv,
-                            {p: seq_of[p] for p in sorted(affected)},
-                            self._first_row_ids(),
-                        )
-                    survivors = surv.join(
-                        del_df, ["file_path", "pos"], "left_anti"
-                    ).select(*cols, *lin_cols)
-            n_inserted = 0
-            if when_not_matched_insert_all:
-                # the insert clause's rows, counted directly (the other
-                # counts are change-set sized jobs already paid above)
-                n_inserted = (
-                    new_parts[-1].select(F.count(F.lit(1))).first()[0]
+                # one target row matching multiple source rows is a
+                # nondeterministic update — refuse, as Delta does
+                dup_keys = (
+                    source.groupBy(*on)
+                    .agg(F.count(F.lit(1)).alias("_n"))
+                    .filter(F.col("_n") > 1)
+                    .drop("_n")
                 )
-            def _new_df_for(seq_: int) -> DataFrame | None:
-                new_df = None
-                for p in (
-                    [survivors] if survivors is not None else []
-                ) + _new_parts_for(seq_):
-                    p = p.select(*cols, *lin_cols)
-                    new_df = p if new_df is None else new_df.unionByName(p)
-                return new_df
-
-            part_fields = self.partition_fields(meta)
-            names_by_id = self.field_names_by_id(meta)
-            spec_cols = [names_by_id[pf["source-id"]] for pf in part_fields]
-            ice_schema = self._ice_schema(meta)
-            first_df = _new_df_for(seq)
-            data_entries = (
-                self._stage_data_entries(
-                    first_df.select(*cols, *lin_cols),
-                    ice_schema,
-                    part_fields,
-                    spec_cols,
-                    snap_id,
+                dup_matched = dup_keys.join(tkeys, on=on, how="left_semi").limit(1).collect()
+                if dup_matched:
+                    raise ValueError(
+                        f"MERGE source has multiple rows for key "
+                        f"{dup_matched[0].asDict()} matching the target — "
+                        "dedup the source change feed before merging"
+                    )
+            keys = source.select(*on).distinct()
+            # keys that actually match a target row (and the matched
+            # condition, when given) — the update clause applies to these
+            upd_keys = keys.join(tkeys, on=on, how="left_semi")
+            if do_update and matched_condition:
+                upd_keys = (
+                    target.drop("file_path", "pos")
+                    .alias("t")
+                    .join(source.alias("s"), on=on, how="inner")
+                    .filter(F.expr(matched_condition))
+                    .select(*on)
+                    .distinct()
                 )
-                if first_df is not None
-                else []
+            # upd_keys gates the update-delete pass, the updated-rows
+            # clause, and (with lineage) the row-id carryover — each a
+            # separate job re-running its target-semi-join subtree
+            _upd_consumers = (
+                (1 if do_update else 0)
+                + (1 if do_update and matched_update is None else 0)
+                + (1 if do_update and lineage and matched_update is None else 0)
             )
-            if not affected and not data_entries:
-                _release()
+            if _upd_consumers >= 2:
+                upd_keys = upd_keys.persist()
+                _cached.append(upd_keys)
+            del_parts: list[DataFrame] = []
+            n_upd_del = 0
+            if do_update:
+                del_parts.append(target.join(upd_keys, on=on, how="left_semi"))
+            if not_matched_by_source_delete:
+                # only target columns are in scope; alias as "t" so the
+                # condition may use either bare or t.-prefixed names
+                nm = target.alias("t").join(keys, on=on, how="left_anti")
+                if not_matched_by_source_condition:
+                    nm = nm.filter(F.expr(not_matched_by_source_condition))
+                del_parts.append(nm.select(target.columns))
+            def _new_parts_for(seq_: int) -> list[DataFrame]:
+                # lineage stamps the commit SEQUENCE into the updated rows'
+                # data files, so a rebase retry rebuilds these frames under
+                # the new sequence (see update()'s twin)
+                new_parts: list[DataFrame] = []
+                if do_update:
+                    if matched_update is None:
+                        # WHEN MATCHED THEN UPDATE SET * — the new row IS the
+                        # source row (source keys are unique among matched)
+                        part = source.join(upd_keys, on=on, how="left_semi")
+                        if lineage:
+                            # multi-target-row matches collapse to one updated
+                            # row — it inherits the smallest matched _row_id
+                            tgt_ids = (
+                                target.join(upd_keys, on=on, how="left_semi")
+                                .groupBy(*on)
+                                .agg(F.min("_row_id").alias("_row_id"))
+                            )
+                            part = part.join(tgt_ids, on=on, how="left").withColumn(
+                                "_last_updated_sequence_number",
+                                F.lit(seq_).cast("long"),
+                            )
+                        new_parts.append(part.select(*cols, *lin_cols))
+                    else:
+                        joined = (
+                            target.drop("file_path", "pos")
+                            .alias("t")
+                            .join(source.alias("s"), on=on, how="inner")
+                        )
+                        if matched_condition:
+                            joined = joined.filter(F.expr(matched_condition))
+                        new_parts.append(
+                            joined.select(
+                                *[
+                                    (
+                                        F.col(c)
+                                        if c in on
+                                        else (
+                                            F.expr(matched_update[c]).cast(want[c])
+                                            if c in matched_update
+                                            else F.col(f"t.{c}")
+                                        )
+                                    ).alias(c)
+                                    for c in cols
+                                ],
+                                *(
+                                    [
+                                        F.col("t._row_id").alias("_row_id"),
+                                        F.lit(seq_)
+                                        .cast("long")
+                                        .alias("_last_updated_sequence_number"),
+                                    ]
+                                    if lineage
+                                    else []
+                                ),
+                            )
+                        )
+                if when_not_matched_insert_all:
+                    ins = source.join(tkeys, on=on, how="left_anti")
+                    if lineage:
+                        ins = ins.withColumn(
+                            "_row_id", F.lit(None).cast("long")
+                        ).withColumn(
+                            "_last_updated_sequence_number", F.lit(None).cast("long")
+                        )
+                    new_parts.append(ins)
+                return new_parts
+
+            new_parts = _new_parts_for(new_seq)
+
+            now = int(time.time() * 1000)
+            seq = int(meta.get("last-sequence-number") or 0) + 1
+            snaps = list(meta.get("snapshots") or [])
+            snap_id = max((s["snapshot-id"] for s in snaps), default=0) + 1
+            if mode == "cow":
+                # copy-on-write: every file holding a to-be-removed row
+                # version is rewritten (its untouched rows + the updated
+                # rows + the inserts land as new data files); no
+                # position-delete manifest, so reads pay zero anti-join
+                part_counts = [
+                    p.select(F.count(F.lit(1))).first()[0] for p in del_parts
+                ]
+                n_deleted = sum(part_counts)
+                n_upd_del = part_counts[0] if do_update and del_parts else 0
+                affected: set[str] = set()
+                survivors = None
+                if del_parts:
+                    del_df = del_parts[0].select("file_path", "pos")
+                    for p in del_parts[1:]:
+                        del_df = del_df.unionByName(p.select("file_path", "pos"))
+                    affected = {
+                        r["file_path"]
+                        for r in del_df.select("file_path").distinct().collect()
+                    }
+                    if affected:
+                        surv = self._scan_with_pos(
+                            scan_schema, sorted(affected), pos_deletes, eq_deletes, seq_of
+                        )
+                        if lineage:
+                            surv = self._lineage_scan_cols(
+                                surv,
+                                {p: seq_of[p] for p in sorted(affected)},
+                                self._first_row_ids(),
+                            )
+                        survivors = surv.join(
+                            del_df, ["file_path", "pos"], "left_anti"
+                        ).select(*cols, *lin_cols)
+                n_inserted = 0
+                if when_not_matched_insert_all:
+                    # the insert clause's rows, counted directly (the other
+                    # counts are change-set sized jobs already paid above)
+                    n_inserted = (
+                        new_parts[-1].select(F.count(F.lit(1))).first()[0]
+                    )
+                def _new_df_for(seq_: int) -> DataFrame | None:
+                    new_df = None
+                    for p in (
+                        [survivors] if survivors is not None else []
+                    ) + _new_parts_for(seq_):
+                        p = p.select(*cols, *lin_cols)
+                        new_df = p if new_df is None else new_df.unionByName(p)
+                    return new_df
+
+                part_fields = self.partition_fields(meta)
+                names_by_id = self.field_names_by_id(meta)
+                spec_cols = [names_by_id[pf["source-id"]] for pf in part_fields]
+                ice_schema = self._ice_schema(meta)
+                first_df = _new_df_for(seq)
+                data_entries = (
+                    self._stage_data_entries(
+                        first_df.select(*cols, *lin_cols),
+                        ice_schema,
+                        part_fields,
+                        spec_cols,
+                        snap_id,
+                    )
+                    if first_df is not None
+                    else []
+                )
+                if not affected and not data_entries:
+                    return {
+                        "rows_updated": 0,
+                        "rows_inserted": 0,
+                        "rows_deleted": 0,
+                        "snapshot_id": meta.get("current-snapshot-id"),
+                    }
+                for attempt in range(max(0, retries) + 1):
+                    rows = self._rewrite_prior_rows_excluding(meta, snaps, affected, snap_id)
+                    if data_entries:
+                        am = os.path.join(self.meta_dir, f"manifest-{_uuid.uuid4().hex}.avro")
+                        write_ocf(
+                            am, self._manifest_schema(part_fields, ice_schema), data_entries
+                        )
+                        rows.append(
+                            {
+                                "manifest_path": am,
+                                "manifest_length": os.path.getsize(am),
+                                "partition_spec_id": 0,
+                                "content": 0,
+                                "sequence_number": seq,
+                                "added_snapshot_id": snap_id,
+                            }
+                        )
+                    try:
+                        self._commit_snapshot(
+                            meta, snaps, snap_id, seq, rows, "overwrite", now,
+                            summary_extra={"mode": "copy-on-write"},
+                        )
+                        break
+                    except RuntimeError:
+                        if attempt == max(0, retries):
+                            raise
+                        meta, snaps, seq, snap_id = self._rebase_over_appends(
+                            meta, "copy-on-write merge"
+                        )
+                        if lineage and data_entries:
+                            # files embed the planned sequence — re-stage
+                            data_entries = self._stage_data_entries(
+                                _new_df_for(seq).select(*cols, *lin_cols),
+                                ice_schema,
+                                part_fields,
+                                spec_cols,
+                                snap_id,
+                            )
+                        else:
+                            for e in data_entries:
+                                e["snapshot_id"] = snap_id
+                return {
+                    "rows_updated": n_upd_del,
+                    "rows_inserted": n_inserted,
+                    "rows_deleted": max(0, n_deleted - n_upd_del),
+                    "snapshot_id": snap_id,
+                }
+            n_deleted = 0
+            # stage update-deletes and not-matched-by-source-deletes as
+            # SEPARATE jobs: each part's row count then comes from the
+            # staged file footers — no extra count() scan over the target
+            del_entries: list[dict] = []
+            part_counts: list[int] = []
+            for p in del_parts:
+                e, n, _ = self._stage_pos_delete_entries(p, len(cand), snap_id)
+                del_entries.extend(e)
+                part_counts.append(n)
+                n_deleted += n
+            if do_update and del_parts:
+                n_upd_del = part_counts[0]
+            part_fields = self.partition_fields(meta)
+            names = self.field_names_by_id(meta)
+            spec_cols = [names[pf["source-id"]] for pf in part_fields]
+            ice_schema = self._ice_schema(meta)
+
+            def _stage_new(seq_: int, snap_id_: int) -> list[dict]:
+                parts_ = _new_parts_for(seq_)
+                if not parts_:
+                    return []
+                new_df = parts_[0]
+                for p in parts_[1:]:
+                    new_df = new_df.unionByName(p)
+                return self._stage_data_entries(
+                    new_df, ice_schema, part_fields, spec_cols, snap_id_
+                )
+
+            data_entries = _stage_new(seq, snap_id) if new_parts else []
+            n_written = sum(e["data_file"]["record_count"] for e in data_entries)
+            if not del_entries and not data_entries:
                 return {
                     "rows_updated": 0,
                     "rows_inserted": 0,
@@ -4353,13 +4434,11 @@ class IcebergTable:
                     "snapshot_id": meta.get("current-snapshot-id"),
                 }
             for attempt in range(max(0, retries) + 1):
-                rows = self._rewrite_prior_rows_excluding(meta, snaps, affected, snap_id)
+                list_rows = self._prior_manifest_rows(meta, snaps)
                 if data_entries:
                     am = os.path.join(self.meta_dir, f"manifest-{_uuid.uuid4().hex}.avro")
-                    write_ocf(
-                        am, self._manifest_schema(part_fields, ice_schema), data_entries
-                    )
-                    rows.append(
+                    write_ocf(am, self._manifest_schema(part_fields, ice_schema), data_entries)
+                    list_rows.append(
                         {
                             "manifest_path": am,
                             "manifest_length": os.path.getsize(am),
@@ -4369,126 +4448,45 @@ class IcebergTable:
                             "added_snapshot_id": snap_id,
                         }
                     )
-                try:
-                    self._commit_snapshot(
-                        meta, snaps, snap_id, seq, rows, "overwrite", now,
-                        summary_extra={"mode": "copy-on-write"},
+                if del_entries:
+                    dm = os.path.join(self.meta_dir, f"manifest-{_uuid.uuid4().hex}.avro")
+                    write_ocf(dm, self._MANIFEST_SCHEMA, del_entries)
+                    list_rows.append(
+                        {
+                            "manifest_path": dm,
+                            "manifest_length": os.path.getsize(dm),
+                            "partition_spec_id": 0,
+                            "content": 1,
+                            "sequence_number": seq,
+                            "added_snapshot_id": snap_id,
+                        }
                     )
+                try:
+                    self._commit_snapshot(meta, snaps, snap_id, seq, list_rows, "overwrite", now)
                     break
                 except RuntimeError:
                     if attempt == max(0, retries):
                         raise
-                    meta, snaps, seq, snap_id = self._rebase_over_appends(
-                        meta, "copy-on-write merge"
-                    )
+                    meta, snaps, seq, snap_id = self._rebase_over_appends(meta, "merge")
+                    for e in del_entries:
+                        e["snapshot_id"] = snap_id
                     if lineage and data_entries:
-                        # files embed the planned sequence — re-stage
-                        data_entries = self._stage_data_entries(
-                            _new_df_for(seq).select(*cols, *lin_cols),
-                            ice_schema,
-                            part_fields,
-                            spec_cols,
-                            snap_id,
-                        )
+                        # updated rows embed the planned sequence — re-stage
+                        data_entries = _stage_new(seq, snap_id)
                     else:
                         for e in data_entries:
                             e["snapshot_id"] = snap_id
-            _release()
             return {
                 "rows_updated": n_upd_del,
-                "rows_inserted": n_inserted,
+                "rows_inserted": max(0, n_written - n_upd_del),
                 "rows_deleted": max(0, n_deleted - n_upd_del),
                 "snapshot_id": snap_id,
             }
-        n_deleted = 0
-        # stage update-deletes and not-matched-by-source-deletes as
-        # SEPARATE jobs: each part's row count then comes from the
-        # staged file footers — no extra count() scan over the target
-        del_entries: list[dict] = []
-        part_counts: list[int] = []
-        for p in del_parts:
-            e, n, _ = self._stage_pos_delete_entries(p, len(cand), snap_id)
-            del_entries.extend(e)
-            part_counts.append(n)
-            n_deleted += n
-        if do_update and del_parts:
-            n_upd_del = part_counts[0]
-        part_fields = self.partition_fields(meta)
-        names = self.field_names_by_id(meta)
-        spec_cols = [names[pf["source-id"]] for pf in part_fields]
-        ice_schema = self._ice_schema(meta)
-
-        def _stage_new(seq_: int, snap_id_: int) -> list[dict]:
-            parts_ = _new_parts_for(seq_)
-            if not parts_:
-                return []
-            new_df = parts_[0]
-            for p in parts_[1:]:
-                new_df = new_df.unionByName(p)
-            return self._stage_data_entries(
-                new_df, ice_schema, part_fields, spec_cols, snap_id_
-            )
-
-        data_entries = _stage_new(seq, snap_id) if new_parts else []
-        n_written = sum(e["data_file"]["record_count"] for e in data_entries)
-        if not del_entries and not data_entries:
-            _release()
-            return {
-                "rows_updated": 0,
-                "rows_inserted": 0,
-                "rows_deleted": 0,
-                "snapshot_id": meta.get("current-snapshot-id"),
-            }
-        for attempt in range(max(0, retries) + 1):
-            list_rows = self._prior_manifest_rows(meta, snaps)
-            if data_entries:
-                am = os.path.join(self.meta_dir, f"manifest-{_uuid.uuid4().hex}.avro")
-                write_ocf(am, self._manifest_schema(part_fields, ice_schema), data_entries)
-                list_rows.append(
-                    {
-                        "manifest_path": am,
-                        "manifest_length": os.path.getsize(am),
-                        "partition_spec_id": 0,
-                        "content": 0,
-                        "sequence_number": seq,
-                        "added_snapshot_id": snap_id,
-                    }
-                )
-            if del_entries:
-                dm = os.path.join(self.meta_dir, f"manifest-{_uuid.uuid4().hex}.avro")
-                write_ocf(dm, self._MANIFEST_SCHEMA, del_entries)
-                list_rows.append(
-                    {
-                        "manifest_path": dm,
-                        "manifest_length": os.path.getsize(dm),
-                        "partition_spec_id": 0,
-                        "content": 1,
-                        "sequence_number": seq,
-                        "added_snapshot_id": snap_id,
-                    }
-                )
-            try:
-                self._commit_snapshot(meta, snaps, snap_id, seq, list_rows, "overwrite", now)
-                break
-            except RuntimeError:
-                if attempt == max(0, retries):
-                    raise
-                meta, snaps, seq, snap_id = self._rebase_over_appends(meta, "merge")
-                for e in del_entries:
-                    e["snapshot_id"] = snap_id
-                if lineage and data_entries:
-                    # updated rows embed the planned sequence — re-stage
-                    data_entries = _stage_new(seq, snap_id)
-                else:
-                    for e in data_entries:
-                        e["snapshot_id"] = snap_id
-        _release()
-        return {
-            "rows_updated": n_upd_del,
-            "rows_inserted": max(0, n_written - n_upd_del),
-            "rows_deleted": max(0, n_deleted - n_upd_del),
-            "snapshot_id": snap_id,
-        }
+        finally:
+            # every path releases the persisted frames, a raise included
+            # (duplicate-key refusal, exhausted retries, a failed stage)
+            for _c in _cached:
+                _c.unpersist()
 
     def read_changes(self, from_snapshot: int, to_snapshot: int | None = None) -> DataFrame:
         """Incremental read — rows that changed in snapshots

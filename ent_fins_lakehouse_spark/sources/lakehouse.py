@@ -757,7 +757,12 @@ class LakeTable:
             return {"dirs_rewritten": 0, "rows_deleted": 0}
         _, schema = self._snapshot()
         paths = [os.path.join(self.path, rel) for rel in touched]
-        remaining = self.spark.read.schema(schema).parquet(*paths).filter(~pred)
+        # a row whose predicate is NULL is not deleted (SQL DELETE)
+        remaining = (
+            self.spark.read.schema(schema)
+            .parquet(*paths)
+            .filter(~F.coalesce(pred, F.lit(False)))
+        )
         n_before = self.spark.read.schema(schema).parquet(*paths).count()
         rel = self._write_data_dir(remaining)
         n_after = remaining.count()
@@ -945,7 +950,10 @@ class LakeTable:
                     survivors = (
                         kept.join(F.broadcast(keys), on=on, how="left_anti")
                         .alias("t")
-                        .filter(~F.expr(not_matched_by_source_condition))
+                        # a NULL condition does not delete the row
+                        .filter(
+                            ~F.coalesce(F.expr(not_matched_by_source_condition), F.lit(False))
+                        )
                     )
                     kept = kept_matched.unionByName(survivors)
                 else:
@@ -1581,15 +1589,44 @@ def _in_row_indexes(col: str, idxs) -> F.Column:
     deletion vector cost ~6 s of driver time before any job ran). The
     parsed ``In`` is the same expression, so the plan and the result
     are unchanged."""
-    return F.expr(_in_row_indexes_sql(col, idxs))
+    return F.expr(_in_row_indexes_sql(_sql_name(col), idxs))
 
 
-def _in_row_indexes_sql(col: str, idxs) -> str:
-    """SQL text of :func:`_in_row_indexes`."""
+def _in_row_indexes_sql(ri: str, idxs) -> str:
+    """SQL text of :func:`_in_row_indexes` over the row-index SQL
+    expression ``ri``."""
     idxs = [int(i) for i in idxs]
     if not idxs:
         return "false"
-    return f"`{col}` IN ({','.join(map(str, idxs))})"
+    return f"{ri} IN ({','.join(map(str, idxs))})"
+
+
+def _sql_name(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a SQL STRING literal: a hex BINARY literal cast to
+    STRING, so no quoting rule (nor the escapedStringLiterals setting)
+    applies to paths or partition values."""
+    return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
+
+
+#: A scanned row's data-file path as the driver keys files
+#: (``os.path.abspath``), as SQL over a parquet relation.
+#: ``_metadata.file_path`` is a percent-encoded ``file:`` URI
+#: (``…/a%20b/…``); a literal ``+`` stays as it is there, so it is
+#: escaped before ``url_decode``, which reads ``+`` as a space.
+_FP_SQL = (
+    "url_decode(replace(regexp_replace(_metadata.file_path, '^file:/+', '/'), "
+    "'+', '%2B'))"
+)
+
+
+def _pv_order(key: tuple) -> tuple:
+    """Sort key of a partition-value tuple (NULL sorts as '')."""
+    return tuple("" if v is None else str(v) for v in key)
 
 
 def _assign_identity(df: DataFrame, name: str, spec: dict) -> DataFrame:
@@ -2097,27 +2134,42 @@ class DeltaLogTable:
 
     def _mask_dvs(self, df: DataFrame, dv_files: list[tuple[str, dict]]) -> DataFrame:
         """Drop the rows of ``df`` (carrying ``_fp``/``_ri``) that the
-        given files' deletion vectors mask — the one place every
-        snapshot scan chooses how. Within :data:`DV_ISIN_MAX_FILES`
-        files and :data:`DV_ISIN_MAX` summed descriptor cardinality the
-        bitmaps are decoded on the driver into ONE SQL filter
-        ``NOT ((_fp = f1 AND _ri IN (…)) OR …)`` (one Py4J call however
-        many files or rows); above either bound the rows anti-join
-        against the executor-decoded :meth:`_dv_deleted_df`, which keeps
-        driver memory and plan size bounded."""
+        given files' deletion vectors mask. Within
+        :data:`DV_ISIN_MAX_FILES` files and :data:`DV_ISIN_MAX` summed
+        descriptor cardinality (:meth:`_dv_inline`, the one bound every
+        snapshot scan masks by) the bitmaps are decoded on the driver
+        into ONE SQL filter ``NOT ((_ri IN (…) AND _fp = f1) OR …)``
+        (:meth:`_dv_mask_sql`, one Py4J call however many files or
+        rows); above either bound the rows anti-join against the
+        executor-decoded :meth:`_dv_deleted_df`, which keeps driver
+        memory and plan size bounded."""
         if not dv_files:
             return df
-        card = sum(int(dv.get("cardinality") or 0) for _, dv in dv_files)
-        if len(dv_files) > self.DV_ISIN_MAX_FILES or card > self.DV_ISIN_MAX:
+        if not self._dv_inline(dv_files):
             return df.join(self._dv_deleted_df(dv_files), ["_fp", "_ri"], "left_anti")
-        # the path goes in as a hex BINARY literal cast to STRING: no
-        # quoting rule (nor the escapedStringLiterals setting) applies
+        return df.filter(self._dv_mask_sql(dv_files))
+
+    def _dv_inline(self, dv_files: list[tuple[str, dict]]) -> bool:
+        """Whether :meth:`_mask_dvs` decodes these files' bitmaps on the
+        driver (within :data:`DV_ISIN_MAX_FILES` and
+        :data:`DV_ISIN_MAX`) rather than anti-joining them."""
+        card = sum(int(dv.get("cardinality") or 0) for _, dv in dv_files)
+        return len(dv_files) <= self.DV_ISIN_MAX_FILES and card <= self.DV_ISIN_MAX
+
+    def _dv_mask_sql(
+        self, dv_files: list[tuple[str, dict]], fp: str = "`_fp`", ri: str = "`_ri`"
+    ) -> str:
+        """The driver-decoded DV filter as SQL text over the file-path
+        expression ``fp`` and the row-index expression ``ri``: true for
+        the rows the given files' deletion vectors do not mask."""
+        # the row-index test goes first: it is cheaper per row than the
+        # path expression, which Spark then evaluates for few rows only
         terms = [
-            f"(`_fp` = CAST(X'{fp.encode('utf-8').hex()}' AS STRING) AND "
-            f"{_in_row_indexes_sql('_ri', self._dv_row_indexes(dv))})"
-            for fp, dv in dv_files
+            f"({_in_row_indexes_sql(ri, self._dv_row_indexes(dv))} AND "
+            f"{fp} = {_sql_str(path)})"
+            for path, dv in dv_files
         ]
-        return df.filter(F.expr(f"NOT ({' OR '.join(terms)})"))
+        return f"NOT ({' OR '.join(terms)})"
 
     def _dv_deleted_df(self, dv_files: list[tuple[str, dict]]) -> DataFrame:
         """``(_fp, _ri)`` rows for every row masked by the given files'
@@ -2575,140 +2627,149 @@ class DeltaLogTable:
             "n_bloom_pruned": bloom_dropped,
         }
 
-    def read(
-        self, version_as_of: int | None = None, where: str | None = None
+    def _scan(
+        self,
+        snap: tuple,
+        files: dict | None = None,
+        with_fp: bool = False,
+        extra: tuple = (),
     ) -> DataFrame:
-        adds, schema, part_cols, meta = self._snapshot(version_as_of)
-        # column mapping (spec: 'Column Mapping'): 'name' mode stores
-        # each logical field's physical parquet name in the schema
-        # field metadata — scan physical, project back to logical;
-        # 'id' mode resolves by parquet FIELD ID (Spark's native
-        # fieldId read support).
-        # partitionValues are keyed by PHYSICAL name in both mapped modes
+        """The one snapshot scan every read path builds on: LOGICAL
+        columns in schema order over ``files`` (``{rel_path: add}``,
+        default every add of ``snap`` — the 4-tuple :meth:`_snapshot`
+        returns), without the rows deletion vectors mask.
+
+        Shape: one ``spark.read.schema(phys).parquet(*files)`` relation
+        per partition tuple (an unpartitioned table gets exactly one),
+        each projected by ONE ``selectExpr`` of SQL text — physical →
+        logical renames, partition values as typed literals — and the
+        relations unioned; an unpartitioned table whose files hold the
+        logical names needs no projection but ``*``. Column mapping
+        (spec: 'Column Mapping'): 'name' mode scans PHYSICAL names and
+        renames them; 'id' mode resolves by parquet FIELD ID (Spark's
+        native fieldId read support) and scans logical names directly;
+        partitionValues are keyed by physical name in both mapped
+        modes.
+
+        ``_fp`` (the file's absolute path, as the driver keys it) and
+        ``_ri`` (the row's index in that file) come from ``_metadata``
+        when the caller asks (``with_fp``) or the DVs are too big to
+        mask inline; :meth:`_mask_dvs` then drops the masked rows and a
+        final ``drop`` removes the columns the caller did not ask for.
+        Small DVs without ``with_fp`` are masked by the same
+        driver-built filter applied to each relation over its
+        ``_metadata`` columns. ``extra`` fields are read as they are
+        named in the files and kept after the logical columns.
+
+        Building the plan as SQL text keeps the Py4J calls and plan
+        analyses per relation fixed: a ``F.col(...).alias()`` per
+        column costs about 30 calls under PySpark's call-site capture,
+        and every DataFrame operation analyzes the plan again."""
+        adds, schema, part_cols, meta = snap
+        files = adds if files is None else files
         mode, pmap = self._mapping(meta, schema)
         if mode not in ("none", "name", "id"):
             raise NotImplementedError(
                 f"Delta column mapping mode {mode!r} is not supported by the shim"
             )
-        out_schema = T.StructType(
-            [T.StructField(f.name, f.dataType, f.nullable) for f in schema.fields]
+        fp_fields = (
+            [T.StructField("_fp", T.StringType()), T.StructField("_ri", T.LongType())]
+            if with_fp
+            else []
         )
-        if where:
-            # stats-based file skipping (the LakeTable capability,
-            # cross-format): files whose add-action [min, max] ranges
-            # — or partitionValues — cannot satisfy the predicate are
-            # never listed; the predicate still runs as a filter, so
-            # pruning only selects files, never decides rows.
-            from ent_fins_lakehouse_spark.sources.skipping import prune_dirs
-
-            stats = self._file_stats_map(adds, schema, part_cols, pmap)
-            cand, _pruned = prune_dirs(where, stats, sorted(adds))
-            cand, _bloom_dropped = self._bloom_prune(where, cand)
-            adds = {p: adds[p] for p in cand}
-        if not adds:
-            empty = self.spark.createDataFrame([], out_schema)
-            return empty.filter(where) if where else empty
+        if not files:
+            return self.spark.createDataFrame(
+                [],
+                T.StructType(
+                    [T.StructField(f.name, f.dataType, f.nullable) for f in schema.fields]
+                    + list(extra)
+                    + fp_fields
+                ),
+            )
         data_fields = [f for f in schema.fields if f.name not in part_cols]
         if mode == "id":
-            # 'id' mode: resolve data columns by parquet FIELD ID, not
-            # name — Spark's native fieldId read support does exactly
-            # this when the requested schema carries parquet.field.id
-            # metadata (spec: 'Column Mapping', id mode). The scan
-            # returns LOGICAL names directly; no rename projection.
             self.spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-            phys = T.StructType(
-                [
-                    T.StructField(
-                        f.name,
-                        f.dataType,
-                        True,
-                        {"parquet.field.id": int((f.metadata or {})["delta.columnMapping.id"])},
-                    )
-                    for f in data_fields
-                ]
-            )
+            fids = self._field_ids(meta, schema)
+            phys = [
+                T.StructField(f.name, f.dataType, True, {"parquet.field.id": fids[f.name]})
+                for f in data_fields
+            ]
         else:
-            phys = T.StructType(
-                [T.StructField(pmap[f.name], f.dataType) for f in data_fields]
-            )
-        types = {f.name: f.dataType for f in schema.fields}
-
-        def logical(df: DataFrame) -> DataFrame:
-            if mode == "id":
-                return df.select(*[f.name for f in data_fields])
-            return df.select(*[F.col(pmap[f.name]).alias(f.name) for f in data_fields])
-
-        def attach_parts(df: DataFrame, pv: dict) -> DataFrame:
-            # physical files omit partition columns; re-attach each
-            # group's values as typed literals (serialized as strings,
-            # keyed by PHYSICAL name under column mapping)
-            for c in part_cols:
-                df = df.withColumn(c, F.lit(pv.get(pmap[c])).cast(types[c]))
-            return df.select(*[f.name for f in schema.fields])
-
-        # group files by partition tuple for bulk multi-path scans.
-        # DV-bearing files are scanned in groups of their own that carry
-        # the parquet file-path / row-index metadata columns, and
-        # _mask_dvs drops the masked rows — a driver-built literal
-        # filter for few small vectors, a distributed anti-join against
-        # executor-decoded (_fp, _ri) rows otherwise, so plan size and
-        # driver memory stay bounded however many rows the bitmaps mask
-        # (a production DV can cover 10^7+ rows of one file) or however
-        # many files carry one. Plain files skip the metadata columns.
+            phys = [T.StructField(pmap[f.name], f.dataType) for f in data_fields]
+        read_schema = T.StructType(phys + list(extra))
         groups: dict[tuple, list[str]] = {}
-        pv_of: dict[tuple, dict] = {}
-        dv_groups: dict[tuple, list[str]] = {}
-        dv_pv: dict[tuple, dict] = {}
-        dv_files: list[tuple[str, dict]] = []
-        for p, info in sorted(adds.items()):
-            full = os.path.join(self.path, p)
+        dvs_of: dict[tuple, list[tuple[str, dict]]] = {}
+        for p, info in sorted(files.items()):
+            full = os.path.abspath(os.path.join(self.path, p))
             pv = info["partitionValues"]
             key = tuple(pv.get(pmap[c]) for c in part_cols)
+            groups.setdefault(key, []).append(full)
             if info["deletionVector"]:
-                dv_groups.setdefault(key, []).append(full)
-                dv_pv[key] = pv
-                dv_files.append((os.path.abspath(full), info["deletionVector"]))
-            else:
-                groups.setdefault(key, []).append(full)
-                pv_of[key] = pv
-        dv_parts: list[DataFrame] = []
-        if dv_groups:
-            norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-            lsel = (
-                [F.col(f.name) for f in data_fields]
-                if mode == "id"
-                else [F.col(pmap[f.name]).alias(f.name) for f in data_fields]
-            )
-            bparts = []
-            for key in sorted(
-                dv_groups, key=lambda k: tuple("" if v is None else str(v) for v in k)
-            ):
-                df = (
-                    self.spark.read.schema(phys)
-                    .parquet(*sorted(dv_groups[key]))
-                    .select(
-                        *lsel,
-                        norm(F.col("_metadata.file_path")).alias("_fp"),
-                        F.col("_metadata.row_index").alias("_ri"),
-                    )
-                )
-                bpv = dv_pv[key]
-                for c in part_cols:
-                    df = df.withColumn(c, F.lit(bpv.get(pmap[c])).cast(types[c]))
-                bparts.append(df)
-            big = bparts[0]
-            for b in bparts[1:]:
-                big = big.unionByName(b)
-            big = self._mask_dvs(big, dv_files)
-            dv_parts.append(big.select(*[f.name for f in schema.fields]))
-        parts = []
-        for key in sorted(groups, key=lambda k: tuple("" if v is None else str(v) for v in k)):
-            df = logical(self.spark.read.schema(phys).parquet(*sorted(groups[key])))
-            parts.append(attach_parts(df, pv_of[key]) if part_cols else df)
-        parts.extend(dv_parts)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+                dvs_of.setdefault(key, []).append((full, info["deletionVector"]))
+        dv_files = [f for key in sorted(dvs_of, key=_pv_order) for f in dvs_of[key]]
+        # small DVs without _fp/_ri asked for: the driver-decoded filter
+        # goes on each relation itself, over the _metadata columns, so
+        # no column is projected only to be dropped again
+        inline = bool(dv_files) and not with_fp and self._dv_inline(dv_files)
+        fp_items = (
+            [f"{_FP_SQL} AS _fp", "_metadata.row_index AS _ri"]
+            if with_fp or (dv_files and not inline)
+            else []
+        )
+        # an unpartitioned table read under its logical names needs no
+        # per-column projection: the relation already is the result
+        as_is = not part_cols and all(mode == "id" or pmap[f.name] == f.name for f in data_fields)
+        out = None
+        for key in sorted(groups, key=_pv_order):
+            df = self.spark.read.schema(read_schema).parquet(*groups[key])
+            if inline and key in dvs_of:
+                df = df.filter(self._dv_mask_sql(dvs_of[key], _FP_SQL, "_metadata.row_index"))
+            if as_is:
+                out = df.selectExpr("*", *fp_items) if fp_items else df
+                continue
+            pv = dict(zip(part_cols, key))
+            items = []
+            for f in schema.fields:
+                name = _sql_name(f.name)
+                if f.name in pv:
+                    # files omit partition columns: each group's value
+                    # (a string in the log) is cast to the column type
+                    v = pv[f.name]
+                    lit = "NULL" if v is None else _sql_str(str(v))
+                    items.append(f"CAST({lit} AS {f.dataType.simpleString()}) AS {name}")
+                elif mode == "id" or pmap[f.name] == f.name:
+                    items.append(name)
+                else:
+                    items.append(f"{_sql_name(pmap[f.name])} AS {name}")
+            df = df.selectExpr(*items, *[_sql_name(f.name) for f in extra], *fp_items)
+            out = df if out is None else out.union(df)
+        if dv_files and not inline:
+            out = self._mask_dvs(out, dv_files)
+            if not with_fp:
+                out = out.drop("_fp", "_ri")
+        return out
+
+    def read(
+        self, version_as_of: int | None = None, where: str | None = None
+    ) -> DataFrame:
+        """The snapshot at ``version_as_of`` (default: latest) as LOGICAL
+        columns, one :meth:`_scan` over its files. With ``where``, files
+        whose add-action stats or partition values cannot satisfy the
+        predicate (and, for an indexed column, whose Bloom filter rules
+        the value out) are never listed; the predicate still runs as a
+        filter, so pruning only selects files, never decides rows."""
+        snap = self._snapshot(version_as_of)
+        adds, schema, part_cols, meta = snap
+        files = adds
+        if where:
+            from ent_fins_lakehouse_spark.sources.skipping import prune_dirs
+
+            _, pmap = self._mapping(meta, schema)
+            stats = self._file_stats_map(adds, schema, part_cols, pmap)
+            cand, _ = prune_dirs(where, stats, sorted(adds))
+            cand, _ = self._bloom_prune(where, cand)
+            files = {p: adds[p] for p in cand}
+        out = self._scan(snap, files)
         return out.filter(where) if where else out
 
     # ------------------------------------------------------------- changes
@@ -4677,36 +4738,12 @@ class DeltaLogTable:
         import uuid as _uuid
         import zlib
 
-        adds, schema, part_cols, _meta = self._snapshot()
+        snap = self._snapshot()
+        adds, schema, part_cols, _meta = snap
         _planned_at = self._snap_version
         self._enforce_append_only(_meta, "DELETE")
-        cm_mode = ((_meta or {}).get("configuration") or {}).get(
-            "delta.columnMapping.mode", "none"
-        )
-        if cm_mode not in ("none", "name", "id"):
-            raise NotImplementedError(
-                f"DV deletes on columnMapping.mode={cm_mode!r} tables are not "
-                "supported by the shim"
-            )
-        _, _del_pmap = self._mapping(_meta, schema)
+        cm_mode, _del_pmap = self._mapping(_meta, schema)
         _del_fids = self._field_ids(_meta, schema) if cm_mode == "id" else None
-        data_fields = [f for f in schema.fields if f.name not in part_cols]
-        if _del_fids:
-            self.spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-            phys = T.StructType(
-                [
-                    T.StructField(
-                        f.name, f.dataType, True,
-                        {"parquet.field.id": _del_fids[f.name]},
-                    )
-                    for f in data_fields
-                ]
-            )
-        else:
-            phys = T.StructType(
-                [T.StructField(_del_pmap[f.name], f.dataType) for f in data_fields]
-            )
-        types = {f.name: f.dataType for f in schema.fields}
         now = int(time.time() * 1000)
 
         # stats-based pruning first: files whose add-action [min,max] /
@@ -4715,49 +4752,18 @@ class DeltaLogTable:
         # the table)
         from ent_fins_lakehouse_spark.sources.skipping import prune_dirs
 
-        _, pmap = self._mapping(_meta, schema)
-        stats = self._file_stats_map(adds, schema, part_cols, pmap)
+        stats = self._file_stats_map(adds, schema, part_cols, _del_pmap)
         cand, _ = prune_dirs(predicate, stats, sorted(adds))
 
         # ONE distributed job computes every file's matched row indexes
-        # via (_metadata.file_path, _metadata.row_index) — not a
+        # over the candidate files' _scan with (_fp, _ri) — not a
         # one-job-per-file driver loop (N× scheduling + scan setup at N
-        # files). Files are grouped by partition tuple so partition
-        # columns attach as per-group literals; the groups union into a
-        # single plan and a single collect, which returns only the
-        # matched indexes (bounded by rows actually deleted — the same
-        # driver-side data every DV writer must hold to serialize the
-        # sidecar bitmaps).
-        grouped: dict[tuple, list[str]] = {}
-        for p in cand:
-            key = tuple(
-                adds[p]["partitionValues"].get(_del_pmap[c]) for c in part_cols
-            )
-            grouped.setdefault(key, []).append(os.path.join(self.path, p))
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-        parts = []
-        for key, paths in sorted(
-            grouped.items(), key=lambda kv: tuple("" if v is None else str(v) for v in kv[0])
-        ):
-            df = (
-                self.spark.read.schema(phys)
-                .parquet(*sorted(paths))
-                .select(
-                    *(
-                        [F.col(f.name) for f in data_fields]
-                        if _del_fids
-                        else [
-                            F.col(_del_pmap[f.name]).alias(f.name)
-                            for f in data_fields
-                        ]
-                    ),
-                    norm(F.col("_metadata.file_path")).alias("_dv_fp"),
-                    F.col("_metadata.row_index").alias("_dv_ri"),
-                )
-            )
-            for c, v in zip(part_cols, key):
-                df = df.withColumn(c, F.lit(v).cast(types[c]))
-            parts.append(df)
+        # files). The scan masks rows a PRIOR deletion vector already
+        # deleted, so every matched row is newly deleted; the collect
+        # returns only the matched indexes (bounded by rows actually
+        # deleted — the same driver-side data every DV writer must hold
+        # to serialize the sidecar bitmaps).
+        scan = self._scan(snap, {p: adds[p] for p in cand}, with_fp=True) if cand else None
         # The bitmaps are ENCODED ON THE EXECUTORS (applyInPandas per
         # file): each file's matched indexes merge with its prior DV
         # and serialize to a RoaringBitmap payload in the task that
@@ -4778,29 +4784,20 @@ class DeltaLogTable:
         def encode(pdf):
             import pandas as pd
 
-            from ent_fins_lakehouse_spark.sources.roaring import (
-                roaring64_payload as rp,
-                roaring64_rows as rr,
-            )
+            from ent_fins_lakehouse_spark.sources.roaring import roaring64_payload as rp
 
-            fp = pdf["_dv_fp"].iloc[0]
-            idx = set(int(i) for i in pdf["_dv_ri"])
-            prior: set[int] = set()
+            # the scan masked the prior DV's rows: every index is new
+            fp = pdf["_fp"].iloc[0]
+            idx = set(int(i) for i in pdf["_ri"])
             d = desc_of.get(fp)
-            if d is not None:
-                prior = set(_dv_row_indexes_of(table_path, json.loads(d)))
-            new = idx - prior
-            if not new:
-                return pd.DataFrame(
-                    {"_fp": [], "payload": [], "card": [], "matched": []}
-                ).astype({"_fp": str, "card": "int64", "matched": "int64"})
+            prior = set(_dv_row_indexes_of(table_path, json.loads(d))) if d else set()
             merged = sorted(idx | prior)
             return pd.DataFrame(
                 {
                     "_fp": [fp],
                     "payload": [rp(merged)],
                     "card": [len(merged)],
-                    "matched": [len(new)],
+                    "matched": [len(idx)],
                 }
             )
 
@@ -4816,43 +4813,30 @@ class DeltaLogTable:
         committed = False
         with ThreadPoolExecutor(max_workers=1) as cdc_pool:
             try:
-                if parts:
-                    scan = parts[0]
-                    for p in parts[1:]:
-                        scan = scan.unionByName(p)
+                if scan is not None:
+                    matched = scan.filter(predicate)
                     # change data feed: emit the newly-masked rows as explicit
-                    # cdc delete files — the predicate-matched scan minus rows
-                    # a PRIOR DV already masked (those were emitted by the
-                    # commit that masked them). The cdc write depends only on
-                    # PRIOR table state, never on the encode job's result, so
-                    # it stages CONCURRENTLY with the bitmap encode (guide
+                    # cdc delete files — the predicate-matched scan, whose
+                    # rows a PRIOR DV masked are gone (those were emitted by
+                    # the commit that masked them). The cdc write depends only
+                    # on PRIOR table state, never on the encode job's result,
+                    # so it stages CONCURRENTLY with the bitmap encode (guide
                     # §2.6, r15), in a worker that keeps the caller's job
                     # group.
                     if self._cdf_on(_meta):
-                        del_rows = scan.filter(predicate)
-                        dvf = [(full, json.loads(d)) for full, d in sorted(desc_of.items())]
-                        if dvf:
-                            masked = (
-                                self._dv_deleted_df(dvf)
-                                .withColumnRenamed("_fp", "_dv_fp")
-                                .withColumnRenamed("_ri", "_dv_ri")
-                            )
-                            del_rows = del_rows.join(
-                                masked, ["_dv_fp", "_dv_ri"], "left_anti"
-                            )
                         cdc_future = cdc_pool.submit(
                             inheritable_thread_target(self.spark)(self._stage_cdc),
-                            del_rows.select(
-                                *[f.name for f in schema.fields]
-                            ).withColumn("_change_type", F.lit("delete")),
+                            matched.selectExpr(
+                                *[_sql_name(f.name) for f in schema.fields],
+                                "'delete' AS _change_type",
+                            ),
                             part_cols,
                             _del_pmap,
                             _del_fids,
                         )
                     encoded = (
-                        scan.filter(predicate)
-                        .select("_dv_fp", "_dv_ri")
-                        .groupBy("_dv_fp")
+                        matched.select("_fp", "_ri")
+                        .groupBy("_fp")
                         .applyInPandas(
                             encode, "_fp string, payload binary, card long, matched long"
                         )
@@ -4977,99 +4961,23 @@ class DeltaLogTable:
         ``_fp`` (normalized absolute data-file path) and ``_ri`` (the
         row's index in that file) — the row→file attribution
         :meth:`update` / :meth:`merge` need to rewrite only touched
-        files. All files are ONE scan, and :meth:`_mask_dvs` drops the
-        rows their deletion vectors mask (a driver-built literal filter
-        over ``(_fp, _ri)`` for few, small vectors, else the
-        executor-decoded anti-join). Column-mapped tables read
-        through the mapping — name mode by physical name, id mode by
-        parquet FIELD ID — and the caller stages rewrites back under
+        files. It is the one :meth:`_scan` :meth:`read` builds, asked
+        for ``_fp``/``_ri``: one relation per partition tuple, deletion
+        vectors masked by :meth:`_mask_dvs`, column-mapped tables read
+        through the mapping. The caller stages rewrites back under
         physical names (and field ids) via the returned ``pmap`` /
         ``fid_of``.
 
         Returns ``(df, adds, schema, part_cols, abs_path→rel_path,
         pmap, fid_of)`` (``fid_of`` is None outside id mode).
         """
-        adds, schema, part_cols, meta = self._snapshot()
-        cm_mode = ((meta or {}).get("configuration") or {}).get(
-            "delta.columnMapping.mode", "none"
-        )
-        if cm_mode not in ("none", "name", "id"):
-            raise NotImplementedError(
-                f"DML on columnMapping.mode={cm_mode!r} Delta tables is not "
-                "supported by the shim"
-            )
-        _, pmap = self._mapping(meta, schema)
-        fid_of = self._field_ids(meta, schema) if cm_mode == "id" else None
-        data_fields = [f for f in schema.fields if f.name not in part_cols]
-        if cm_mode == "id":
-            # resolve by parquet FIELD ID (same mechanism as read())
-            self.spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-            phys = T.StructType(
-                [
-                    T.StructField(
-                        f.name, f.dataType, True,
-                        {"parquet.field.id": fid_of[f.name]},
-                    )
-                    for f in data_fields
-                ]
-            )
-        else:
-            phys = T.StructType(
-                [T.StructField(pmap[f.name], f.dataType) for f in data_fields]
-            )
-        types = {f.name: f.dataType for f in schema.fields}
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
+        snap = self._snapshot()
+        adds, schema, part_cols, meta = snap
+        df = self._scan(snap, with_fp=True)
+        mode, pmap = self._mapping(meta, schema)
+        fid_of = self._field_ids(meta, schema) if mode == "id" else None
         rel_of = {os.path.abspath(os.path.join(self.path, p)): p for p in adds}
-        if not adds:
-            empty = self.spark.createDataFrame(
-                [],
-                T.StructType(
-                    [
-                        *schema.fields,
-                        T.StructField("_fp", T.StringType()),
-                        T.StructField("_ri", T.LongType()),
-                    ]
-                ),
-            )
-            return empty, adds, schema, part_cols, rel_of, pmap, fid_of
-        groups: dict[tuple, list[str]] = {}
-        pv_of: dict[tuple, dict] = {}
-        dv_files: list[tuple[str, dict]] = []
-        for p, info in sorted(adds.items()):
-            full = os.path.abspath(os.path.join(self.path, p))
-            pv = info["partitionValues"]
-            key = tuple(pv.get(pmap[c]) for c in part_cols)
-            groups.setdefault(key, []).append(full)
-            pv_of[key] = pv
-            if info["deletionVector"]:
-                dv_files.append((full, info["deletionVector"]))
-        lsel = (
-            [F.col(f.name) for f in data_fields]
-            if cm_mode == "id"
-            else [F.col(pmap[f.name]).alias(f.name) for f in data_fields]
-        )
-        parts = []
-        for key in sorted(
-            groups, key=lambda k: tuple("" if v is None else str(v) for v in k)
-        ):
-            df = (
-                self.spark.read.schema(phys)
-                .parquet(*sorted(groups[key]))
-                .select(
-                    *lsel,
-                    norm(F.col("_metadata.file_path")).alias("_fp"),
-                    F.col("_metadata.row_index").alias("_ri"),
-                )
-            )
-            pv = pv_of[key]
-            for c in part_cols:
-                df = df.withColumn(c, F.lit(pv.get(pmap[c])).cast(types[c]))
-            parts.append(df.select(*[f.name for f in schema.fields], "_fp", "_ri"))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        out = self._mask_dvs(out, dv_files)
-        return out, adds, schema, part_cols, rel_of, pmap, fid_of
+        return df, adds, schema, part_cols, rel_of, pmap, fid_of
 
     def _merge_candidate_files(
         self,
@@ -5153,11 +5061,15 @@ class DeltaLogTable:
         return cand
 
     def _only_files(self, df: DataFrame, fps: list[str]) -> DataFrame:
-        """Restrict ``df`` (carrying ``_fp``) to the given files —
-        literal ``isin`` for small lists, semi-join above (file lists
-        are control-plane but can reach 10^5+ entries at scale)."""
+        """Restrict ``df`` (carrying ``_fp``) to the given files — one
+        SQL ``IN`` over hex literals for small lists (one Py4J call,
+        where ``F.col("_fp").isin(fps)`` crosses the bridge once per
+        path), semi-join above (file lists are control-plane but can
+        reach 10^5+ entries at scale)."""
+        if not fps:
+            return df.filter("false")
         if len(fps) <= 1000:
-            return df.filter(F.col("_fp").isin(fps))
+            return df.filter(f"`_fp` IN ({', '.join(map(_sql_str, fps))})")
         fdf = self.spark.createDataFrame([(p,) for p in fps], "_fp string")
         return df.join(fdf, "_fp", "left_semi")
 
@@ -6212,12 +6124,13 @@ class DeltaLogTable:
         ``_row_id`` (= the file's ``baseRowId`` + parquet row index,
         after DV masking — deleted rows' ids never resurface) and
         ``_row_commit_version`` (the file's defaultRowCommitVersion).
-        Fully distributed: data files are scanned in bulk groups with
-        the parquet ``_metadata`` columns attached and the per-file
+        Fully distributed: the data files are one :meth:`_scan` with
+        ``_fp``/``_ri`` attached and the per-file
         (baseRowId, commitVersion) map — control-plane sized, one row
         per live file — is broadcast-joined on file path; no
         driver-side row materialization at any scale."""
-        adds, schema, part_cols, meta = self._snapshot(version_as_of)
+        snap = self._snapshot(version_as_of)
+        adds, schema, _, meta = snap
         cfg = (meta or {}).get("configuration") or {}
         if cfg.get("delta.enableRowTracking") != "true":
             raise ValueError(
@@ -6242,80 +6155,33 @@ class DeltaLogTable:
         # base+index derivation would mis-serve); files without the
         # physical column scan as NULL and fall through to base+index.
         mat_col = cfg.get("delta.rowTracking.materializedRowIdColumnName")
-        data_fields = [f for f in schema.fields if f.name not in part_cols]
-        phys = T.StructType(
-            [T.StructField(f.name, f.dataType) for f in data_fields]
-            + ([T.StructField(mat_col, T.LongType())] if mat_col else [])
+        out = self._scan(
+            snap,
+            with_fp=True,
+            extra=(T.StructField(mat_col, T.LongType()),) if mat_col else (),
         )
-        types = {f.name: f.dataType for f in schema.fields}
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-        out_cols = [f.name for f in schema.fields] + ["_row_id", "_row_commit_version"]
         if not adds:
-            return self.spark.createDataFrame(
-                [],
-                T.StructType(
-                    [
-                        *schema.fields,
-                        T.StructField("_row_id", T.LongType()),
-                        T.StructField("_row_commit_version", T.LongType()),
-                    ]
-                ),
+            return out.selectExpr(
+                *[_sql_name(f.name) for f in schema.fields],
+                "CAST(NULL AS BIGINT) AS _row_id",
+                "CAST(NULL AS BIGINT) AS _row_commit_version",
             )
-        groups: dict[tuple, list[str]] = {}
-        pv_of: dict[tuple, dict] = {}
-        dv_files: list[tuple[str, dict]] = []
-        rid_rows = []
-        for p, info in sorted(adds.items()):
-            full = os.path.abspath(os.path.join(self.path, p))
-            pv = info["partitionValues"]
-            key = tuple(pv.get(c) for c in part_cols)
-            groups.setdefault(key, []).append(full)
-            pv_of[key] = pv
-            if info["deletionVector"]:
-                dv_files.append((full, info["deletionVector"]))
-            rid_rows.append(
-                (full, int(info["baseRowId"]), int(info["defaultRowCommitVersion"] or 0))
-            )
-        parts = []
-        for key in sorted(
-            groups, key=lambda k: tuple("" if v is None else str(v) for v in k)
-        ):
-            df = (
-                self.spark.read.schema(phys)
-                .parquet(*sorted(groups[key]))
-                .select(
-                    "*",
-                    norm(F.col("_metadata.file_path")).alias("_fp"),
-                    F.col("_metadata.row_index").alias("_ri"),
-                )
-            )
-            pv = pv_of[key]
-            for c in part_cols:
-                df = df.withColumn(c, F.lit(pv.get(c)).cast(types[c]))
-            parts.append(
-                df.select(
-                    *[f.name for f in schema.fields],
-                    *([F.col(mat_col).alias("_rt_mat")] if mat_col else []),
-                    "_fp",
-                    "_ri",
-                )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        out = self._mask_dvs(out, dv_files)
         rid_map = self.spark.createDataFrame(
-            rid_rows, "_fp string, _rt_base long, _rt_dcv long"
+            [
+                (
+                    os.path.abspath(os.path.join(self.path, p)),
+                    int(info["baseRowId"]),
+                    int(info["defaultRowCommitVersion"] or 0),
+                )
+                for p, info in sorted(adds.items())
+            ],
+            "_fp string, _rt_base long, _rt_dcv long",
         )
-        derived = F.col("_rt_base") + F.col("_ri")
-        return (
-            out.join(F.broadcast(rid_map), "_fp")
-            .withColumn(
-                "_row_id",
-                F.coalesce(F.col("_rt_mat"), derived) if mat_col else derived,
-            )
-            .withColumn("_row_commit_version", F.col("_rt_dcv"))
-            .select(*out_cols)
+        row_id = f"coalesce({_sql_name(mat_col)}, _rt_base + _ri)" if mat_col else "_rt_base + _ri"
+        return out.join(F.broadcast(rid_map), "_fp").selectExpr(
+            *[_sql_name(f.name) for f in schema.fields],
+            f"{row_id} AS _row_id",
+            "_rt_dcv AS _row_commit_version",
         )
 
     @staticmethod
@@ -6746,8 +6612,8 @@ class DeltaLogTable:
         target_file_size_bytes: int,
     ) -> dict:
         """Selective small-file bin-packing (see :meth:`optimize`):
-        read ONLY the adds under the size gate (their DVs anti-joined
-        away — materialized), pack them into ~target-size files, commit
+        read ONLY the adds under the size gate (their DVs masked away —
+        materialized), pack them into ~target-size files, commit
         remove(small)+add(packed) with ``dataChange=false``. Untouched
         adds never appear in the commit, so their stats, DVs and
         baseRowIds carry byte-for-byte. Modeled on :meth:`reorg_purge`
@@ -6775,42 +6641,6 @@ class DeltaLogTable:
                 "dvs_materialized": 0,
             }
         n_dvs = sum(1 for i in small.values() if i["deletionVector"])
-        data_fields = [f for f in schema.fields if f.name not in part_cols]
-        phys = T.StructType([T.StructField(f.name, f.dataType) for f in data_fields])
-        types = {f.name: f.dataType for f in schema.fields}
-        groups: dict[tuple, list[str]] = {}
-        pv_of: dict[tuple, dict] = {}
-        dv_files: list[tuple[str, dict]] = []
-        for p, info in sorted(small.items()):
-            full = os.path.join(self.path, p)
-            pv = info["partitionValues"]
-            key = tuple(pv.get(c) for c in part_cols)
-            groups.setdefault(key, []).append(full)
-            pv_of[key] = pv
-            if info["deletionVector"]:
-                dv_files.append((os.path.abspath(full), info["deletionVector"]))
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-        parts: list[DataFrame] = []
-        for key in sorted(
-            groups, key=lambda k: tuple("" if v is None else str(v) for v in k)
-        ):
-            df = (
-                self.spark.read.schema(phys)
-                .parquet(*sorted(groups[key]))
-                .select(
-                    *[F.col(f.name) for f in data_fields],
-                    norm(F.col("_metadata.file_path")).alias("_fp"),
-                    F.col("_metadata.row_index").alias("_ri"),
-                )
-            )
-            pv = pv_of[key]
-            for c in part_cols:
-                df = df.withColumn(c, F.lit(pv.get(c)).cast(types[c]))
-            parts.append(df)
-        packed = parts[0]
-        for df in parts[1:]:
-            packed = packed.unionByName(df)
-        packed = self._mask_dvs(packed, dv_files)
         n_out = max(
             1,
             math.ceil(
@@ -6818,11 +6648,7 @@ class DeltaLogTable:
                 / target_file_size_bytes
             ),
         )
-        packed = (
-            packed.drop("_fp", "_ri")
-            .select(*[f.name for f in schema.fields])
-            .coalesce(n_out)
-        )
+        packed = self._scan((adds, schema, part_cols, meta), small).coalesce(n_out)
         new_adds = self._stage_adds(packed, part_cols)
         now = int(time.time() * 1000)
         for a in new_adds:
@@ -6877,16 +6703,15 @@ class DeltaLogTable:
         readers see identical rows, streams skip the commit, time
         travel still serves the DV'd layout.
 
-        Spark-first shape: the affected files scan in ONE multi-path
-        branch per partition tuple with the parquet ``file_path`` /
-        ``row_index`` metadata columns; masked rows drop via a single
-        distributed left-anti join against executor-decoded DV rows
-        (the big-DV read path's plan — bounded no matter how many rows
-        the bitmaps mask). Returns ``{"files_purged", "files_after",
-        "rows_purged"}``."""
+        Spark-first shape: the affected files are one :meth:`_scan` (one
+        multi-path relation per partition tuple) whose masked rows drop
+        through the read path's DV mask, bounded no matter how many
+        rows the bitmaps mask. Returns ``{"files_purged",
+        "files_after", "rows_purged"}``."""
         import time
 
-        adds, schema, part_cols, meta = self._snapshot()
+        snap = self._snapshot()
+        adds, _, part_cols, meta = snap
         _planned_at = self._snap_version
         if ((meta or {}).get("configuration") or {}).get(
             "delta.columnMapping.mode", "none"
@@ -6902,45 +6727,7 @@ class DeltaLogTable:
             int(info["deletionVector"].get("cardinality") or 0)
             for info in dv_adds.values()
         )
-        data_fields = [f for f in schema.fields if f.name not in part_cols]
-        phys = T.StructType([T.StructField(f.name, f.dataType) for f in data_fields])
-        types = {f.name: f.dataType for f in schema.fields}
-        groups: dict[tuple, list[str]] = {}
-        pv_of: dict[tuple, dict] = {}
-        dv_files: list[tuple[str, dict]] = []
-        for p, info in sorted(dv_adds.items()):
-            full = os.path.join(self.path, p)
-            pv = info["partitionValues"]
-            key = tuple(pv.get(c) for c in part_cols)
-            groups.setdefault(key, []).append(full)
-            pv_of[key] = pv
-            dv_files.append((os.path.abspath(full), info["deletionVector"]))
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-        parts: list[DataFrame] = []
-        for key in sorted(
-            groups, key=lambda k: tuple("" if v is None else str(v) for v in k)
-        ):
-            df = (
-                self.spark.read.schema(phys)
-                .parquet(*sorted(groups[key]))
-                .select(
-                    *[F.col(f.name) for f in data_fields],
-                    norm(F.col("_metadata.file_path")).alias("_fp"),
-                    F.col("_metadata.row_index").alias("_ri"),
-                )
-            )
-            pv = pv_of[key]
-            for c in part_cols:
-                df = df.withColumn(c, F.lit(pv.get(c)).cast(types[c]))
-            parts.append(df)
-        clean = parts[0]
-        for df in parts[1:]:
-            clean = clean.unionByName(df)
-        clean = (
-            self._mask_dvs(clean, dv_files)
-            .drop("_fp", "_ri")
-            .select(*[f.name for f in schema.fields])
-        )
+        clean = self._scan(snap, dv_adds)
         new_adds = self._stage_adds(clean, part_cols)
         now = int(time.time() * 1000)
         for a in new_adds:

@@ -6510,7 +6510,9 @@ def test_delta_merge_on_dv_table_jobs_stay_in_caller_group(spark, tmp_path, monk
             sc.setLocalProperty("spark.jobGroup.id", None)
         grouped, ungrouped = _jobs_by_group(sc, group)
         assert grouped, "the merge ran no job in the caller's group"
-        assert ungrouped == ungrouped0, "jobs ran outside the caller's group"
+        # only NEW ids count: once the status store holds its 1,000
+        # retained jobs, the merge's jobs evict the oldest ungrouped ids
+        assert not ungrouped - ungrouped0, "jobs ran outside the caller's group"
         assert bool(calls) == (name != "small"), (name, calls)
         got = sorted((r["k"], r["v"]) for r in dl.read().collect())
         assert got == expect, (name, got)
@@ -6687,3 +6689,107 @@ def test_delta_checkpoint_decode_matches_json_replay(spark, tmp_path, shape):
     assert a._last_protocol == b._last_protocol
     assert a._last_txns == b._last_txns == {"app-a": 4, "app-b": 7}
     assert a._last_domains == b._last_domains
+
+
+def test_delta_dml_on_table_under_uri_escaped_path(spark, tmp_path):
+    """``_metadata.file_path`` is a percent-encoded URI while the driver
+    keys files by their plain path: DELETE, read and MERGE on a table
+    under a directory whose name needs escaping (space, plus) must
+    still attribute rows to their files and mask them."""
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    dl = DeltaLogTable(spark, str(tmp_path / "a b+c"))
+    dl.write(
+        spark.createDataFrame([(i, f"v{i}") for i in range(20)], "k INT, v STRING").coalesce(2),
+        mode="append",
+    )
+    assert dl.delete("k < 5")["rows_deleted"] == 5
+    assert sorted(r["k"] for r in dl.read().collect()) == list(range(5, 20))
+    assert dl.delete("k < 7")["rows_deleted"] == 2
+    dl.merge(spark.createDataFrame([(8, "u8"), (3, "n3")], "k INT, v STRING"), on=["k"])
+    got = {r["k"]: r["v"] for r in dl.read().collect()}
+    assert got == {**{k: f"v{k}" for k in range(7, 20)}, 8: "u8", 3: "n3"}
+
+
+def test_lake_table_delete_keeps_rows_whose_predicate_is_null(spark, tmp_path):
+    """SQL DELETE removes a row only when its predicate is TRUE: a NULL
+    comparison keeps the row."""
+    t = _table(spark, tmp_path)
+    t.write(spark.createDataFrame([(1, 1), (2, None), (3, 9)], "k INT, x INT"))
+    assert t.delete("x > 5")["rows_deleted"] == 1
+    assert sorted(r["k"] for r in t.read().collect()) == [1, 2]
+
+
+def test_lake_table_merge_null_not_matched_by_source_condition_keeps_row(spark, tmp_path):
+    """WHEN NOT MATCHED BY SOURCE AND cond THEN DELETE deletes only the
+    rows whose condition is TRUE: a NULL condition keeps the row."""
+    t = _table(spark, tmp_path)
+    t.write(spark.createDataFrame([(1, 1), (2, None), (3, 9)], "k INT, x INT"))
+    t.merge(
+        spark.createDataFrame([(1, 10)], "k INT, x INT"),
+        on=["k"],
+        not_matched_by_source_delete=True,
+        not_matched_by_source_condition="t.x > 5",
+    )
+    assert {r["k"]: r["x"] for r in t.read().collect()} == {1: 10, 2: None}
+
+
+def test_iceberg_merge_releases_persisted_frames_on_failure(spark, tmp_path, monkeypatch):
+    """An Iceberg MERGE that raises — the duplicate-source-key refusal,
+    or a failed staging write — leaves no persisted DataFrame behind."""
+    from ent_fins_lakehouse_spark.sources.iceberg import IcebergTable
+
+    jsc = spark.sparkContext._jsc
+    t = IcebergTable(spark, str(tmp_path / "im"))
+    t.append(spark.createDataFrame([(i, f"v{i}") for i in range(10)], "k INT, v STRING"))
+    n0 = jsc.getPersistentRDDs().size()
+    dup = spark.createDataFrame([(1, "a"), (1, "b")], "k INT, v STRING")
+    with pytest.raises(ValueError, match="multiple rows"):
+        t.merge(dup, on=["k"])
+    assert jsc.getPersistentRDDs().size() == n0
+
+    def failing_stage(self, *args, **kwargs):
+        raise RuntimeError("stage failed")
+
+    monkeypatch.setattr(IcebergTable, "_stage_data_entries", failing_stage)
+    with pytest.raises(RuntimeError, match="stage failed"):
+        t.merge(spark.createDataFrame([(1, "u"), (50, "n")], "k INT, v STRING"), on=["k"])
+    assert jsc.getPersistentRDDs().size() == n0
+
+
+def test_delta_read_plan_py4j_calls_do_not_grow_per_column(spark, tmp_path):
+    """Planning a snapshot read builds each scan as SQL text, so a
+    column costs at most a couple of Py4J round trips (one list element
+    of a ``selectExpr``), not the ~30 of a ``F.col(...).alias()``
+    projection. Both tables carry deletion vectors."""
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    client = spark.sparkContext._gateway._gateway_client
+
+    def read_calls(dl) -> int:
+        sent = []
+        orig = client.send_command
+
+        def counting(command, *args, **kwargs):
+            # "m" commands release Python-collected JVM objects; when
+            # they run depends on the garbage collector, not on the plan
+            if not command.startswith("m\n"):
+                sent.append(command)
+            return orig(command, *args, **kwargs)
+
+        client.send_command = counting
+        try:
+            dl.read()
+        finally:
+            del client.send_command
+        return len(sent)
+
+    calls = {}
+    for ncols in (6, 60):
+        cols = [f"CAST(id % {i + 2} AS INT) AS c{i}" for i in range(ncols - 1)]
+        dl = DeltaLogTable(spark, str(tmp_path / f"w{ncols}"))
+        dl.write(spark.range(100).selectExpr("id", *cols).coalesce(2), mode="append")
+        dl.delete("id % 7 = 0")
+        dl.read()  # warm
+        calls[ncols] = min(read_calls(dl) for _ in range(3))
+    assert (calls[60] - calls[6]) / 54 <= 2, calls
