@@ -2114,7 +2114,7 @@ class DeltaLogTable:
         return _dv_row_indexes_of(self.path, dv)
 
     #: DVs whose summed cardinality is at most this are decoded on the
-    #: driver and applied as one literal filter (:meth:`_mask_dvs`) —
+    #: driver and applied as one literal filter (:meth:`_dv_mask_sql`) —
     #: cheap, joins nothing. Above it the indexes are decoded ON THE
     #: EXECUTORS and anti-joined: a production DV can mask 10^7+ rows
     #: of a large file (DVs exist precisely to avoid rewriting big
@@ -2132,41 +2132,25 @@ class DeltaLogTable:
     #: 64 KB method limit and Spark fell back to interpreting it.
     DV_ISIN_MAX_FILES = 32
 
-    def _mask_dvs(self, df: DataFrame, dv_files: list[tuple[str, dict]]) -> DataFrame:
-        """Drop the rows of ``df`` (carrying ``_fp``/``_ri``) that the
-        given files' deletion vectors mask. Within
-        :data:`DV_ISIN_MAX_FILES` files and :data:`DV_ISIN_MAX` summed
-        descriptor cardinality (:meth:`_dv_inline`, the one bound every
-        snapshot scan masks by) the bitmaps are decoded on the driver
-        into ONE SQL filter ``NOT ((_ri IN (…) AND _fp = f1) OR …)``
-        (:meth:`_dv_mask_sql`, one Py4J call however many files or
-        rows); above either bound the rows anti-join against the
-        executor-decoded :meth:`_dv_deleted_df`, which keeps driver
-        memory and plan size bounded."""
-        if not dv_files:
-            return df
-        if not self._dv_inline(dv_files):
-            return df.join(self._dv_deleted_df(dv_files), ["_fp", "_ri"], "left_anti")
-        return df.filter(self._dv_mask_sql(dv_files))
-
     def _dv_inline(self, dv_files: list[tuple[str, dict]]) -> bool:
-        """Whether :meth:`_mask_dvs` decodes these files' bitmaps on the
-        driver (within :data:`DV_ISIN_MAX_FILES` and
-        :data:`DV_ISIN_MAX`) rather than anti-joining them."""
+        """Whether :meth:`_scan` decodes these files' bitmaps on the
+        driver into one filter (within :data:`DV_ISIN_MAX_FILES` files
+        and :data:`DV_ISIN_MAX` summed descriptor cardinality) rather
+        than anti-joining them against :meth:`_dv_deleted_df`, which
+        keeps driver memory and plan size bounded."""
         card = sum(int(dv.get("cardinality") or 0) for _, dv in dv_files)
         return len(dv_files) <= self.DV_ISIN_MAX_FILES and card <= self.DV_ISIN_MAX
 
-    def _dv_mask_sql(
-        self, dv_files: list[tuple[str, dict]], fp: str = "`_fp`", ri: str = "`_ri`"
-    ) -> str:
-        """The driver-decoded DV filter as SQL text over the file-path
-        expression ``fp`` and the row-index expression ``ri``: true for
-        the rows the given files' deletion vectors do not mask."""
+    def _dv_mask_sql(self, dv_files: list[tuple[str, dict]]) -> str:
+        """The driver-decoded DV filter as SQL text over a parquet
+        relation's ``_metadata`` columns: true for the rows the given
+        files' deletion vectors do not mask. One Py4J call however many
+        files or rows."""
         # the row-index test goes first: it is cheaper per row than the
         # path expression, which Spark then evaluates for few rows only
         terms = [
-            f"({_in_row_indexes_sql(ri, self._dv_row_indexes(dv))} AND "
-            f"{fp} = {_sql_str(path)})"
+            f"({_in_row_indexes_sql('_metadata.row_index', self._dv_row_indexes(dv))} AND "
+            f"{_FP_SQL} = {_sql_str(path)})"
             for path, dv in dv_files
         ]
         return f"NOT ({' OR '.join(terms)})"
@@ -2633,11 +2617,13 @@ class DeltaLogTable:
         files: dict | None = None,
         with_fp: bool = False,
         extra: tuple = (),
+        mask: bool = True,
     ) -> DataFrame:
         """The one snapshot scan every read path builds on: LOGICAL
         columns in schema order over ``files`` (``{rel_path: add}``,
         default every add of ``snap`` — the 4-tuple :meth:`_snapshot`
-        returns), without the rows deletion vectors mask.
+        returns), without the rows deletion vectors mask (all rows when
+        not ``mask``).
 
         Shape: one ``spark.read.schema(phys).parquet(*files)`` relation
         per partition tuple (an unpartitioned table gets exactly one),
@@ -2651,15 +2637,16 @@ class DeltaLogTable:
         partitionValues are keyed by physical name in both mapped
         modes.
 
-        ``_fp`` (the file's absolute path, as the driver keys it) and
-        ``_ri`` (the row's index in that file) come from ``_metadata``
-        when the caller asks (``with_fp``) or the DVs are too big to
-        mask inline; :meth:`_mask_dvs` then drops the masked rows and a
-        final ``drop`` removes the columns the caller did not ask for.
-        Small DVs without ``with_fp`` are masked by the same
-        driver-built filter applied to each relation over its
-        ``_metadata`` columns. ``extra`` fields are read as they are
-        named in the files and kept after the logical columns.
+        Deletion vectors within :meth:`_dv_inline`'s bounds are decoded
+        on the driver into one filter per relation over its
+        ``_metadata`` columns (:meth:`_dv_mask_sql`). Above them the
+        DV-bearing files get relations of their own, carrying ``_fp``
+        and ``_ri``, which alone anti-join the executor-decoded
+        :meth:`_dv_deleted_df`. ``_fp`` (the file's absolute path, as
+        the driver keys it) and ``_ri`` (the row's index in that file)
+        are also projected when the caller asks (``with_fp``).
+        ``extra`` fields are read as they are named in the files and
+        kept after the logical columns.
 
         Building the plan as SQL text keeps the Py4J calls and plan
         analyses per relation fixed: a ``F.col(...).alias()`` per
@@ -2697,56 +2684,67 @@ class DeltaLogTable:
         else:
             phys = [T.StructField(pmap[f.name], f.dataType) for f in data_fields]
         read_schema = T.StructType(phys + list(extra))
-        groups: dict[tuple, list[str]] = {}
-        dvs_of: dict[tuple, list[tuple[str, dict]]] = {}
+        entries = []
         for p, info in sorted(files.items()):
-            full = os.path.abspath(os.path.join(self.path, p))
             pv = info["partitionValues"]
-            key = tuple(pv.get(pmap[c]) for c in part_cols)
-            groups.setdefault(key, []).append(full)
-            if info["deletionVector"]:
-                dvs_of.setdefault(key, []).append((full, info["deletionVector"]))
-        dv_files = [f for key in sorted(dvs_of, key=_pv_order) for f in dvs_of[key]]
-        # small DVs without _fp/_ri asked for: the driver-decoded filter
-        # goes on each relation itself, over the _metadata columns, so
-        # no column is projected only to be dropped again
-        inline = bool(dv_files) and not with_fp and self._dv_inline(dv_files)
-        fp_items = (
-            [f"{_FP_SQL} AS _fp", "_metadata.row_index AS _ri"]
-            if with_fp or (dv_files and not inline)
-            else []
-        )
+            entries.append(
+                (
+                    tuple(pv.get(pmap[c]) for c in part_cols),
+                    os.path.abspath(os.path.join(self.path, p)),
+                    info["deletionVector"] if mask else None,
+                )
+            )
+        dv_files = [(full, dv) for _, full, dv in entries if dv]
+        inline = self._dv_inline(dv_files)
+        # above the inline bound the DV-bearing files get relations of
+        # their own, so only their rows probe the anti-join
+        groups: dict[tuple, list[tuple[str, dict | None]]] = {}
+        for key, full, dv in entries:
+            groups.setdefault((key, bool(dv) and not inline), []).append((full, dv))
+        fp_items = [f"{_FP_SQL} AS _fp", "_metadata.row_index AS _ri"]
         # an unpartitioned table read under its logical names needs no
         # per-column projection: the relation already is the result
         as_is = not part_cols and all(mode == "id" or pmap[f.name] == f.name for f in data_fields)
-        out = None
-        for key in sorted(groups, key=_pv_order):
-            df = self.spark.read.schema(read_schema).parquet(*groups[key])
-            if inline and key in dvs_of:
-                df = df.filter(self._dv_mask_sql(dvs_of[key], _FP_SQL, "_metadata.row_index"))
+        plain, joined = [], []
+        for key, join in sorted(groups, key=lambda g: (_pv_order(g[0]), g[1])):
+            members = groups[(key, join)]
+            df = self.spark.read.schema(read_schema).parquet(*[f for f, _ in members])
+            dvs = [(f, dv) for f, dv in members if dv]
+            if dvs and inline:
+                df = df.filter(self._dv_mask_sql(dvs))
+            fps = fp_items if with_fp or join else []
             if as_is:
-                out = df.selectExpr("*", *fp_items) if fp_items else df
-                continue
-            pv = dict(zip(part_cols, key))
-            items = []
-            for f in schema.fields:
-                name = _sql_name(f.name)
-                if f.name in pv:
-                    # files omit partition columns: each group's value
-                    # (a string in the log) is cast to the column type
-                    v = pv[f.name]
-                    lit = "NULL" if v is None else _sql_str(str(v))
-                    items.append(f"CAST({lit} AS {f.dataType.simpleString()}) AS {name}")
-                elif mode == "id" or pmap[f.name] == f.name:
-                    items.append(name)
-                else:
-                    items.append(f"{_sql_name(pmap[f.name])} AS {name}")
-            df = df.selectExpr(*items, *[_sql_name(f.name) for f in extra], *fp_items)
+                df = df.selectExpr("*", *fps) if fps else df
+            else:
+                pv = dict(zip(part_cols, key))
+                items = []
+                for f in schema.fields:
+                    name = _sql_name(f.name)
+                    if f.name in pv:
+                        # files omit partition columns: each group's
+                        # value (a string in the log) is cast to the
+                        # column type
+                        v = pv[f.name]
+                        lit = "NULL" if v is None else _sql_str(str(v))
+                        items.append(f"CAST({lit} AS {f.dataType.simpleString()}) AS {name}")
+                    elif mode == "id" or pmap[f.name] == f.name:
+                        items.append(name)
+                    else:
+                        items.append(f"{_sql_name(pmap[f.name])} AS {name}")
+                df = df.selectExpr(*items, *[_sql_name(f.name) for f in extra], *fps)
+            (joined if join else plain).append(df)
+        out = None
+        for df in plain:
             out = df if out is None else out.union(df)
-        if dv_files and not inline:
-            out = self._mask_dvs(out, dv_files)
+        if joined:
+            big = joined[0]
+            for df in joined[1:]:
+                big = big.union(df)
+            big = big.join(self._dv_deleted_df(dv_files), ["_fp", "_ri"], "left_anti")
             if not with_fp:
-                out = out.drop("_fp", "_ri")
+                big = big.drop("_fp", "_ri")
+            # the USING join puts its keys first: match the rest by name
+            out = big if out is None else out.unionByName(big)
         return out
 
     def read(
@@ -4758,12 +4756,14 @@ class DeltaLogTable:
         # ONE distributed job computes every file's matched row indexes
         # over the candidate files' _scan with (_fp, _ri) — not a
         # one-job-per-file driver loop (N× scheduling + scan setup at N
-        # files). The scan masks rows a PRIOR deletion vector already
-        # deleted, so every matched row is newly deleted; the collect
-        # returns only the matched indexes (bounded by rows actually
-        # deleted — the same driver-side data every DV writer must hold
-        # to serialize the sidecar bitmaps).
-        scan = self._scan(snap, {p: adds[p] for p in cand}, with_fp=True) if cand else None
+        # files). The scan leaves deletion vectors unapplied: each
+        # file's encode reads its prior DV anyway and drops the indexes
+        # it already holds, so masking them in the scan would decode
+        # every DV twice. The collect returns only the matched indexes
+        # (bounded by rows actually deleted — the same driver-side data
+        # every DV writer must hold to serialize the sidecar bitmaps).
+        cand_files = {p: adds[p] for p in cand}
+        scan = self._scan(snap, cand_files, with_fp=True, mask=False) if cand else None
         # The bitmaps are ENCODED ON THE EXECUTORS (applyInPandas per
         # file): each file's matched indexes merge with its prior DV
         # and serialize to a RoaringBitmap payload in the task that
@@ -4786,18 +4786,22 @@ class DeltaLogTable:
 
             from ent_fins_lakehouse_spark.sources.roaring import roaring64_payload as rp
 
-            # the scan masked the prior DV's rows: every index is new
             fp = pdf["_fp"].iloc[0]
             idx = set(int(i) for i in pdf["_ri"])
             d = desc_of.get(fp)
             prior = set(_dv_row_indexes_of(table_path, json.loads(d))) if d else set()
+            new = idx - prior
+            if not new:
+                return pd.DataFrame(
+                    {"_fp": [], "payload": [], "card": [], "matched": []}
+                ).astype({"_fp": str, "card": "int64", "matched": "int64"})
             merged = sorted(idx | prior)
             return pd.DataFrame(
                 {
                     "_fp": [fp],
                     "payload": [rp(merged)],
                     "card": [len(merged)],
-                    "matched": [len(idx)],
+                    "matched": [len(new)],
                 }
             )
 
@@ -4814,19 +4818,18 @@ class DeltaLogTable:
         with ThreadPoolExecutor(max_workers=1) as cdc_pool:
             try:
                 if scan is not None:
-                    matched = scan.filter(predicate)
                     # change data feed: emit the newly-masked rows as explicit
-                    # cdc delete files — the predicate-matched scan, whose
-                    # rows a PRIOR DV masked are gone (those were emitted by
-                    # the commit that masked them). The cdc write depends only
-                    # on PRIOR table state, never on the encode job's result,
-                    # so it stages CONCURRENTLY with the bitmap encode (guide
-                    # §2.6, r15), in a worker that keeps the caller's job
-                    # group.
+                    # cdc delete files — the predicate-matched rows of the
+                    # MASKED scan, so rows a PRIOR DV masked are left out
+                    # (those were emitted by the commit that masked them).
+                    # The cdc write depends only on PRIOR table state, never
+                    # on the encode job's result, so it stages CONCURRENTLY
+                    # with the bitmap encode, in a worker that keeps the
+                    # caller's job group.
                     if self._cdf_on(_meta):
                         cdc_future = cdc_pool.submit(
                             inheritable_thread_target(self.spark)(self._stage_cdc),
-                            matched.selectExpr(
+                            self._scan(snap, cand_files).filter(predicate).selectExpr(
                                 *[_sql_name(f.name) for f in schema.fields],
                                 "'delete' AS _change_type",
                             ),
@@ -4835,7 +4838,8 @@ class DeltaLogTable:
                             _del_fids,
                         )
                     encoded = (
-                        matched.select("_fp", "_ri")
+                        scan.filter(predicate)
+                        .select("_fp", "_ri")
                         .groupBy("_fp")
                         .applyInPandas(
                             encode, "_fp string, payload binary, card long, matched long"
@@ -4963,7 +4967,7 @@ class DeltaLogTable:
         :meth:`update` / :meth:`merge` need to rewrite only touched
         files. It is the one :meth:`_scan` :meth:`read` builds, asked
         for ``_fp``/``_ri``: one relation per partition tuple, deletion
-        vectors masked by :meth:`_mask_dvs`, column-mapped tables read
+        vectors masked as :meth:`_scan` describes, column-mapped tables read
         through the mapping. The caller stages rewrites back under
         physical names (and field ids) via the returned ``pmap`` /
         ``fid_of``.

@@ -6757,11 +6757,16 @@ def test_iceberg_merge_releases_persisted_frames_on_failure(spark, tmp_path, mon
     assert jsc.getPersistentRDDs().size() == n0
 
 
-def test_delta_read_plan_py4j_calls_do_not_grow_per_column(spark, tmp_path):
+@pytest.mark.parametrize("layout", ["plain", "partitioned", "name_mapped"])
+def test_delta_read_plan_py4j_calls_do_not_grow_per_column(spark, tmp_path, layout):
     """Planning a snapshot read builds each scan as SQL text, so a
     column costs at most a couple of Py4J round trips (one list element
     of a ``selectExpr``), not the ~30 of a ``F.col(...).alias()``
-    projection. Both tables carry deletion vectors."""
+    projection. Every table carries deletion vectors; the partitioned
+    and the name-mapped (one column renamed) tables take the general
+    projection, one item per column plus partition literals. The
+    partitioned table has two partition tuples, hence two relations:
+    a column costs one item in each, exactly the bound."""
     from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
 
     client = spark.sparkContext._gateway._gateway_client
@@ -6788,7 +6793,14 @@ def test_delta_read_plan_py4j_calls_do_not_grow_per_column(spark, tmp_path):
     for ncols in (6, 60):
         cols = [f"CAST(id % {i + 2} AS INT) AS c{i}" for i in range(ncols - 1)]
         dl = DeltaLogTable(spark, str(tmp_path / f"w{ncols}"))
-        dl.write(spark.range(100).selectExpr("id", *cols).coalesce(2), mode="append")
+        df = spark.range(100).selectExpr("id", *cols).coalesce(2)
+        if layout == "partitioned":
+            dl.write(df, mode="append", partition_by=["c0"])
+        else:
+            dl.write(df, mode="append")
+        if layout == "name_mapped":
+            dl.enable_column_mapping()
+            dl.rename_column("c1", "r1")
         dl.delete("id % 7 = 0")
         dl.read()  # warm
         calls[ncols] = min(read_calls(dl) for _ in range(3))
