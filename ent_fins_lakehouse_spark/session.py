@@ -11,6 +11,10 @@ driver, but every setting is the one you would also want on a
 - Arrow on for every pandas interchange path
 - UTC session timezone so timestamp semantics match the DuckDB oracle
   and are portable across clusters
+- file lists of up to 1,024 paths are stat'ed on the driver: the table
+  logs already hold the sizes, and Spark's distributed listing job
+  (above its default of 32 paths) cost 0.34 s for 36 paths and 3.9 s for
+  1,024 on a 4-core host, against 0.03 s and 0.15 s on the driver
 """
 
 from __future__ import annotations
@@ -45,6 +49,7 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.schemaInference", "false")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

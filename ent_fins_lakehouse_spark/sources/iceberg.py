@@ -4180,13 +4180,11 @@ class IcebergTable:
                     .select(*on)
                     .distinct()
                 )
-            # upd_keys gates the update-delete pass, the updated-rows
-            # clause, and (with lineage) the row-id carryover — each a
-            # separate job re-running its target-semi-join subtree
+            # upd_keys gates the update-delete pass and the SET * images —
+            # each a separate job re-running its target-semi-join subtree
             _upd_consumers = (
                 (1 if do_update else 0)
                 + (1 if do_update and matched_update is None else 0)
-                + (1 if do_update and lineage and matched_update is None else 0)
             )
             if _upd_consumers >= 2:
                 upd_keys = upd_keys.persist()
@@ -4210,17 +4208,17 @@ class IcebergTable:
                 if do_update:
                     if matched_update is None:
                         # WHEN MATCHED THEN UPDATE SET * — the new row IS the
-                        # source row (source keys are unique among matched)
-                        part = source.join(upd_keys, on=on, how="left_semi")
+                        # source row (source keys are unique among matched),
+                        # once per matched target row: every one of them is
+                        # deleted above, so duplicate target keys all take
+                        # the update, each keeping its own _row_id
+                        part = (
+                            target.join(upd_keys, on=on, how="left_semi")
+                            .select(*on, *(["_row_id"] if lineage else []))
+                            .join(source, on=on, how="inner")
+                        )
                         if lineage:
-                            # multi-target-row matches collapse to one updated
-                            # row — it inherits the smallest matched _row_id
-                            tgt_ids = (
-                                target.join(upd_keys, on=on, how="left_semi")
-                                .groupBy(*on)
-                                .agg(F.min("_row_id").alias("_row_id"))
-                            )
-                            part = part.join(tgt_ids, on=on, how="left").withColumn(
+                            part = part.withColumn(
                                 "_last_updated_sequence_number",
                                 F.lit(seq_).cast("long"),
                             )

@@ -41,10 +41,12 @@ only the tiny JSON control plane is driver-side, as in Delta itself.
 
 from __future__ import annotations
 
+import datetime as _dt
 import json
 import os
 import time
 import uuid
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1613,6 +1615,68 @@ def _sql_str(s: str) -> str:
     return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
 
 
+_INTEGRAL_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _literal_key_type(dt) -> bool:
+    """Whether a key column of type ``dt`` round-trips exactly through
+    :func:`_key_str_sql` and :func:`_key_lit_sql`. Floating-point keys
+    (``-0.0``, ``NaN``), binary, collated strings and nested types do
+    not, and take the join plan."""
+    return isinstance(
+        dt,
+        _INTEGRAL_TYPES
+        + (T.DecimalType, T.DateType, T.TimestampType, T.TimestampNTZType, T.BooleanType),
+    ) or dt.simpleString() == "string"
+
+
+def _key_str_sql(name: str, dt) -> str:
+    """SQL rendering key column ``name`` as the string the driver holds:
+    Spark's own ``CAST(… AS STRING)``, except TIMESTAMP, which goes as
+    epoch microseconds so no session or process time zone (nor a DST
+    fold) enters the round trip."""
+    col = _sql_name(name)
+    if isinstance(dt, T.TimestampType):
+        return f"CAST(unix_micros({col}) AS STRING)"
+    return f"CAST({col} AS STRING)"
+
+
+def _key_lit_sql(v: str, dt) -> str:
+    """The typed SQL literal of a key string from :func:`_key_str_sql`."""
+    if isinstance(dt, T.TimestampType):
+        return f"timestamp_micros({int(v)})"
+    if isinstance(dt, _INTEGRAL_TYPES):
+        return f"CAST({int(v)} AS {dt.simpleString()})"
+    if isinstance(dt, T.StringType):
+        return _sql_str(v)
+    return f"CAST({_sql_str(v)} AS {dt.simpleString()})"
+
+
+def _keys_in_sql(on: list[str], types: dict, keys) -> str:
+    """SQL true for the rows whose ``on`` tuple is one of ``keys`` (key
+    strings, none NULL): one ``IN`` over typed literals, a row IN for
+    composite keys. Rows with a NULL key column are never in."""
+    if not keys:
+        return "false"
+    cols = [_sql_name(c) for c in on]
+    lits = [[_key_lit_sql(v, types[c]) for c, v in zip(on, k)] for k in keys]
+    if len(on) == 1:
+        return f"{cols[0]} IN ({', '.join(t[0] for t in lits)})"
+    # a row IN compares NULL fields as equal, so they are ruled out first
+    return (
+        " AND ".join(f"{c} IS NOT NULL" for c in cols)
+        + f" AND ({', '.join(cols)}) IN ({', '.join('(' + ', '.join(t) + ')' for t in lits)})"
+    )
+
+
+def _keys_not_in_sql(on: list[str], types: dict, keys) -> str:
+    """The complement of :func:`_keys_in_sql`, true for NULL keys too."""
+    if not keys:
+        return "true"
+    nulls = " OR ".join(f"{_sql_name(c)} IS NULL" for c in on)
+    return f"{nulls} OR NOT ({_keys_in_sql(on, types, keys)})"
+
+
 #: A scanned row's data-file path as the driver keys files
 #: (``os.path.abspath``), as SQL over a parquet relation.
 #: ``_metadata.file_path`` is a percent-encoded ``file:`` URI
@@ -1622,6 +1686,21 @@ _FP_SQL = (
     "url_decode(replace(regexp_replace(_metadata.file_path, '^file:/+', '/'), "
     "'+', '%2B'))"
 )
+
+
+@dataclass(frozen=True)
+class _MergeClauses:
+    """The clauses of one :meth:`DeltaLogTable.merge`, as its two plans
+    read them."""
+
+    update: bool  # WHEN MATCHED THEN UPDATE (SET *, or ``assignments``)
+    insert: bool  # WHEN NOT MATCHED THEN INSERT *
+    delete: bool  # WHEN MATCHED THEN DELETE
+    condition: str | None  # WHEN MATCHED AND <condition>, for update or delete
+    assignments: dict | None  # UPDATE SET col = expr; None is SET *
+    nmbs: bool  # WHEN NOT MATCHED BY SOURCE THEN DELETE
+    nmbs_condition: str | None
+    cdf: bool  # change data feed on: the plan also yields cdc rows
 
 
 def _pv_order(key: tuple) -> tuple:
@@ -2131,6 +2210,16 @@ class DeltaLogTable:
     #: against 3.1 s; at 166 files its generated code outgrew the JVM's
     #: 64 KB method limit and Spark fell back to interpreting it.
     DV_ISIN_MAX_FILES = 32
+
+    #: A MERGE source of at most this many rows takes the key-set plan
+    #: (:meth:`_merge_by_keys`): its key tuples go to the driver and
+    #: come back as ``IN`` literals, so attribution and rewrite run
+    #: without a join. Above it the two-pass join plan runs. Measured
+    #: on a 4-core host, warm upserts (80% updates) into a 20,000-row
+    #: table of 32 files, key-set vs join plan: 100 rows 0.79 vs 1.29 s,
+    #: 1,000 rows 1.07 vs 1.11 s, 2,000 rows 0.94 vs 1.15 s, 4,096 rows
+    #: 1.41 vs 1.33 s — planning the literal lists is what grows.
+    MERGE_KEYS_ISIN_MAX = 2048
 
     def _dv_inline(self, dv_files: list[tuple[str, dict]]) -> bool:
         """Whether :meth:`_scan` decodes these files' bitmaps on the
@@ -4721,14 +4810,15 @@ class DeltaLogTable:
         first use. Returns ``{"rows_deleted", "files_touched"}``.
 
         Scale shape: candidate files prune on add-action stats first;
-        matched row indexes are computed by ONE distributed job over
-        the surviving files via ``(_metadata.file_path, row_index)``;
-        each file's bitmap is merged with its prior DV and ENCODED ON
-        THE EXECUTORS (``applyInPandas`` per file), so the driver
-        receives compressed payloads — KBs per file — never one row
-        per deleted index. For mass deletes that touch most of a file,
-        rewriting beats a DV; that rewrite path is :class:`LakeTable`'s
-        delete.
+        matched row indexes are computed by ONE job over the surviving
+        files via ``(_metadata.file_path, row_index)``, and each file's
+        bitmap is merged with its prior DV. When the candidate files'
+        live rows (``numRecords`` less DV cardinality, from the log) are
+        at most :data:`DV_ISIN_MAX`, that job collects the ``(_fp,
+        _ri)`` pairs and the driver encodes the bitmaps; above it they
+        are ENCODED ON THE EXECUTORS (``applyInPandas`` per file), so
+        the driver receives compressed payloads — KBs per file — never
+        one row per deleted index.
         """
         import base64
         import struct
@@ -4764,13 +4854,26 @@ class DeltaLogTable:
         # every DV writer must hold to serialize the sidecar bitmaps).
         cand_files = {p: adds[p] for p in cand}
         scan = self._scan(snap, cand_files, with_fp=True, mask=False) if cand else None
-        # The bitmaps are ENCODED ON THE EXECUTORS (applyInPandas per
-        # file): each file's matched indexes merge with its prior DV
-        # and serialize to a RoaringBitmap payload in the task that
-        # holds them — only the compressed payloads (KBs per file, not
-        # one Python Row per deleted row) come back to the driver,
-        # which writes the sidecars and the commit. A mass delete of
-        # 10^7 rows ships ~a few MB of bitmap, not 10^7 driver rows.
+        # Each file's matched indexes merge with its prior DV and
+        # serialize to a RoaringBitmap payload. Above DV_ISIN_MAX live
+        # candidate rows that happens ON THE EXECUTORS (applyInPandas
+        # per file), in the task that holds them — only the compressed
+        # payloads (KBs per file, not one Python Row per deleted row)
+        # come back to the driver, which writes the sidecars and the
+        # commit: a mass delete of 10^7 rows ships ~a few MB of bitmap,
+        # not 10^7 driver rows. At or below it the driver encodes the
+        # collected (_fp, _ri) pairs itself, which spares the job a
+        # pandas worker. The bound comes from the log, so no job runs
+        # to learn it; a file without numRecords stats lifts it.
+        live_rows = 0
+        for info in cand_files.values():
+            try:
+                n_rec = int(json.loads(info.get("stats") or "{}")["numRecords"])
+            except (KeyError, TypeError, ValueError):
+                live_rows = None
+                break
+            live_rows += n_rec - int((info["deletionVector"] or {}).get("cardinality") or 0)
+        on_driver = live_rows is not None and live_rows <= self.DV_ISIN_MAX
         rel_by_full = {
             os.path.abspath(os.path.join(self.path, p)): p for p in adds
         }
@@ -4781,29 +4884,28 @@ class DeltaLogTable:
         }
         table_path = self.path
 
-        def encode(pdf):
-            import pandas as pd
-
+        def encode_file(fp: str, idx: set) -> dict | None:
+            # one file's merged bitmap, or None when every index is
+            # already in its prior DV
             from ent_fins_lakehouse_spark.sources.roaring import roaring64_payload as rp
 
-            fp = pdf["_fp"].iloc[0]
-            idx = set(int(i) for i in pdf["_ri"])
             d = desc_of.get(fp)
             prior = set(_dv_row_indexes_of(table_path, json.loads(d))) if d else set()
             new = idx - prior
             if not new:
+                return None
+            merged = sorted(idx | prior)
+            return {"_fp": fp, "payload": rp(merged), "card": len(merged), "matched": len(new)}
+
+        def encode(pdf):
+            import pandas as pd
+
+            r = encode_file(pdf["_fp"].iloc[0], set(int(i) for i in pdf["_ri"]))
+            if r is None:
                 return pd.DataFrame(
                     {"_fp": [], "payload": [], "card": [], "matched": []}
                 ).astype({"_fp": str, "card": "int64", "matched": "int64"})
-            merged = sorted(idx | prior)
-            return pd.DataFrame(
-                {
-                    "_fp": [fp],
-                    "payload": [rp(merged)],
-                    "card": [len(merged)],
-                    "matched": [len(new)],
-                }
-            )
+            return pd.DataFrame({k: [v] for k, v in r.items()})
 
         from concurrent.futures import ThreadPoolExecutor
 
@@ -4837,15 +4939,23 @@ class DeltaLogTable:
                             _del_pmap,
                             _del_fids,
                         )
-                    encoded = (
-                        scan.filter(predicate)
-                        .select("_fp", "_ri")
-                        .groupBy("_fp")
-                        .applyInPandas(
-                            encode, "_fp string, payload binary, card long, matched long"
+                    matched = scan.filter(predicate).select("_fp", "_ri")
+                    if on_driver:
+                        idx_of: dict[str, set] = {}
+                        for fp, ri in matched.collect():
+                            idx_of.setdefault(fp, set()).add(ri)
+                        encoded = [
+                            r for fp, idx in idx_of.items()
+                            if (r := encode_file(fp, idx)) is not None
+                        ]
+                    else:
+                        encoded = (
+                            matched.groupBy("_fp")
+                            .applyInPandas(
+                                encode, "_fp string, payload binary, card long, matched long"
+                            )
+                            .collect()
                         )
-                        .collect()
-                    )
 
                 new_adds: list[dict] = []
                 rows_deleted = 0
@@ -4991,6 +5101,7 @@ class DeltaLogTable:
         schema,
         part_cols: list[str],
         pmap: dict,
+        keys: list[tuple] | None = None,
     ) -> list[str] | None:
         """Merge-key data skipping: the data files whose add-action
         [min, max] stats on a merge-key column can OVERLAP the source's
@@ -5006,9 +5117,11 @@ class DeltaLogTable:
         by design), so it only runs once the table is big enough for
         a full scan to dominate that fixed job cost
         (``MERGE_PRUNE_MIN_BYTES``) — below the gate the scan is
-        cheaper than the extra pass. Returns abs data-file paths, or
-        None when pruning is not applicable (small table / no key
-        column with comparable stats)."""
+        cheaper than the extra pass. With ``keys`` (the source's key
+        tuples as :func:`_key_str_sql` strings, already on the driver)
+        the range comes from them and no job runs. Returns abs
+        data-file paths, or None when pruning is not applicable (small
+        table / no key column with comparable stats)."""
         total_bytes = sum(int(i.get("size") or 0) for i in adds.values())
         if total_bytes < MERGE_PRUNE_MIN_BYTES:
             return None
@@ -5025,10 +5138,21 @@ class DeltaLogTable:
         stats = self._file_stats_map(adds, schema, part_cols, pmap)
         if not any(c in st for st in stats.values() for c in comparable):
             return None  # no file carries key stats — nothing to prune
-        aggs = []
-        for c in comparable:
-            aggs += [F.min(c).alias(f"_mn_{c}"), F.max(c).alias(f"_mx_{c}")]
-        row = source.agg(*aggs).collect()[0].asDict()
+        if keys is None:
+            aggs = []
+            for c in comparable:
+                aggs += [F.min(c).alias(f"_mn_{c}"), F.max(c).alias(f"_mx_{c}")]
+            row = source.agg(*aggs).collect()[0].asDict()
+        else:
+            row = {}
+            for c in comparable:
+                i = on.index(c)
+                # the key-set plan admits integral and DATE keys only here
+                # (no floats); 'yyyy-MM-dd' orders as the dates do
+                conv = int if isinstance(types[c], _INTEGRAL_TYPES) else _dt.date.fromisoformat
+                vals = [conv(k[i]) for k in keys if k[i] is not None]
+                row[f"_mn_{c}"] = min(vals, default=None)
+                row[f"_mx_{c}"] = max(vals, default=None)
         rng: dict[str, tuple] = {}
         for c in comparable:
             lo, hi = row[f"_mn_{c}"], row[f"_mx_{c}"]
@@ -5241,22 +5365,25 @@ class DeltaLogTable:
         accepts a source carrying just the ``on`` columns, the
         delete-feed shape view maintenance produces).
 
-        Physical shape: two Spark passes over the touched data. The
-        attribution pass joins the key-range-pruned, DV-masked scan
-        (:meth:`_read_with_fp`, rows carry ``_fp``) with the source's
-        per-key row counts and collects, per file, the largest count
-        among its matched keys: the touched-file list and the
-        duplicate-source-key refusal come from one action. The rewrite
-        pass joins the touched files' rows with the source once (full
-        outer when inserts are possible, else left); every clause is a
-        ``when`` over matched / target-only / source-only markers, and
-        with change data feed on, the same joined rows (persisted once)
-        also yield the cdc pre/post-image, delete and insert rows.
-        Touched files are rewritten (``remove``+``add`` actions),
-        untouched ones keep their ``add``. Each matched target row is
-        updated on its own, so duplicate target keys all take the
-        update (delta-spark's semantics). Joins are Spark-planned — AQE
-        picks broadcast when the source is small.
+        Physical shape: the source is persisted and its key tuples are
+        collected to the driver in one job (:meth:`_merge_source_keys`).
+        A source of at most :data:`MERGE_KEYS_ISIN_MAX` rows then takes
+        the key-set plan (:meth:`_merge_by_keys`): one collect of
+        ``(_fp, key)`` over the DV-masked scan filtered by an ``IN``
+        over the keys gives the touched files, the matched keys and the
+        duplicate-key refusal, and one write stages the touched files'
+        unmatched rows, the new images and the inserts — no join, no
+        shuffle, unless a conditional or expression update, a
+        conditional delete or a duplicate target key asks for a join of
+        the matched rows alone. A larger source takes two joins
+        (:meth:`_merge_by_join`): an attribution join of the scan with
+        the source's per-key counts, then one rewrite join of the
+        touched files' rows with the source. Touched files are
+        rewritten (``remove``+``add`` actions), untouched ones keep
+        their ``add``; with change data feed on, the same plans yield
+        the cdc pre/post-image, delete and insert rows. Each matched
+        target row is updated on its own, so duplicate target keys all
+        take the update (delta-spark's semantics).
         Returns ``{"files_rewritten"}``.
 
         ``with_schema_evolution=True`` (delta-spark's
@@ -5359,7 +5486,7 @@ class DeltaLogTable:
                 raise ValueError("UPDATE SET cannot reassign MERGE key columns")
         delete_only = matched_delete and not when_not_matched_insert_all
         # The full-row source (Δ feed) is read by the constraint check,
-        # the key-range pruning, the attribution pass and the rewrite —
+        # the key collection, the attribution pass and the rewrite —
         # persist it so a non-trivial feed (a CDF read subtree) is
         # computed once and a nondeterministic source cannot diverge
         # between passes (delta-spark materializes its merge source for
@@ -5368,6 +5495,16 @@ class DeltaLogTable:
         source = source.select(
             *(on if delete_only else [f.name for f in schema.fields])
         )
+        cl = _MergeClauses(
+            update=do_update,
+            insert=when_not_matched_insert_all,
+            delete=matched_delete,
+            condition=matched_condition if (do_update or matched_delete) else None,
+            assignments=matched_update,
+            nmbs=not_matched_by_source_delete,
+            nmbs_condition=not_matched_by_source_condition,
+            cdf=self._cdf_on(_meta),
+        )
         persisted: list[DataFrame] = []
         if not delete_only:
             source = source.persist()
@@ -5375,166 +5512,20 @@ class DeltaLogTable:
         try:
             if not delete_only:
                 self._enforce_constraints(source, "merge")
-            # merge-key data skipping: restrict the scan to files whose
-            # stats ranges can hold a source key. Sound for every clause but
-            # NOT MATCHED BY SOURCE, which must see every file.
-            if not not_matched_by_source_delete:
-                _cand = self._merge_candidate_files(
-                    source, on, adds, schema, part_cols, pmap
+            skeys = self._merge_source_keys(source, on, want)
+            if skeys is not None:
+                plan = self._merge_by_keys(
+                    df, source, skeys, on, schema, adds, part_cols, rel_of, pmap, cl
                 )
-                if _cand is not None and len(_cand) < len(rel_of):
-                    df = self._only_files(df, sorted(_cand))
-            # Pass 1, attribution: ONE action joins the (pruned, DV-masked)
-            # scan with the source's per-key row counts and returns, per
-            # touched file, the largest count among its matched keys — the
-            # touched-file list AND the duplicate check in one job set.
-            per_file = None
-            if do_update or not not_matched_by_source_delete:
-                per_file = (
-                    df.join(source.groupBy(*on).agg(F.count(F.lit(1)).alias("_n")), on=on)
-                    .groupBy("_fp")
-                    .agg(F.max("_n").alias("_n"))
-                    .collect()
+            else:
+                plan = self._merge_by_join(
+                    df, source, on, schema, adds, part_cols, rel_of, pmap, cl, persisted
                 )
-            src_dups = per_file is None or any(r["_n"] > 1 for r in per_file)
-            if do_update and src_dups:
-                # Delta errors when one target row matches multiple source
-                # rows (nondeterministic update); name the key
-                dup = (
-                    source.groupBy(*on)
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .select(*on)
-                    .join(df.select(*on), on=on, how="left_semi")
-                    .limit(1)
-                    .collect()
-                )
-                raise ValueError(
-                    f"MERGE source has multiple rows for key "
-                    f"{dup[0].asDict()} matching the target — "
-                    "dedup the source change feed before merging"
-                )
-            touched = (
-                sorted(rel_of)  # any file may hold unmatched rows
-                if not_matched_by_source_delete
-                else sorted(r["_fp"] for r in per_file)
-            )
-            if not touched and not when_not_matched_insert_all:
+            if plan is None:
                 return {"files_rewritten": 0}
-            # Pass 2, rewrite: ONE join of the touched files' rows with the
-            # source (full outer when source-only rows insert, else left);
-            # the markers say matched / target-only / source-only and each
-            # clause is a `when` over them.
-            tdf = self._only_files(df, touched) if touched else df.filter(F.lit(False))
-            if not_matched_by_source_delete and not_matched_by_source_condition:
-                # evaluated over target rows alone, where unqualified names
-                # cannot collide with source columns
-                tdf = tdf.alias("t").withColumn(
-                    "_nmbs_hit",
-                    F.coalesce(F.expr(not_matched_by_source_condition), F.lit(False)),
-                )
-            j = tdf.withColumn("_in_t", F.lit(True)).alias("t").join(
-                source.withColumn("_in_s", F.lit(True)).alias("s"),
-                on=on,
-                how="full_outer" if when_not_matched_insert_all else "left",
-            )
-            in_t, in_s = F.col("_in_t").isNotNull(), F.col("_in_s").isNotNull()
-            hit = in_t & in_s
-            if matched_condition and (do_update or matched_delete):
-                hit = hit & F.coalesce(F.expr(matched_condition), F.lit(False))
-            upd = hit if do_update else F.lit(False)
-            dele = hit if matched_delete else F.lit(False)
-            if not_matched_by_source_delete:
-                nm = in_t & ~in_s
-                if not_matched_by_source_condition:
-                    nm = nm & F.col("_nmbs_hit")
-                dele = dele | nm
-            ins = (~in_t & in_s) if when_not_matched_insert_all else F.lit(False)
-            t_row = in_t
-            if src_dups:
-                # no update clause, so duplicate source keys may match: a
-                # target row then appears once per matching source row —
-                # keep its first copy, deleted if ANY copy says so
-                from pyspark.sql import Window
-
-                w = Window.partitionBy(*on, "_fp", "_ri")
-                t_row = in_t & (F.row_number().over(w.orderBy("_ri")) == 1)
-                dele = F.max(dele.cast("int")).over(w) == 1
-
-            def post(f: T.StructField):
-                c = f.name
-                if c in on:
-                    return F.col(c)
-                if matched_update is not None:
-                    new = (
-                        F.expr(matched_update[c]).cast(f.dataType)
-                        if c in matched_update
-                        else F.col(f"t.{c}")
-                    )
-                else:
-                    new = F.col(f"s.{c}") if do_update else None
-                e = F.when(ins, F.col(f"s.{c}")) if when_not_matched_insert_all else None
-                if do_update:
-                    e = F.when(upd, new) if e is None else e.when(upd, new)
-                return (F.col(f"t.{c}") if e is None else e.otherwise(F.col(f"t.{c}"))).alias(c)
-
-            cols = [f.name for f in schema.fields]
-            _cdf = self._cdf_on(_meta)
-            flagged = j.select(
-                *[post(f) for f in schema.fields],
-                *(
-                    [
-                        (
-                            F.col(c)
-                            if c in on
-                            else F.when(ins, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}"))
-                            if when_not_matched_insert_all
-                            else F.col(f"t.{c}")
-                        ).alias(f"_pre_{c}")
-                        for c in cols
-                    ]
-                    if _cdf
-                    else []
-                ),
-                ((t_row & ~dele) | ins).alias("_keep"),
-                (t_row & upd).alias("_upd"),
-                (t_row & dele).alias("_del"),
-                ins.alias("_ins"),
-            )
-            cdc_df: DataFrame | None = None
-            if _cdf:
-                # change data feed from the same joined rows: a pre-image
-                # (target values, or the source row for an insert) and, for
-                # updates, a post-image, labeled per spec
-                flagged = flagged.persist()
-                persisted.append(flagged)
-                kind = (
-                    F.when(F.col("_upd"), "update_preimage")
-                    .when(F.col("_del"), "delete")
-                    .when(F.col("_ins"), "insert")
-                )
-                cdc_df = (
-                    flagged.select(
-                        F.explode(
-                            F.array(
-                                F.struct(
-                                    *[F.col(f"_pre_{c}").alias(c) for c in cols],
-                                    kind.alias("_change_type"),
-                                ),
-                                F.struct(
-                                    *[F.col(c) for c in cols],
-                                    F.when(F.col("_upd"), "update_postimage").alias(
-                                        "_change_type"
-                                    ),
-                                ),
-                            )
-                        ).alias("_c")
-                    )
-                    .select("_c.*")
-                    .filter(F.col("_change_type").isNotNull())
-                )
+            touched, cdc_df, add_df = plan
             cdc_actions, new_adds = self._stage_cdc_and_adds(
-                cdc_df, flagged.filter("_keep").select(*cols), part_cols, pmap, fid_of
+                cdc_df, add_df, part_cols, pmap, fid_of
             )
         finally:
             # released on every path, a refusal or a failed stage too
@@ -5592,6 +5583,425 @@ class DeltaLogTable:
             actions, "merge", base=_planned_at
         )
         return {"files_rewritten": len(touched)}
+
+    def _merge_source_keys(
+        self, source: DataFrame, on: list[str], types: dict
+    ) -> list[tuple] | None:
+        """The MERGE source's ``on`` tuples, one per source row, as the
+        :func:`_key_str_sql` strings (None for NULL) — when the source
+        has at most :data:`MERGE_KEYS_ISIN_MAX` rows and every key type
+        round-trips as a literal (:func:`_literal_key_type`); else None,
+        and the join plan runs. One job, whose first run also fills the
+        persisted source: each partition passes at most
+        ``MERGE_KEYS_ISIN_MAX + 1`` rows (a row's record number within
+        its partition is the low 33 bits of
+        ``monotonically_increasing_id``), so a large source ships a
+        bounded list before it is turned away."""
+        if not all(_literal_key_type(types[c]) for c in on):
+            return None
+        n = self.MERGE_KEYS_ISIN_MAX
+        rows = (
+            source.selectExpr(*[_key_str_sql(c, types[c]) for c in on])
+            .filter(f"(monotonically_increasing_id() & {(1 << 33) - 1}) <= {n}")
+            .collect()
+        )
+        return [tuple(r) for r in rows] if len(rows) <= n else None
+
+    def _merge_by_keys(
+        self,
+        df: DataFrame,
+        source: DataFrame,
+        skeys: list[tuple],
+        on: list[str],
+        schema,
+        adds: dict,
+        part_cols: list[str],
+        rel_of: dict,
+        pmap: dict,
+        cl: "_MergeClauses",
+    ) -> tuple[list[str], DataFrame | None, DataFrame] | None:
+        """MERGE plan of a small source whose key tuples ``skeys`` the
+        driver holds (:meth:`_merge_source_keys`). Each key set enters
+        the plan as one ``IN`` over typed literals, so no clause but a
+        conditional or expression update, a conditional delete or a
+        duplicate target key joins, and that join only sees the matched
+        rows of both sides.
+
+        Attribution is ONE collect of ``(_fp, key)`` over the DV-masked,
+        key-range-pruned scan filtered to the source's keys: the touched
+        files, the matched keys, each key's target row count and the
+        duplicate-source-key refusal. The rewrite is ONE union written
+        by the caller: the touched files' rows whose key did not match
+        (NULL keys included), the new images or survivors of the
+        matched rows, and the source rows whose key did not match. For
+        UPDATE SET * with one target row per key the new images are the
+        matched source rows themselves. Change-data rows come from the
+        same parts. Returns ``(touched, cdc_df, add_df)``, or None when
+        nothing is to commit."""
+        import math
+        from functools import reduce
+
+        names = [f.name for f in schema.fields]
+        types = {f.name: f.dataType for f in schema.fields}
+        cols = [_sql_name(c) for c in names]
+        src_n = Counter(skeys)
+        live = sorted(k for k in src_n if None not in k)  # a NULL key matches nothing
+        hits = []
+        if live:
+            scan = df
+            if not cl.nmbs:  # NOT MATCHED BY SOURCE must see every file
+                cand = self._merge_candidate_files(
+                    source, on, adds, schema, part_cols, pmap, keys=live
+                )
+                if cand is not None and len(cand) < len(rel_of):
+                    scan = self._only_files(scan, sorted(cand))
+            hits = (
+                scan.filter(_keys_in_sql(on, types, live))
+                .selectExpr("_fp", *[_key_str_sql(c, types[c]) for c in on])
+                .collect()
+            )
+        t_n = Counter(tuple(r)[1:] for r in hits)
+        matched = sorted(t_n)
+        if cl.update:
+            dup = next((k for k in matched if src_n[k] > 1), None)
+            if dup is not None:
+                # Delta errors when one target row matches multiple source
+                # rows (nondeterministic update); name the key
+                raise ValueError(
+                    f"MERGE source has multiple rows for key {dict(zip(on, dup))} "
+                    "matching the target — dedup the source change feed before merging"
+                )
+        rewrite = cl.update or cl.delete
+        if cl.nmbs:
+            touched = sorted(rel_of)  # any file may hold unmatched rows
+        else:
+            touched = sorted({r[0] for r in hits}) if rewrite else []
+        if not touched and not cl.insert:
+            return None
+
+        data: list[DataFrame] = []
+        cdc: list[DataFrame] = []
+
+        def emit(d: DataFrame, change: str | None = None, keep: bool = True) -> None:
+            # d holds the logical columns in schema order
+            if keep:
+                data.append(d)
+            if cl.cdf and change:
+                cdc.append(d.selectExpr("*", f"'{change}' AS _change_type"))
+
+        def emit_flagged(d: DataFrame) -> None:
+            # d adds each row's own _keep flag and change type (_ct)
+            data.append(d.filter("_keep").selectExpr(*cols))
+            if cl.cdf:
+                cdc.append(d.filter("_ct IS NOT NULL").selectExpr(*cols, "_ct AS _change_type"))
+
+        in_m = _keys_in_sql(on, types, matched)
+        set_all = (
+            cl.update and cl.assignments is None and not cl.condition
+            and all(n == 1 for n in t_n.values())
+        )
+        if touched:
+            tdf = self._only_files(df, touched)
+            rest = tdf.filter(_keys_not_in_sql(on, types, matched)).alias("t")
+            if cl.nmbs:
+                gone = (
+                    f"coalesce({cl.nmbs_condition}, false)" if cl.nmbs_condition else "true"
+                )
+                emit_flagged(
+                    rest.selectExpr(
+                        *cols, f"NOT ({gone}) AS _keep", f"CASE WHEN {gone} THEN 'delete' END AS _ct"
+                    )
+                )
+            else:
+                emit(rest.selectExpr(*cols))
+            mt = tdf.filter(in_m)
+            if not matched:
+                pass
+            elif not rewrite:  # NOT MATCHED BY SOURCE alone: matched rows stay
+                emit(mt.selectExpr(*cols))
+            elif cl.delete and not cl.condition:
+                emit(mt.selectExpr(*cols), "delete", keep=False)
+            elif set_all:
+                emit(mt.selectExpr(*cols), "update_preimage", keep=False)
+            else:
+                emit_flagged(self._merge_matched_join(mt, source.filter(in_m), on, schema, cl, any(
+                    src_n[k] > 1 for k in matched
+                )))
+        if set_all and cl.insert and not cl.cdf:
+            emit(source.selectExpr(*cols))  # every row is a new image or an insert
+        else:
+            if set_all:
+                emit(source.filter(in_m).selectExpr(*cols), "update_postimage")
+            if cl.insert:
+                emit(
+                    source.filter(_keys_not_in_sql(on, types, matched)).selectExpr(*cols),
+                    "insert",
+                )
+        # as many files as optimize()'s default target size asks for
+        n_out = max(
+            1,
+            math.ceil(
+                sum(int(adds[rel_of[fp]].get("size") or 0) for fp in touched)
+                / (64 * 1024 * 1024)
+            ),
+        )
+        return (
+            touched,
+            reduce(DataFrame.union, cdc) if cdc else None,
+            reduce(DataFrame.union, data).coalesce(n_out),
+        )
+
+    @staticmethod
+    def _merge_matched_join(
+        mt: DataFrame, ms: DataFrame, on: list[str], schema, cl: "_MergeClauses", src_dups: bool
+    ) -> DataFrame:
+        """The matched target rows ``mt`` (carrying ``_fp``/``_ri``)
+        joined with the matched source rows ``ms`` for a conditional or
+        expression update, a conditional delete, or SET * over duplicate
+        target keys: each target row once, with its ``_keep`` flag and
+        change type (``_ct``), plus the new image for an update."""
+        names = [f.name for f in schema.fields]
+        j = mt.alias("t").join(ms.alias("s"), on=on, how="inner")
+        hit = F.coalesce(F.expr(cl.condition), F.lit(False)) if cl.condition else F.lit(True)
+        old = [(F.col(c) if c in on else F.col(f"t.{c}")).alias(c) for c in names]
+        if not cl.update:
+            first = F.lit(True)
+            if src_dups:
+                # no update clause, so duplicate source keys may match: a
+                # target row then appears once per matching source row —
+                # keep its first copy, deleted if ANY copy says so
+                from pyspark.sql import Window
+
+                w = Window.partitionBy("_fp", "_ri")
+                first = F.row_number().over(w.orderBy("_ri")) == 1
+                hit = F.max(hit.cast("int")).over(w) == 1
+            return (
+                j.select(
+                    *old, (~hit).alias("_keep"), F.when(hit, "delete").alias("_ct"),
+                    first.alias("_first"),
+                )
+                .filter("_first")
+                .drop("_first")
+            )
+
+        def new(f: T.StructField):
+            c = f.name
+            if c in on:
+                return F.col(c)
+            if cl.assignments is None:
+                return F.col(f"s.{c}")
+            if c in cl.assignments:
+                return F.expr(cl.assignments[c]).cast(f.dataType)
+            return F.col(f"t.{c}")
+
+        # the pre-image (kept as it is when the condition fails) and the
+        # new image (dropped then) of every matched target row
+        return j.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        *old, (~hit).alias("_keep"), F.when(hit, "update_preimage").alias("_ct")
+                    ),
+                    F.struct(
+                        *[new(f).alias(f.name) for f in schema.fields],
+                        hit.alias("_keep"),
+                        F.when(hit, "update_postimage").alias("_ct"),
+                    ),
+                )
+            ).alias("_r")
+        ).select("_r.*").filter("_keep OR _ct IS NOT NULL")
+
+    def _merge_by_join(
+        self,
+        df: DataFrame,
+        source: DataFrame,
+        on: list[str],
+        schema,
+        adds: dict,
+        part_cols: list[str],
+        rel_of: dict,
+        pmap: dict,
+        cl: "_MergeClauses",
+        persisted: list[DataFrame],
+    ) -> tuple[list[str], DataFrame | None, DataFrame] | None:
+        """MERGE plan of a source too large (or keyed by types too loose)
+        for :meth:`_merge_by_keys`: two Spark passes over the touched
+        data. The attribution pass joins the key-range-pruned, DV-masked
+        scan with the source's per-key row counts and collects, per
+        file, the largest count among its matched keys: the touched-file
+        list and the duplicate-source-key refusal come from one action.
+        The rewrite joins the touched files' rows with the source once
+        (full outer when inserts are possible, else left); every clause
+        is a ``when`` over matched / target-only / source-only markers,
+        and with change data feed on, the same joined rows (persisted
+        once, into ``persisted``) also yield the cdc rows. Returns
+        ``(touched, cdc_df, add_df)``, or None when nothing is to
+        commit."""
+        do_update, when_not_matched_insert_all = cl.update, cl.insert
+        matched_condition, matched_update, matched_delete = (
+            cl.condition, cl.assignments, cl.delete
+        )
+        not_matched_by_source_delete = cl.nmbs
+        not_matched_by_source_condition = cl.nmbs_condition
+        # merge-key data skipping: restrict the scan to files whose
+        # stats ranges can hold a source key. Sound for every clause but
+        # NOT MATCHED BY SOURCE, which must see every file.
+        if not not_matched_by_source_delete:
+            _cand = self._merge_candidate_files(
+                source, on, adds, schema, part_cols, pmap
+            )
+            if _cand is not None and len(_cand) < len(rel_of):
+                df = self._only_files(df, sorted(_cand))
+        # Pass 1, attribution: ONE action joins the (pruned, DV-masked)
+        # scan with the source's per-key row counts and returns, per
+        # touched file, the largest count among its matched keys — the
+        # touched-file list AND the duplicate check in one job set.
+        per_file = None
+        if do_update or not not_matched_by_source_delete:
+            per_file = (
+                df.join(source.groupBy(*on).agg(F.count(F.lit(1)).alias("_n")), on=on)
+                .groupBy("_fp")
+                .agg(F.max("_n").alias("_n"))
+                .collect()
+            )
+        src_dups = per_file is None or any(r["_n"] > 1 for r in per_file)
+        if do_update and src_dups:
+            # Delta errors when one target row matches multiple source
+            # rows (nondeterministic update); name the key
+            dup = (
+                source.groupBy(*on)
+                .count()
+                .filter(F.col("count") > 1)
+                .select(*on)
+                .join(df.select(*on), on=on, how="left_semi")
+                .limit(1)
+                .collect()
+            )
+            raise ValueError(
+                f"MERGE source has multiple rows for key "
+                f"{dup[0].asDict()} matching the target — "
+                "dedup the source change feed before merging"
+            )
+        touched = (
+            sorted(rel_of)  # any file may hold unmatched rows
+            if not_matched_by_source_delete
+            else sorted(r["_fp"] for r in per_file)
+        )
+        if not touched and not when_not_matched_insert_all:
+            return None
+        # Pass 2, rewrite: ONE join of the touched files' rows with the
+        # source (full outer when source-only rows insert, else left);
+        # the markers say matched / target-only / source-only and each
+        # clause is a `when` over them.
+        tdf = self._only_files(df, touched) if touched else df.filter(F.lit(False))
+        if not_matched_by_source_delete and not_matched_by_source_condition:
+            # evaluated over target rows alone, where unqualified names
+            # cannot collide with source columns
+            tdf = tdf.alias("t").withColumn(
+                "_nmbs_hit",
+                F.coalesce(F.expr(not_matched_by_source_condition), F.lit(False)),
+            )
+        j = tdf.withColumn("_in_t", F.lit(True)).alias("t").join(
+            source.withColumn("_in_s", F.lit(True)).alias("s"),
+            on=on,
+            how="full_outer" if when_not_matched_insert_all else "left",
+        )
+        in_t, in_s = F.col("_in_t").isNotNull(), F.col("_in_s").isNotNull()
+        hit = in_t & in_s
+        if matched_condition and (do_update or matched_delete):
+            hit = hit & F.coalesce(F.expr(matched_condition), F.lit(False))
+        upd = hit if do_update else F.lit(False)
+        dele = hit if matched_delete else F.lit(False)
+        if not_matched_by_source_delete:
+            nm = in_t & ~in_s
+            if not_matched_by_source_condition:
+                nm = nm & F.col("_nmbs_hit")
+            dele = dele | nm
+        ins = (~in_t & in_s) if when_not_matched_insert_all else F.lit(False)
+        t_row = in_t
+        if src_dups:
+            # no update clause, so duplicate source keys may match: a
+            # target row then appears once per matching source row —
+            # keep its first copy, deleted if ANY copy says so
+            from pyspark.sql import Window
+
+            w = Window.partitionBy(*on, "_fp", "_ri")
+            t_row = in_t & (F.row_number().over(w.orderBy("_ri")) == 1)
+            dele = F.max(dele.cast("int")).over(w) == 1
+
+        def post(f: T.StructField):
+            c = f.name
+            if c in on:
+                return F.col(c)
+            if matched_update is not None:
+                new = (
+                    F.expr(matched_update[c]).cast(f.dataType)
+                    if c in matched_update
+                    else F.col(f"t.{c}")
+                )
+            else:
+                new = F.col(f"s.{c}") if do_update else None
+            e = F.when(ins, F.col(f"s.{c}")) if when_not_matched_insert_all else None
+            if do_update:
+                e = F.when(upd, new) if e is None else e.when(upd, new)
+            return (F.col(f"t.{c}") if e is None else e.otherwise(F.col(f"t.{c}"))).alias(c)
+
+        cols = [f.name for f in schema.fields]
+        _cdf = cl.cdf
+        flagged = j.select(
+            *[post(f) for f in schema.fields],
+            *(
+                [
+                    (
+                        F.col(c)
+                        if c in on
+                        else F.when(ins, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}"))
+                        if when_not_matched_insert_all
+                        else F.col(f"t.{c}")
+                    ).alias(f"_pre_{c}")
+                    for c in cols
+                ]
+                if _cdf
+                else []
+            ),
+            ((t_row & ~dele) | ins).alias("_keep"),
+            (t_row & upd).alias("_upd"),
+            (t_row & dele).alias("_del"),
+            ins.alias("_ins"),
+        )
+        cdc_df: DataFrame | None = None
+        if _cdf:
+            # change data feed from the same joined rows: a pre-image
+            # (target values, or the source row for an insert) and, for
+            # updates, a post-image, labeled per spec
+            flagged = flagged.persist()
+            persisted.append(flagged)
+            kind = (
+                F.when(F.col("_upd"), "update_preimage")
+                .when(F.col("_del"), "delete")
+                .when(F.col("_ins"), "insert")
+            )
+            cdc_df = (
+                flagged.select(
+                    F.explode(
+                        F.array(
+                            F.struct(
+                                *[F.col(f"_pre_{c}").alias(c) for c in cols],
+                                kind.alias("_change_type"),
+                            ),
+                            F.struct(
+                                *[F.col(c) for c in cols],
+                                F.when(F.col("_upd"), "update_postimage").alias(
+                                    "_change_type"
+                                ),
+                            ),
+                        )
+                    ).alias("_c")
+                )
+                .select("_c.*")
+                .filter(F.col("_change_type").isNotNull())
+            )
+        return touched, cdc_df, flagged.filter("_keep").select(*cols)
 
     def restore(self, version: int) -> dict:
         """RESTORE TABLE … TO VERSION AS OF in the PUBLIC log format

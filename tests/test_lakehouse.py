@@ -6521,41 +6521,54 @@ def test_delta_merge_on_dv_table_jobs_stay_in_caller_group(spark, tmp_path, monk
 def test_delta_delete_cdc_failure_leaves_no_debris(spark, tmp_path, monkeypatch):
     """A CDF delete whose bitmap-encode job fails must not leave the
     concurrently staged ``_change_data/`` files or its staging pool's
-    thread behind."""
+    thread behind — whether the bitmaps are encoded on the executors
+    or, for a small delete, on the driver."""
     import threading
 
     from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
 
     DataFrame = type(spark.range(1))
-    td = str(tmp_path / "cdcfail")
-    dl = DeltaLogTable(spark, td)
-    dl.write(spark.createDataFrame([(i, float(i)) for i in range(20)], "id BIGINT, x DOUBLE"))
-    dl.set_property("delta.enableChangeDataFeed", "true")
-    v0 = dl.latest_version()
     orig_collect = DataFrame.collect
 
-    def failing_collect(self):
-        if "FlatMapGroupsInPandas" in self._jdf.queryExecution().logical().toString():
-            raise RuntimeError("bitmap encode failed")
-        return orig_collect(self)
+    def executor_encode(df):
+        return "FlatMapGroupsInPandas" in df._jdf.queryExecution().logical().toString()
 
-    monkeypatch.setattr(DataFrame, "collect", failing_collect)
-    before = set(threading.enumerate())
-    with pytest.raises(RuntimeError, match="bitmap encode failed"):
-        dl.delete("id < 5")
-    monkeypatch.undo()
-    left = [
-        t for t in threading.enumerate()
-        if t not in before and t.name.startswith("ThreadPoolExecutor")
-    ]
-    assert not left, left
-    cdc_dir = os.path.join(td, "_change_data")
-    debris = [
-        f for _, _, fs in os.walk(cdc_dir) for f in fs if f.endswith(".parquet")
-    ]
-    assert debris == []
-    assert dl.latest_version() == v0
-    assert dl.read().count() == 20
+    def driver_encode(df):
+        return df.columns == ["_fp", "_ri"]
+
+    for name, isin_max, is_encode in (
+        ("executor", 0, executor_encode),
+        ("driver", DeltaLogTable.DV_ISIN_MAX, driver_encode),
+    ):
+        td = str(tmp_path / name)
+        dl = DeltaLogTable(spark, td)
+        dl.write(spark.createDataFrame([(i, float(i)) for i in range(20)], "id BIGINT, x DOUBLE"))
+        dl.set_property("delta.enableChangeDataFeed", "true")
+        v0 = dl.latest_version()
+
+        def failing_collect(self, is_encode=is_encode):
+            if is_encode(self):
+                raise RuntimeError("bitmap encode failed")
+            return orig_collect(self)
+
+        monkeypatch.setattr(DeltaLogTable, "DV_ISIN_MAX", isin_max)
+        monkeypatch.setattr(DataFrame, "collect", failing_collect)
+        before = set(threading.enumerate())
+        with pytest.raises(RuntimeError, match="bitmap encode failed"):
+            dl.delete("id < 5")
+        monkeypatch.undo()
+        left = [
+            t for t in threading.enumerate()
+            if t not in before and t.name.startswith("ThreadPoolExecutor")
+        ]
+        assert not left, (name, left)
+        cdc_dir = os.path.join(td, "_change_data")
+        debris = [
+            f for _, _, fs in os.walk(cdc_dir) for f in fs if f.endswith(".parquet")
+        ]
+        assert debris == [], name
+        assert dl.latest_version() == v0
+        assert dl.read().count() == 20
 
 
 def test_delta_delete_keeps_cdc_files_when_checkpoint_fails_after_commit(
@@ -6805,3 +6818,259 @@ def test_delta_read_plan_py4j_calls_do_not_grow_per_column(spark, tmp_path, layo
         dl.read()  # warm
         calls[ncols] = min(read_calls(dl) for _ in range(3))
     assert (calls[60] - calls[6]) / 54 <= 2, calls
+
+
+# --------------------------- Delta MERGE: key-set plan and join plan
+
+
+def _merge_plan(monkeypatch, plan):
+    """Force one of ``DeltaLogTable.merge``'s two plans: ``"join"`` sets
+    ``MERGE_KEYS_ISIN_MAX`` to 0, so only an empty source takes the
+    key-set plan."""
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    if plan == "join":
+        monkeypatch.setattr(DeltaLogTable, "MERGE_KEYS_ISIN_MAX", 0)
+
+
+def test_delta_small_merge_runs_few_jobs_and_py4j_calls(spark, tmp_path):
+    """An upsert of 100 rows (80 updates, 20 inserts) into a 2,000-row
+    table of 36 files takes the key-set plan: at most 4 Spark jobs, all
+    in the caller's job group, and a bounded number of Py4J calls. The
+    join plan ran 9 jobs and about 2,700 calls for the same merge."""
+    import random
+
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    schema = "id STRING, grade STRING, amt DOUBLE, n BIGINT"
+    rng = random.Random(5)
+    base = [(f"id{i:05d}", rng.choice("ABCDEFG"), rng.random() * 1e4, i) for i in range(2000)]
+    dl = DeltaLogTable(spark, str(tmp_path / "t"))
+    for i in range(0, 2000, 223):  # 9 appends of 4 files each
+        dl.write(spark.createDataFrame(base[i:i + 223], schema).repartition(4), mode="append")
+    dl.delete("id IN ('id00003', 'id00004')")
+    assert len(dl._snapshot()[0]) == 36
+
+    def batch(k):
+        ups = [(f"id{rng.randrange(5, 2000):05d}", "Z", float(k), -1) for _ in range(80)]
+        ups = list({r[0]: r for r in ups}.values())
+        return ups + [(f"new{k}-{j}", "N", 0.0, j) for j in range(20)]
+
+    dl.merge(spark.createDataFrame(batch(0), schema), on=["id"])  # warm
+    rows = batch(1)
+    src = spark.createDataFrame(rows, schema)
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    orig = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):  # GC releases, not plan work
+            sent.append(command)
+        return orig(command, *args, **kwargs)
+
+    sc = spark.sparkContext
+    _, ungrouped0 = _jobs_by_group(sc, None)
+    sc.setJobGroup("small-merge", "upsert of 100 rows")
+    client.send_command = counting
+    try:
+        dl.merge(src, on=["id"])
+    finally:
+        del client.send_command
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    grouped, ungrouped = _jobs_by_group(sc, "small-merge")
+    assert 1 <= len(grouped) <= 4, sorted(grouped)
+    assert not ungrouped - ungrouped0, "jobs ran outside the caller's group"
+    assert len(sent) <= 300, len(sent)
+    got = {r["id"]: (r["grade"], r["n"]) for r in dl.read().collect()}
+    for r in rows:
+        assert got[r[0]] == (r[1], r[3])
+    assert len(got) == 1998 + 20 + 20
+
+
+def test_delta_merge_semantics_hold_on_the_join_plan(spark, tmp_path, monkeypatch):
+    """The Delta MERGE tests, which take the key-set plan, give the same
+    rows on the join plan (``MERGE_KEYS_ISIN_MAX`` = 0): duplicate target
+    rows, duplicate source keys without an update, DV tables, schema
+    evolution (also column-mapped), change data feed, update
+    expressions, key pruning and the release of persisted frames."""
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+    from tests import test_skipping
+
+    _merge_plan(monkeypatch, "join")
+
+    def no_key_plan(self, *args, **kwargs):
+        raise AssertionError("the key-set plan ran")
+
+    monkeypatch.setattr(DeltaLogTable, "_merge_by_keys", no_key_plan)
+    for fn in (
+        test_delta_merge_update_all_updates_every_duplicate_target_row,
+        test_delta_merge_duplicate_source_keys_without_update_keep_target_rows,
+        test_delta_log_merge_with_dv_and_clauses,
+        test_delta_log_merge_update_set_exprs,
+        test_delta_merge_with_schema_evolution,
+        test_delta_merge_schema_evolution_on_mapped_table,
+        test_delta_cdc_merge_delete_clause,
+        test_delta_merge_on_dv_table_jobs_stay_in_caller_group,
+        test_delta_merge_releases_persisted_frames_on_failure,
+        test_skipping.test_merge_cdf_emission_is_complete_under_key_pruning,
+    ):
+        path = tmp_path / fn.__name__
+        path.mkdir()
+        args = (spark, path)
+        with pytest.MonkeyPatch.context() as mp:
+            if "monkeypatch" in fn.__code__.co_varnames[: fn.__code__.co_argcount]:
+                args += (mp,)
+            fn(*args)
+
+
+@pytest.mark.parametrize("plan", ["keys", "join"])
+def test_delta_merge_keeps_null_key_target_rows(spark, tmp_path, monkeypatch, plan):
+    """A target row with a NULL key, in a file the MERGE rewrites,
+    matches nothing and survives; a NULL-key source row inserts."""
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    _merge_plan(monkeypatch, plan)
+    dl = DeltaLogTable(spark, str(tmp_path / "t"))
+    dl.write(
+        spark.createDataFrame([(None, "n"), (1, "a"), (2, "b")], "k INT, v STRING").coalesce(1),
+        mode="append",
+    )
+    res = dl.merge(
+        spark.createDataFrame([(1, "z"), (None, "m")], "k INT, v STRING"), on=["k"]
+    )
+    assert res["files_rewritten"] == 1
+    got = sorted(((r["k"] is None, r["k"] or 0), r["v"]) for r in dl.read().collect())
+    assert got == [((False, 1), "z"), ((False, 2), "b"), ((True, 0), "m"), ((True, 0), "n")]
+
+
+@pytest.mark.parametrize("plan", ["keys", "join"])
+def test_delta_merge_composite_key_with_null_component(spark, tmp_path, monkeypatch, plan):
+    """On a composite key, a tuple holding a NULL matches nothing: the
+    target row stays, the source row inserts, and full tuples match."""
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    _merge_plan(monkeypatch, plan)
+    dl = DeltaLogTable(spark, str(tmp_path / "t"))
+    dl.write(
+        spark.createDataFrame(
+            [(1, None, "x"), (1, 2, "y"), (2, 2, "w")], "a INT, b INT, v STRING"
+        ).coalesce(1),
+        mode="append",
+    )
+    dl.merge(
+        spark.createDataFrame([(1, None, "s"), (1, 2, "t"), (2, 1, "u")], "a INT, b INT, v STRING"),
+        on=["a", "b"],
+    )
+    got = sorted((r["a"], -1 if r["b"] is None else r["b"], r["v"]) for r in dl.read().collect())
+    assert got == [(1, -1, "s"), (1, -1, "x"), (1, 2, "t"), (2, 1, "u"), (2, 2, "w")]
+
+
+@pytest.mark.parametrize("plan", ["keys", "join"])
+def test_delta_merge_string_keys_with_quotes_plus_and_non_ascii(
+    spark, tmp_path, monkeypatch, plan
+):
+    """String keys holding a quote, a ``+``, a backslash or non-ASCII
+    characters match exactly (the key-set plan carries them as SQL
+    literals)."""
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    _merge_plan(monkeypatch, plan)
+    keys = ["o'brien", "a+b", "zürich", "東京", "back\\slash", "plain"]
+    dl = DeltaLogTable(spark, str(tmp_path / "t"))
+    dl.write(spark.createDataFrame([(k, 0) for k in keys], "k STRING, v INT"), mode="append")
+    src = [("o'brien", 1), ("a+b", 2), ("東京", 3), ("back\\slash", 4), ("new'+ü", 5)]
+    dl.merge(spark.createDataFrame(src, "k STRING, v INT"), on=["k"])
+    got = {r["k"]: r["v"] for r in dl.read().collect()}
+    assert got == {**{k: 0 for k in keys}, **dict(src)}
+
+
+@pytest.mark.parametrize("plan", ["keys", "join"])
+def test_delta_merge_timestamp_keys_under_a_foreign_session_time_zone(
+    spark, tmp_path, monkeypatch, plan
+):
+    """TIMESTAMP keys match by instant whatever the session and process
+    time zones: under a New York session in a Tokyo process, the two
+    instants that both read 01:30 on the night DST ends stay apart."""
+    import datetime as dt
+    import time
+
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    _merge_plan(monkeypatch, plan)
+    utc = dt.timezone.utc
+    edt = int(dt.datetime(2024, 11, 3, 5, 30, tzinfo=utc).timestamp() * 1_000_000)
+    est = int(dt.datetime(2024, 11, 3, 6, 30, tzinfo=utc).timestamp() * 1_000_000)
+    other = int(dt.datetime(2024, 1, 1, 12, 0, tzinfo=utc).timestamp() * 1_000_000)
+    prev_tz = spark.conf.get("spark.sql.session.timeZone")
+    monkeypatch.setenv("TZ", "Asia/Tokyo")
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        dl = DeltaLogTable(spark, str(tmp_path / "t"))
+        dl.write(
+            spark.sql(
+                f"SELECT timestamp_micros(m) AS ts, 'a' AS v FROM VALUES ({edt}), ({est}) AS t(m)"
+            ).coalesce(1),
+            mode="append",
+        )
+        dl.merge(
+            spark.sql(
+                f"SELECT timestamp_micros(m) AS ts, v FROM VALUES ({est}, 'z'), ({other}, 'n') "
+                "AS t(m, v)"
+            ),
+            on=["ts"],
+        )
+        got = sorted(
+            (r["m"], r["v"]) for r in dl.read().selectExpr("unix_micros(ts) AS m", "v").collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev_tz)
+        monkeypatch.undo()
+        time.tzset()
+    assert got == sorted([(edt, "a"), (est, "z"), (other, "n")])
+
+
+@pytest.mark.parametrize("plan", ["keys", "join"])
+def test_delta_merge_refuses_duplicate_source_key_by_name(spark, tmp_path, monkeypatch, plan):
+    """Two source rows for one matched key refuse an update MERGE, and
+    the message names the key; duplicates of an unmatched key insert."""
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    _merge_plan(monkeypatch, plan)
+    dl = DeltaLogTable(spark, str(tmp_path / "t"))
+    dl.write(spark.createDataFrame([(7, "a"), (8, "b")], "k INT, v STRING"), mode="append")
+    v0 = dl.latest_version()
+    with pytest.raises(ValueError, match=r"multiple rows for key \{'k': '?7'?\}"):
+        dl.merge(
+            spark.createDataFrame([(7, "x"), (7, "y"), (8, "z")], "k INT, v STRING"), on=["k"]
+        )
+    assert dl.latest_version() == v0
+    dl.merge(spark.createDataFrame([(9, "x"), (9, "y"), (8, "z")], "k INT, v STRING"), on=["k"])
+    got = sorted((r["k"], r["v"]) for r in dl.read().collect())
+    assert got == [(7, "a"), (8, "z"), (9, "x"), (9, "y")]
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_iceberg_merge_update_all_updates_every_duplicate_target_row(spark, tmp_path, mode):
+    """An update-all Iceberg MERGE updates EVERY matched target row, as
+    the Delta one does: two target rows with key 1 both take the source
+    row. With row lineage each keeps its own ``_row_id``."""
+    from ent_fins_lakehouse_spark.sources.iceberg import IcebergTable
+
+    target = spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], "k INT, v STRING").coalesce(1)
+    src = spark.createDataFrame([(1, "z"), (3, "n")], "k INT, v STRING")
+    expect = [(1, "z"), (1, "z"), (2, "c"), (3, "n")]
+    for name, kw in (("all", {}), ("set", {"matched_update": {"v": "s.v"}}), ("lineage", {})):
+        t = IcebergTable(spark, str(tmp_path / f"{name}_{mode}"))
+        if name == "lineage":
+            t.append(target.limit(0))
+            t.enable_row_lineage()
+        t.append(target)
+        if name == "lineage":
+            ids = sorted(r["_row_id"] for r in t.read_with_lineage().filter("k = 1").collect())
+        t.merge(src, on=["k"], mode=mode, **kw)
+        got = sorted((r["k"], r["v"]) for r in t.read().collect())
+        assert got == expect, (name, got)
+        if name == "lineage":
+            after = sorted(r["_row_id"] for r in t.read_with_lineage().filter("k = 1").collect())
+            assert after == ids, (ids, after)
