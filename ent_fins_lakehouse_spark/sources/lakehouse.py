@@ -5716,7 +5716,7 @@ class DeltaLogTable:
                 emit(rest.selectExpr(*cols))
             mt = tdf.filter(in_m)
             if not matched:
-                pass
+                pass  # no target row matched: the rest is the whole file
             elif not rewrite:  # NOT MATCHED BY SOURCE alone: matched rows stay
                 emit(mt.selectExpr(*cols))
             elif cl.delete and not cl.condition:
@@ -5724,9 +5724,10 @@ class DeltaLogTable:
             elif set_all:
                 emit(mt.selectExpr(*cols), "update_preimage", keep=False)
             else:
-                emit_flagged(self._merge_matched_join(mt, source.filter(in_m), on, schema, cl, any(
-                    src_n[k] > 1 for k in matched
-                )))
+                src_dups = any(src_n[k] > 1 for k in matched)
+                emit_flagged(
+                    self._merge_matched_join(mt, source.filter(in_m), on, schema, cl, src_dups)
+                )
         if set_all and cl.insert and not cl.cdf:
             emit(source.selectExpr(*cols))  # every row is a new image or an insert
         else:
