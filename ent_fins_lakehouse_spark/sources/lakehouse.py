@@ -5714,19 +5714,22 @@ class DeltaLogTable:
                 )
             else:
                 emit(rest.selectExpr(*cols))
-            mt = tdf.filter(in_m)
             if not matched:
                 pass  # no target row matched: the rest is the whole file
             elif not rewrite:  # NOT MATCHED BY SOURCE alone: matched rows stay
-                emit(mt.selectExpr(*cols))
-            elif cl.delete and not cl.condition:
-                emit(mt.selectExpr(*cols), "delete", keep=False)
-            elif set_all:
-                emit(mt.selectExpr(*cols), "update_preimage", keep=False)
+                emit(tdf.filter(in_m).selectExpr(*cols))
+            elif set_all or (cl.delete and not cl.condition):
+                # the matched rows leave their files; only the change
+                # feed reads them
+                if cl.cdf:
+                    change = "delete" if cl.delete else "update_preimage"
+                    emit(tdf.filter(in_m).selectExpr(*cols), change, keep=False)
             else:
                 src_dups = any(src_n[k] > 1 for k in matched)
                 emit_flagged(
-                    self._merge_matched_join(mt, source.filter(in_m), on, schema, cl, src_dups)
+                    self._merge_matched_join(
+                        tdf.filter(in_m), source.filter(in_m), on, schema, cl, src_dups
+                    )
                 )
         if set_all and cl.insert and not cl.cdf:
             emit(source.selectExpr(*cols))  # every row is a new image or an insert
