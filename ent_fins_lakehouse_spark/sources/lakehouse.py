@@ -5641,9 +5641,8 @@ class DeltaLogTable:
         import math
         from functools import reduce
 
-        names = [f.name for f in schema.fields]
         types = {f.name: f.dataType for f in schema.fields}
-        cols = [_sql_name(c) for c in names]
+        cols = [_sql_name(f.name) for f in schema.fields]
         src_n = Counter(skeys)
         live = sorted(k for k in src_n if None not in k)  # a NULL key matches nothing
         hits = []

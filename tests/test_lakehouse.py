@@ -7050,18 +7050,22 @@ def test_delta_merge_refuses_duplicate_source_key_by_name(spark, tmp_path, monke
     assert got == [(7, "a"), (8, "z"), (9, "x"), (9, "y")]
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_iceberg_merge_update_all_updates_every_duplicate_target_row(spark, tmp_path, mode):
+def test_iceberg_merge_update_all_updates_every_duplicate_target_row(spark, tmp_path):
     """An update-all Iceberg MERGE updates EVERY matched target row, as
     the Delta one does: two target rows with key 1 both take the source
-    row. With row lineage each keeps its own ``_row_id``."""
+    row, in copy-on-write and merge-on-read alike. With row lineage each
+    keeps its own ``_row_id``."""
     from ent_fins_lakehouse_spark.sources.iceberg import IcebergTable
 
     target = spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], "k INT, v STRING").coalesce(1)
     src = spark.createDataFrame([(1, "z"), (3, "n")], "k INT, v STRING")
     expect = [(1, "z"), (1, "z"), (2, "c"), (3, "n")]
-    for name, kw in (("all", {}), ("set", {"matched_update": {"v": "s.v"}}), ("lineage", {})):
-        t = IcebergTable(spark, str(tmp_path / f"{name}_{mode}"))
+    for name, mode, kw in (
+        ("all", "cow", {}),
+        ("set", "mor", {"matched_update": {"v": "s.v"}}),
+        ("lineage", "mor", {}),
+    ):
+        t = IcebergTable(spark, str(tmp_path / name))
         if name == "lineage":
             t.append(target.limit(0))
             t.enable_row_lineage()
