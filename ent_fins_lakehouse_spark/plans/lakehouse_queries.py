@@ -10,6 +10,7 @@ SURVEY §5.3, run differentially instead of as bare asserts.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import tempfile
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 from ent_fins_lakehouse_spark.plans.checks import multiset_diff_count
 from ent_fins_lakehouse_spark.plans.llm_queries import _swap_persist
 from ent_fins_lakehouse_spark.plans.registry import query
+from ent_fins_lakehouse_spark.session import run_concurrently
 from ent_fins_lakehouse_spark.sources.lakehouse import LakeTable
 from ent_fins_lakehouse_spark.sources.readers import load_table
 
@@ -738,12 +740,7 @@ def q145_delta_log_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     if (v0, v1, v2) != (0, 1, 2):
         raise AssertionError(f"unexpected commit versions {(v0, v1, v2)}")
     # independent counts run concurrently (r15, guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _p:
-        _fa = _p.submit(dl.read(version_as_of=1).count)
-        _fb = _p.submit(sup.count)
-        n_v1, n_sup = _fa.result(), _fb.result()
+    n_v1, n_sup = run_concurrently(spark, dl.read(version_as_of=1).count, sup.count)
     if n_v1 != n_sup:
         raise AssertionError(f"time travel to pre-overwrite state saw {n_v1} rows")
     return dl.read().orderBy("s_suppkey")
@@ -2385,11 +2382,7 @@ def q190_iceberg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     res = t.merge(updates.unionByName(inserts), on=["c_custkey"])
     # independent counts run concurrently (r15, guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _p:
-        _fu, _fi = _p.submit(updates.count), _p.submit(inserts.count)
-        n_upd, n_ins = _fu.result(), _fi.result()
+    n_upd, n_ins = run_concurrently(spark, updates.count, inserts.count)
     if res["rows_updated"] != n_upd or res["rows_inserted"] != n_ins:
         raise AssertionError(
             f"expected {n_upd} updates + {n_ins} inserts, got {res}"
@@ -6559,14 +6552,7 @@ def q339_delta_uniform_auto_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15 (guide §2.6): each twin/writer equality assert needs two
     # full-scan counts over the same files through two metadata stacks
     # — independent jobs, so each pair runs concurrently
-    def _pair_counts(df1, df2):
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as _p:
-            f1, f2 = _p.submit(df1.count), _p.submit(df2.count)
-            return f1.result(), f2.result()
-
-    n_before_delete, n_dl = _pair_counts(ice.read(), dl.read())
+    n_before_delete, n_dl = run_concurrently(spark, ice.read().count, dl.read().count)
     assert n_before_delete == n_dl
     # the facade resolves the legitimate dual-format root to Delta
     assert isinstance(open_table(spark, dl.path), DeltaLogTable)
@@ -6578,7 +6564,7 @@ def q339_delta_uniform_auto_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert st and st["ok"], st
     ice2 = IcebergTable(spark, dl.path)
     assert int(ice2.metadata()["format-version"]) == 3
-    n_after_delete, n_dl2 = _pair_counts(ice2.read(), dl.read())
+    n_after_delete, n_dl2 = run_concurrently(spark, ice2.read().count, dl.read().count)
     assert n_after_delete == n_before_delete - res["rows_deleted"]
     assert n_after_delete == n_dl2
     assert len(ice2._dv_entries()) >= 1
@@ -6590,7 +6576,7 @@ def q339_delta_uniform_auto_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     ice3 = IcebergTable(spark, dl.path)
     assert ice3._dv_entries() == []
     twin = ice3.read()
-    n_twin, n_dl3 = _pair_counts(twin, dl.read())
+    n_twin, n_dl3 = run_concurrently(spark, twin.count, dl.read().count)
     assert n_twin == n_dl3
 
     return (
@@ -6654,15 +6640,9 @@ def q341_iceberg_to_delta_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert v1 == v0 + 1, (v0, v1)
     # ONE count job per table state (r14, guide §1.2), and the
     # independent state counts run CONCURRENTLY (r15, guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as _p:
-        _f = [
-            _p.submit(dl.read().count),
-            _p.submit(ice.read().count),
-            _p.submit(dl.read(version_as_of=v0).count),
-        ]
-        n_head, n_ice, n_v0 = (f.result() for f in _f)
+    n_head, n_ice, n_v0 = run_concurrently(
+        spark, dl.read().count, ice.read().count, dl.read(version_as_of=v0).count
+    )
     assert n_head == n_ice
     assert n_v0 < n_head
 
@@ -6670,10 +6650,8 @@ def q341_iceberg_to_delta_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     ice.delete("o_orderkey % 10 = 4", mode="cow")
     v2 = sync_iceberg_to_delta(spark, ice, dl)
     assert v2 == v1 + 1
-    got = dl.read()
-    with ThreadPoolExecutor(max_workers=2) as _p:
-        _fa, _fb = _p.submit(got.count), _p.submit(ice.read().count)
-        assert _fa.result() == _fb.result()
+    n_dl, n_ice = run_concurrently(spark, dl.read().count, ice.read().count)
+    assert n_dl == n_ice
     # idempotent when in sync
     assert sync_iceberg_to_delta(spark, ice, dl) is None
 
@@ -6933,8 +6911,6 @@ def q346_iceberg_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # snapshot/sequence ids and re-sliced row-id ranges over whatever
     # landed first, staged data files reused as-is — so the committed
     # ids/sequences are IDENTICAL to the serial schedule's.
-    from concurrent.futures import ThreadPoolExecutor
-
     handles = [IcebergTable(spark, path) for _ in range(4)]
 
     def _stage(m: int) -> dict:
@@ -6954,8 +6930,7 @@ def q346_iceberg_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
             o.filter(f"k % 3 = {m}").coalesce(1).sortWithinPartitions("k")
         )
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        staged = list(pool.map(_stage, range(4)))
+    staged = run_concurrently(spark, *[functools.partial(_stage, m) for m in range(4)])
     for h, s in zip(handles[:3], staged[:3]):
         h._commit_planned_append(s, retries=3)
     n_total = t.read().count()
@@ -7131,7 +7106,6 @@ def q354_binpack_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-compaction rollup, hash-checked against DuckDB computing the
     surviving rows relationally."""
     import os as _os
-    from concurrent.futures import ThreadPoolExecutor
 
     from ent_fins_lakehouse_spark.sources.iceberg import IcebergTable
     from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
@@ -7186,10 +7160,7 @@ def q354_binpack_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # roots, no shared state) and each is a serial chain of small
     # commits — overlap them so one arc's commit latency back-fills
     # the other's idle executors (guide §2.6, r14)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_delta = pool.submit(_delta_arc)
-        f_ice = pool.submit(_ice_arc)
-        dl, ice = f_delta.result(), f_ice.result()
+    dl, ice = run_concurrently(spark, _delta_arc, _ice_arc)
 
     both = dl.read().withColumn("fmt", F.lit("delta")).unionByName(
         ice.read().withColumn("fmt", F.lit("iceberg"))

@@ -49,6 +49,7 @@ from ent_fins_lakehouse_spark.plans.checks import (
     multiset_equal_col,
 )
 from ent_fins_lakehouse_spark.plans.registry import query
+from ent_fins_lakehouse_spark.session import run_concurrently
 from ent_fins_lakehouse_spark.sources.readers import load_table
 
 # Per-query persist registry: a query that caches an intermediate
@@ -234,13 +235,7 @@ def q53_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the probe join consumes both. Materialize them as two concurrent
     # jobs instead of serially (first-run codegen + the two corpus
     # scans overlap); the probe then reads both caches.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_exact = _pool.submit(exact.count)
-        _f_lsh = _pool.submit(lsh.count)
-        n_exact = _f_exact.result()
-        _f_lsh.result()
+    n_exact, _ = run_concurrently(spark, exact.count, lsh.count)
     # one action derives BOTH counts (r14: the former inner-count +
     # anti-count pair executed the whole LSH pipeline twice); a left
     # join against the persisted exact pair set marks hits, and one

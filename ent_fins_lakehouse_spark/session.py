@@ -15,11 +15,15 @@ driver, but every setting is the one you would also want on a
   logs already hold the sizes, and Spark's distributed listing job
   (above its default of 32 paths) cost 0.34 s for 36 paths and 3.9 s for
   1,024 on a 4-core host, against 0.03 s and 0.15 s on the driver
+
+It also holds :func:`run_concurrently`, the one way the engine runs
+independent Spark jobs side by side.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
@@ -62,3 +66,45 @@ def stop_session() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+def run_concurrently(
+    spark: SparkSession,
+    *thunks: Callable[[], Any],
+    undo: Callable[[Any], None] | None = None,
+) -> list:
+    """Run independent Spark work side by side, one thread per thunk,
+    and return the results in thunk order.
+
+    Each thunk runs under its own ``inheritable_thread_target``
+    wrapper, so its jobs land in the caller's job group (job groups
+    are thread-local properties) and no two threads share one cloned
+    Properties object: two threads sharing one clone overwrite each
+    other's SQL execution ids.
+
+    When a thunk raises, every other thunk is still awaited, then
+    ``undo(result)`` is called once for each thunk that returned (a
+    sibling staging write's files, say), then the first error in thunk
+    order is re-raised."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    # each wrapper clones the caller's properties when it is built,
+    # here on the caller's thread
+    targets = [inheritable_thread_target(spark)(t) for t in thunks]
+    with ThreadPoolExecutor(max_workers=len(targets)) as pool:
+        futures = [pool.submit(t) for t in targets]
+    results, errors = [], []
+    for f in futures:
+        err = f.exception()
+        if err is None:
+            results.append(f.result())
+        else:
+            errors.append(err)
+    if errors:
+        if undo is not None:
+            for r in results:
+                undo(r)
+        raise errors[0]
+    return results

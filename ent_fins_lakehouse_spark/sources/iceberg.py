@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ent_fins_lakehouse_spark.sources.avro_io import read_ocf
-from ent_fins_lakehouse_spark.sources.lakehouse import publish_exclusive
+from ent_fins_lakehouse_spark.sources.lakehouse import footer_stats, publish_exclusive
 
 _PRIMITIVES = {
     "boolean": T.BooleanType(),
@@ -63,6 +63,32 @@ _PRIMITIVES = {
     "uuid": T.StringType(),
     "binary": T.BinaryType(),
 }
+
+
+#: struct format of the Iceberg single-value bound per primitive type
+#: (spec 'Binary single-value serialization'); other types carry none
+_BOUND_FMT = {"int": "<i", "long": "<q", "float": "<f", "double": "<d"}
+
+
+def _footer_bounds(path: str, ids: dict, itypes: dict) -> tuple[int, list, list]:
+    """Record count plus lower/upper bound key-value lists of one
+    parquet data file, read from its footer (:func:`footer_stats`).
+    Only int, long, float and double columns get bounds: string
+    footers may truncate."""
+    import struct
+
+    import pyarrow.parquet as pq
+
+    num_rows, _, mins, maxs = footer_stats(pq.ParquetFile(path).metadata)
+    bounded = [n for n in mins if itypes.get(n) in _BOUND_FMT]
+
+    def kv(vals: dict) -> list[dict]:
+        return [
+            {"key": ids[n], "value": struct.pack(_BOUND_FMT[itypes[n]], vals[n])}
+            for n in bounded
+        ]
+
+    return num_rows, kv(mins), kv(maxs)
 
 
 def _iceberg_type(t) -> T.DataType:
@@ -1167,12 +1193,9 @@ class IcebergTable:
         Shared by :meth:`append`, :meth:`update` and :meth:`merge`."""
         import glob
         import shutil
-        import struct as _s
         import tempfile
         import urllib.parse
         import uuid as _uuid
-
-        import pyarrow.parquet as pq
 
         data_dir = os.path.join(self.path, "data")
         os.makedirs(data_dir, exist_ok=True)
@@ -1319,37 +1342,12 @@ class IcebergTable:
                     ddir = data_dir
                 dest = os.path.join(ddir, f"{_uuid.uuid4().hex}.parquet")
                 shutil.move(f, dest)
-                md = pq.ParquetFile(dest).metadata
-                lo_kv, hi_kv = [], []
-                mins: dict[str, object] = {}
-                maxs: dict[str, object] = {}
-                for rg in range(md.num_row_groups):
-                    for ci in range(md.num_columns):
-                        col = md.row_group(rg).column(ci)
-                        name = col.path_in_schema
-                        stt = col.statistics
-                        if stt is None or not stt.has_min_max or "." in name:
-                            continue
-                        t = itypes.get(name)
-                        if t not in ("int", "long", "float", "double"):
-                            continue  # strings: footer may truncate
-                        mins[name] = (
-                            stt.min if name not in mins else min(mins[name], stt.min)
-                        )
-                        maxs[name] = (
-                            stt.max if name not in maxs else max(maxs[name], stt.max)
-                        )
-                for name, lo in mins.items():
-                    fmt = {"int": "<i", "long": "<q", "float": "<f", "double": "<d"}[
-                        itypes[name]
-                    ]
-                    lo_kv.append({"key": ids[name], "value": _s.pack(fmt, lo)})
-                    hi_kv.append({"key": ids[name], "value": _s.pack(fmt, maxs[name])})
+                num_rows, lo_kv, hi_kv = _footer_bounds(dest, ids, itypes)
                 data_file = {
                     "content": 0,
                     "file_path": dest,
                     "file_format": "PARQUET",
-                    "record_count": md.num_rows,
+                    "record_count": num_rows,
                     "file_size_in_bytes": os.path.getsize(dest),
                     "sort_order_id": sort_order_id,
                     "lower_bounds": lo_kv or None,
@@ -1557,13 +1555,14 @@ class IcebergTable:
     ) -> int:
         """Write the manifest list + ``v<N>.metadata.json`` for one new
         snapshot (O_EXCL commit — a concurrent writer loses loudly).
-        Returns ``snap_id``."""
+        Returns ``snap_id``. A lost commit leaves no manifest list
+        behind: the staleness gate runs before it is written, and a lost
+        O_EXCL race removes it."""
         import uuid as _uuid
 
         from ent_fins_lakehouse_spark.sources.avro_io import read_ocf, write_ocf
 
         lpath = os.path.join(self.meta_dir, f"snap-{snap_id}-{_uuid.uuid4().hex}.avro")
-        write_ocf(lpath, self._MANIFEST_LIST_SCHEMA, list_rows)
         # standard snapshot summary metrics (spec 'Snapshots' — the
         # fields every engine's UI/planner reads): added data files and
         # records, summed from the manifests THIS snapshot added —
@@ -1670,9 +1669,11 @@ class IcebergTable:
         else:
             mname = f"v{next_version}.metadata.json"
         target = os.path.join(self.meta_dir, mname)
+        write_ocf(lpath, self._MANIFEST_LIST_SCHEMA, list_rows)
         try:
             publish_exclusive(target, json.dumps(new_meta))
         except FileExistsError:
+            os.remove(lpath)
             raise RuntimeError(
                 f"Iceberg commit {mname} was taken by a concurrent writer; "
                 f"staged files are uncommitted — retry the {operation}"
@@ -2506,7 +2507,6 @@ class IcebergTable:
             "summary_extra": summary_extra,
             "replace": _replace,
             "schema_id": schema_id,
-            "now": now,
             # captured so a later staging on this handle (or the
             # commit's own rebase) cannot clobber this plan's slice
             "pending_lineage": getattr(self, "_pending_row_lineage", None),
@@ -2523,7 +2523,11 @@ class IcebergTable:
         and re-sliced row-id ranges when lineage is on — the winner may
         have consumed the counter), one new KB-sized manifest file. A
         REPLACE (compaction) is snapshot-planned and still loses
-        loudly, as does schema drift during the race."""
+        loudly, as does schema drift during the race. Each attempt
+        stamps its own commit time, so a plan committed after later
+        snapshots never carries an earlier timestamp than they do, and
+        a lost attempt removes the manifest it wrote."""
+        import time
         import uuid as _uuid
 
         from ent_fins_lakehouse_spark.sources.avro_io import write_ocf
@@ -2539,7 +2543,6 @@ class IcebergTable:
         summary_extra = staged["summary_extra"]
         _replace = staged["replace"]
         schema_id = staged["schema_id"]
-        now = staged["now"]
         self._pending_row_lineage = staged["pending_lineage"]
         attempts = 1 if _replace or retries <= 0 else retries + 1
         for attempt in range(attempts):
@@ -2583,11 +2586,12 @@ class IcebergTable:
             try:
                 return self._commit_snapshot(
                     meta, snaps, snap_id, seq, rows,
-                    "replace" if _replace else "append", now,
+                    "replace" if _replace else "append", int(time.time() * 1000),
                     summary_extra=summary_extra,
                     branch=branch,
                 )
             except RuntimeError:
+                os.remove(mpath)
                 if attempt == attempts - 1:
                     raise
         raise AssertionError("unreachable")
@@ -5243,11 +5247,8 @@ class IcebergTable:
         rewrite through :meth:`append` instead), schema mismatches,
         and partitioned targets (imported files carry no partition
         tuple)."""
-        import struct as _s
         import time
         import uuid as _uuid
-
-        import pyarrow.parquet as pq
 
         from ent_fins_lakehouse_spark.sources.avro_io import write_ocf
 
@@ -5324,32 +5325,10 @@ class IcebergTable:
             for f in ice_schema["fields"]
             if isinstance(f["type"], str)
         }
-        packf = {"int": "<i", "long": "<q", "float": "<f", "double": "<d"}
         entries = []
         for fp in files:
             full = os.path.abspath(fp)
-            md = pq.ParquetFile(full).metadata
-            mins: dict[str, object] = {}
-            maxs: dict[str, object] = {}
-            for rg in range(md.num_row_groups):
-                for ci in range(md.num_columns):
-                    col = md.row_group(rg).column(ci)
-                    name = col.path_in_schema
-                    stt = col.statistics
-                    if stt is None or not stt.has_min_max or "." in name:
-                        continue
-                    if itypes.get(name) not in packf:
-                        continue  # strings: footers may truncate
-                    mins[name] = stt.min if name not in mins else min(mins[name], stt.min)
-                    maxs[name] = stt.max if name not in maxs else max(maxs[name], stt.max)
-            lo_kv = [
-                {"key": ids[n], "value": _s.pack(packf[itypes[n]], v)}
-                for n, v in mins.items()
-            ]
-            hi_kv = [
-                {"key": ids[n], "value": _s.pack(packf[itypes[n]], maxs[n])}
-                for n in mins
-            ]
+            num_rows, lo_kv, hi_kv = _footer_bounds(full, ids, itypes)
             entries.append(
                 {
                     "status": 1,
@@ -5359,7 +5338,7 @@ class IcebergTable:
                         "content": 0,
                         "file_path": full,
                         "file_format": "PARQUET",
-                        "record_count": md.num_rows,
+                        "record_count": num_rows,
                         "file_size_in_bytes": os.path.getsize(full),
                         "lower_bounds": lo_kv or None,
                         "upper_bounds": hi_kv or None,
@@ -5913,11 +5892,8 @@ def convert_delta_to_iceberg(spark, delta_table, dest: str) -> "IcebergTable":
     At 100 TB this is the whole point: format migration as a
     control-plane operation over file listings, not a petabyte rewrite.
     """
-    import struct as _s
     import time
     import uuid as _uuid
-
-    import pyarrow.parquet as pq
 
     from ent_fins_lakehouse_spark.sources.avro_io import write_ocf
 
@@ -5940,7 +5916,6 @@ def convert_delta_to_iceberg(spark, delta_table, dest: str) -> "IcebergTable":
     ice_schema = {"schema-id": 0, "type": "struct", "fields": fields}
     ids = {f["name"]: f["id"] for f in fields}
     itypes = {f["name"]: f["type"] for f in fields}
-    packf = {"int": "<i", "long": "<q", "float": "<f", "double": "<d"}
 
     entries = _delta_file_entries(delta_table, adds, ids, itypes, 1)
     # live Delta deletion vectors translate to Iceberg v3 DV entries
@@ -6274,7 +6249,6 @@ def _delta_file_entries(
 
     import pyarrow.parquet as pq
 
-    packf = {"int": "<i", "long": "<q", "float": "<f", "double": "<d"}
     entries = []
     for rel, info in sorted(adds.items()):
         full = os.path.abspath(os.path.join(delta_table.path, rel))
@@ -6287,12 +6261,12 @@ def _delta_file_entries(
             maxs = stats.get("maxValues") or {}
             for name, lo in mins.items():
                 t = itypes.get(name)
-                if t not in packf or name not in maxs:
+                if t not in _BOUND_FMT or name not in maxs:
                     continue
                 if isinstance(lo, bool) or not isinstance(lo, (int, float)):
                     continue
-                lo_kv.append({"key": ids[name], "value": _s.pack(packf[t], lo)})
-                hi_kv.append({"key": ids[name], "value": _s.pack(packf[t], maxs[name])})
+                lo_kv.append({"key": ids[name], "value": _s.pack(_BOUND_FMT[t], lo)})
+                hi_kv.append({"key": ids[name], "value": _s.pack(_BOUND_FMT[t], maxs[name])})
         if n_rows is None:
             n_rows = pq.ParquetFile(full).metadata.num_rows
         entries.append(

@@ -53,12 +53,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ent_fins_lakehouse_spark.session import run_concurrently
+
 LOG_DIR = "_txn_log"
 DATA_DIR = "files"
 
 # Merge-key data skipping pays a fixed extra job (one source min/max
 # aggregate) to avoid a full-table scan — only worthwhile once the
-# table outgrows the job-dispatch cost. Tests/octaves may lower it.
+# table outgrows the job-dispatch cost. Tests may lower it.
 MERGE_PRUNE_MIN_BYTES = 8 * 1024 * 1024
 
 # Bloom point probes answer from a driver-resident descriptor copy
@@ -97,6 +99,39 @@ def publish_exclusive(target: str, payload: str) -> None:
         os.link(tmp, target)
     finally:
         os.unlink(tmp)
+
+
+def footer_stats(md) -> tuple[int, dict, dict, dict]:
+    """Per-file stats from a parquet footer (pyarrow ``FileMetaData``)
+    with no data scan: ``(num_rows, null_counts, mins, maxs)``, each
+    dict keyed by flat column name and merged across row groups.
+    Nested leaves are skipped, and so are min/max values pyarrow cannot
+    decode (e.g. DECIMAL): stats are an optimization, never a reason to
+    fail a write. The values are pyarrow's Python objects; each table
+    format encodes the ones it keeps (Delta's stats JSON, Iceberg's
+    bounds)."""
+    nulls: dict = {}
+    mins: dict = {}
+    maxs: dict = {}
+    for rg in range(md.num_row_groups):
+        group = md.row_group(rg)
+        for ci in range(md.num_columns):
+            col = group.column(ci)
+            name = col.path_in_schema
+            st = col.statistics
+            if st is None or "." in name:
+                continue
+            if st.null_count is not None:
+                nulls[name] = nulls.get(name, 0) + st.null_count
+            if not st.has_min_max:
+                continue
+            try:
+                lo, hi = st.min, st.max
+            except Exception:
+                continue
+            mins[name] = lo if name not in mins else min(mins[name], lo)
+            maxs[name] = hi if name not in maxs else max(maxs[name], hi)
+    return md.num_rows, nulls, mins, maxs
 
 
 @dataclass
@@ -4201,32 +4236,36 @@ class DeltaLogTable:
         fid_of: dict | None = None,
     ) -> tuple[list[dict], list[dict]]:
         """Stage one DML commit's cdc files and data files
-        CONCURRENTLY (guide §2.6, VERDICT r14 item 4): the two staging
-        writes are independent outputs of the same commit — neither
-        reads the other's files — and each is a small Spark job whose
-        tail leaves most executor slots idle, so submitting both from a
-        2-thread pool overlaps the second job's ramp-up with the
-        first's stragglers. Job submission from driver threads is
-        plain Spark scheduling; actions stay exactly the serial
-        schedule's (same files, same order in the commit)."""
+        concurrently through :func:`run_concurrently`: the two staging
+        writes are independent outputs of the same commit (neither
+        reads the other's files), and each is a small Spark job whose
+        tail leaves most executor slots idle, so running both at once
+        overlaps the second job's ramp-up with the first's stragglers.
+        The jobs stay in the caller's job group, and the actions are
+        exactly the serial schedule's (same files, same order in the
+        commit). When one side fails, the files the other side staged
+        are removed before the error propagates."""
         if cdc_df is None:
             return [], self._stage_adds(add_df, part_cols, pmap, fid_of)
-        from concurrent.futures import ThreadPoolExecutor
+        cdc_actions, add_actions = run_concurrently(
+            self.spark,
+            lambda: self._stage_cdc(cdc_df, part_cols, pmap, fid_of),
+            lambda: self._stage_adds(add_df, part_cols, pmap, fid_of),
+            undo=self._remove_staged,
+        )
+        return cdc_actions, add_actions
 
-        from pyspark.util import inheritable_thread_target
-
-        # the workers inherit the caller's job group (job groups are
-        # thread-local properties). Each wrapper clones the properties
-        # once, so each worker gets its own copy: two threads sharing
-        # one Properties object would overwrite each other's SQL
-        # execution ids.
-        def inherit(fn):
-            return inheritable_thread_target(self.spark)(fn)
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fc = pool.submit(inherit(self._stage_cdc), cdc_df, part_cols, pmap, fid_of)
-            fa = pool.submit(inherit(self._stage_adds), add_df, part_cols, pmap, fid_of)
-            return fc.result(), fa.result()
+    def _remove_staged(self, actions: list) -> None:
+        """Remove the files that staged ``add``/``cdc`` actions wrote
+        and no commit references; anything else in ``actions`` is
+        ignored."""
+        for a in actions:
+            act = (a.get("add") or a.get("cdc")) if isinstance(a, dict) else None
+            if act is not None:
+                try:
+                    os.remove(os.path.join(self.path, act["path"]))
+                except OSError:
+                    pass
 
     def _cdc_protocol_actions(self) -> list[dict]:
         """Protocol upgrade to the ``changeDataFeed`` writer feature,
@@ -4249,11 +4288,11 @@ class DeltaLogTable:
         """Per-file stats JSON for the add action (spec: 'Per-file
         Statistics') — numRecords always; minValues / maxValues /
         nullCount for numeric, boolean, date and timestamp columns.
-        Sourced from the parquet FOOTER row-group statistics via
-        pyarrow — metadata-only, no data scan (the same place every
-        Delta writer gets them). String min/max are omitted: parquet
-        footers may truncate them, and a truncated max that readers
-        treat as exact would wrongly skip files."""
+        Sourced from the parquet footer's row-group statistics via
+        :func:`footer_stats` — metadata-only, no data scan (the same
+        place every Delta writer gets them). String min/max are
+        omitted: parquet footers may truncate them, and a truncated max
+        that readers treat as exact would wrongly skip files."""
         import datetime
 
         import pyarrow.parquet as pq
@@ -4269,10 +4308,7 @@ class DeltaLogTable:
             return json.dumps(
                 {"numRecords": n, "minValues": {}, "maxValues": {}, "nullCount": {}}
             )
-        num_records = md.num_rows
-        mins: dict = {}
-        maxs: dict = {}
-        nulls: dict = {}
+        num_records, nulls, lows, highs = footer_stats(md)
 
         def jsonable(v):
             if isinstance(v, (datetime.date, datetime.datetime)):
@@ -4281,30 +4317,12 @@ class DeltaLogTable:
                 return v
             return None  # bytes/str/unknown → skip (truncation risk)
 
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                name = col.path_in_schema
-                if "." in name:  # nested leaves — skip
-                    continue
-                st = col.statistics
-                if st is None:
-                    continue
-                if st.null_count is not None:
-                    nulls[name] = nulls.get(name, 0) + st.null_count
-                if not st.has_min_max:
-                    continue
-                try:
-                    lo, hi = jsonable(st.min), jsonable(st.max)
-                except Exception:
-                    # pyarrow cannot decode statistics for some logical
-                    # types (e.g. DECIMAL) — stats are an optimization,
-                    # never fail the write over them
-                    continue
-                if lo is None or hi is None:
-                    continue
-                mins[name] = lo if name not in mins else min(mins[name], lo)
-                maxs[name] = hi if name not in maxs else max(maxs[name], hi)
+        mins: dict = {}
+        maxs: dict = {}
+        for name, lo in lows.items():
+            lo, hi = jsonable(lo), jsonable(highs[name])
+            if lo is not None and hi is not None:
+                mins[name], maxs[name] = lo, hi
         return json.dumps(
             {
                 "numRecords": num_records,
@@ -4907,151 +4925,139 @@ class DeltaLogTable:
                 ).astype({"_fp": str, "card": "int64", "matched": "int64"})
             return pd.DataFrame({k: [v] for k, v in r.items()})
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark.util import inheritable_thread_target
-
         encoded = []
-        cdc_future = None
+        cdc_actions: list[dict] = []
         # the staged cdc files are removed on every path that does not
         # commit (an unreferenced DV sidecar is left to vacuum, as after
         # a crash)
         committed = False
-        with ThreadPoolExecutor(max_workers=1) as cdc_pool:
-            try:
-                if scan is not None:
+        try:
+            if scan is not None:
+                matched = scan.filter(predicate).select("_fp", "_ri")
+
+                def encode_all() -> list:
+                    if on_driver:
+                        idx_of: dict[str, set] = {}
+                        for fp, ri in matched.collect():
+                            idx_of.setdefault(fp, set()).add(ri)
+                        return [
+                            r for fp, idx in idx_of.items()
+                            if (r := encode_file(fp, idx)) is not None
+                        ]
+                    return (
+                        matched.groupBy("_fp")
+                        .applyInPandas(
+                            encode, "_fp string, payload binary, card long, matched long"
+                        )
+                        .collect()
+                    )
+
+                if self._cdf_on(_meta):
                     # change data feed: emit the newly-masked rows as explicit
                     # cdc delete files — the predicate-matched rows of the
                     # MASKED scan, so rows a PRIOR DV masked are left out
                     # (those were emitted by the commit that masked them).
                     # The cdc write depends only on PRIOR table state, never
-                    # on the encode job's result, so it stages CONCURRENTLY
-                    # with the bitmap encode, in a worker that keeps the
-                    # caller's job group.
-                    if self._cdf_on(_meta):
-                        cdc_future = cdc_pool.submit(
-                            inheritable_thread_target(self.spark)(self._stage_cdc),
-                            self._scan(snap, cand_files).filter(predicate).selectExpr(
-                                *[_sql_name(f.name) for f in schema.fields],
-                                "'delete' AS _change_type",
-                            ),
-                            part_cols,
-                            _del_pmap,
-                            _del_fids,
-                        )
-                    matched = scan.filter(predicate).select("_fp", "_ri")
-                    if on_driver:
-                        idx_of: dict[str, set] = {}
-                        for fp, ri in matched.collect():
-                            idx_of.setdefault(fp, set()).add(ri)
-                        encoded = [
-                            r for fp, idx in idx_of.items()
-                            if (r := encode_file(fp, idx)) is not None
-                        ]
-                    else:
-                        encoded = (
-                            matched.groupBy("_fp")
-                            .applyInPandas(
-                                encode, "_fp string, payload binary, card long, matched long"
-                            )
-                            .collect()
-                        )
-
-                new_adds: list[dict] = []
-                rows_deleted = 0
-                for r in sorted(encoded, key=lambda r: r["_fp"]):
-                    rel = rel_by_full[r["_fp"]]
-                    info = adds[rel]
-                    rows_deleted += r["matched"]
-                    payload = bytes(r["payload"])
-                    u = _uuid.uuid4()
-                    with open(
-                        os.path.join(self.path, f"deletion_vector_{u}.bin"), "wb"
-                    ) as fh:
-                        fh.write(b"\x01")
-                        fh.write(struct.pack(">i", len(payload)))
-                        fh.write(payload)
-                        fh.write(struct.pack(">I", zlib.crc32(payload)))
-                    add_act = {
-                        "path": rel,
-                        "partitionValues": info["partitionValues"],
-                        "size": os.path.getsize(r["_fp"]),
-                        "modificationTime": now,
-                        "dataChange": True,
-                        "deletionVector": {
-                            "storageType": "u",
-                            "pathOrInlineDv": base64.b85encode(u.bytes).decode(),
-                            "offset": 1,
-                            "sizeInBytes": len(payload),
-                            "cardinality": int(r["card"]),
-                        },
-                    }
-                    # a DV only removes rows, so the file's original min/max
-                    # stats stay valid (wide) bounds — dropping them here would
-                    # silently disable file skipping on every later read
-                    if info.get("stats"):
-                        add_act["stats"] = info["stats"]
-                    # row tracking: the file keeps its rows in place, so the
-                    # survivors' ids MUST stay stable — carry the original
-                    # baseRowId through the DV re-add (fresh-id assignment in
-                    # _commit_actions skips adds that already have one)
-                    if info.get("baseRowId") is not None:
-                        add_act["baseRowId"] = info["baseRowId"]
-                        add_act["defaultRowCommitVersion"] = info.get("defaultRowCommitVersion")
-                    new_adds.append({"add": add_act})
-                cdc_actions: list[dict] = []
-                if cdc_future is not None:
-                    cdc_actions = cdc_future.result()
-                if not new_adds:
-                    # nothing to commit — the concurrently staged cdc files
-                    # (exactly the newly-masked rows: none) are unreferenced;
-                    # the cleanup below drops them
-                    return {"rows_deleted": 0, "files_touched": 0}
-                # _feature_protocol STARTS from the log's actual latest
-                # protocol, so existing feature gates (columnMapping,
-                # timestampNtz, variantType, …) survive the upgrade — a
-                # hardcoded protocol here would silently drop them and leave
-                # the metadata requiring features the protocol no longer lists
-                proto_action = {
-                    "protocol": self._feature_protocol(
-                        reader_feats={"deletionVectors"},
-                        writer_feats=(
-                            {"deletionVectors", "changeDataFeed"}
-                            if cdc_actions
-                            else {"deletionVectors"}
-                        ),
+                    # on the encode job's result, so it stages concurrently
+                    # with the bitmap encode; a failed encode removes it.
+                    cdc_feed = self._scan(snap, cand_files).filter(predicate).selectExpr(
+                        *[_sql_name(f.name) for f in schema.fields],
+                        "'delete' AS _change_type",
                     )
-                }
-                actions: list[dict] = [
-                    {
-                        "commitInfo": {
-                            "timestamp": now,
-                            "operation": "DELETE",
-                            "operationParameters": {"predicate": predicate},
-                            "engineInfo": "ent_fins_lakehouse_spark/delta-shim",
-                        }
+                    cdc_actions, encoded = run_concurrently(
+                        self.spark,
+                        lambda: self._stage_cdc(cdc_feed, part_cols, _del_pmap, _del_fids),
+                        encode_all,
+                        undo=self._remove_staged,
+                    )
+                else:
+                    encoded = encode_all()
+
+            new_adds: list[dict] = []
+            rows_deleted = 0
+            for r in sorted(encoded, key=lambda r: r["_fp"]):
+                rel = rel_by_full[r["_fp"]]
+                info = adds[rel]
+                rows_deleted += r["matched"]
+                payload = bytes(r["payload"])
+                u = _uuid.uuid4()
+                with open(
+                    os.path.join(self.path, f"deletion_vector_{u}.bin"), "wb"
+                ) as fh:
+                    fh.write(b"\x01")
+                    fh.write(struct.pack(">i", len(payload)))
+                    fh.write(payload)
+                    fh.write(struct.pack(">I", zlib.crc32(payload)))
+                add_act = {
+                    "path": rel,
+                    "partitionValues": info["partitionValues"],
+                    "size": os.path.getsize(r["_fp"]),
+                    "modificationTime": now,
+                    "dataChange": True,
+                    "deletionVector": {
+                        "storageType": "u",
+                        "pathOrInlineDv": base64.b85encode(u.bytes).decode(),
+                        "offset": 1,
+                        "sizeInBytes": len(payload),
+                        "cardinality": int(r["card"]),
                     },
-                    proto_action,
-                    *cdc_actions,
-                    *new_adds,
-                ]
-                self._commit_planned(actions, "delete", base=_planned_at)
-                committed = True
-            finally:
-                if not committed and cdc_future is not None:
-                    try:
-                        staged = {a["cdc"]["path"] for a in cdc_future.result()}
-                    except Exception:
-                        staged = set()  # staging failed: nothing of it to remove
-                    # _commit_planned can raise AFTER the log entry is
-                    # durable (the auto-checkpoint, the checksum file):
-                    # files a published commit references must stay
-                    if staged and not self._log_references_cdc(staged, _planned_at):
-                        for rel in staged:
-                            try:
-                                os.remove(os.path.join(self.path, rel))
-                            except OSError:
-                                pass
+                }
+                # a DV only removes rows, so the file's original min/max
+                # stats stay valid (wide) bounds — dropping them here would
+                # silently disable file skipping on every later read
+                if info.get("stats"):
+                    add_act["stats"] = info["stats"]
+                # row tracking: the file keeps its rows in place, so the
+                # survivors' ids MUST stay stable — carry the original
+                # baseRowId through the DV re-add (fresh-id assignment in
+                # _commit_actions skips adds that already have one)
+                if info.get("baseRowId") is not None:
+                    add_act["baseRowId"] = info["baseRowId"]
+                    add_act["defaultRowCommitVersion"] = info.get("defaultRowCommitVersion")
+                new_adds.append({"add": add_act})
+            if not new_adds:
+                # nothing to commit — the concurrently staged cdc files
+                # (exactly the newly-masked rows: none) are unreferenced;
+                # the cleanup below drops them
+                return {"rows_deleted": 0, "files_touched": 0}
+            # _feature_protocol STARTS from the log's actual latest
+            # protocol, so existing feature gates (columnMapping,
+            # timestampNtz, variantType, …) survive the upgrade — a
+            # hardcoded protocol here would silently drop them and leave
+            # the metadata requiring features the protocol no longer lists
+            proto_action = {
+                "protocol": self._feature_protocol(
+                    reader_feats={"deletionVectors"},
+                    writer_feats=(
+                        {"deletionVectors", "changeDataFeed"}
+                        if cdc_actions
+                        else {"deletionVectors"}
+                    ),
+                )
+            }
+            actions: list[dict] = [
+                {
+                    "commitInfo": {
+                        "timestamp": now,
+                        "operation": "DELETE",
+                        "operationParameters": {"predicate": predicate},
+                        "engineInfo": "ent_fins_lakehouse_spark/delta-shim",
+                    }
+                },
+                proto_action,
+                *cdc_actions,
+                *new_adds,
+            ]
+            self._commit_planned(actions, "delete", base=_planned_at)
+            committed = True
+        finally:
+            # _commit_planned can raise AFTER the log entry is durable
+            # (the auto-checkpoint, the checksum file): files a
+            # published commit references must stay
+            if not committed and cdc_actions and not self._log_references_cdc(
+                {a["cdc"]["path"] for a in cdc_actions}, _planned_at
+            ):
+                self._remove_staged(cdc_actions)
         return {"rows_deleted": rows_deleted, "files_touched": len(new_adds)}
 
     def _log_references_cdc(self, paths: set[str], since: int) -> bool:

@@ -39,6 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ent_fins_lakehouse_spark.session import run_concurrently
 from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
 
 #: The create-time clustering rewrite (OPTIMIZE on the a-side pk) only
@@ -779,27 +780,23 @@ class MaterializedJoinView:
                     )["files_rewritten"]
             return deleted
 
-        # r15 (guide §2.6): the re-derivation joins read the window +
-        # the version-pinned bases, never the view table — materialize
-        # them while the touched-pk delete-merges commit (serial among
-        # themselves on the view's version chain); the append still
-        # lands strictly after both merges.
+        # the re-derivation joins read the window + the version-pinned
+        # bases, never the view table — materialize them while the
+        # touched-pk delete-merges commit (serial among themselves on
+        # the view's version chain); the append still lands strictly
+        # after both merges.
         n_ins = 0
-        if fresh is not None:
-            from concurrent.futures import ThreadPoolExecutor as _TPE
-
-            with _TPE(max_workers=1) as _pool:
-                _f_fresh = _pool.submit(fresh.count)
+        try:
+            if fresh is not None:
+                n_ins, deleted = run_concurrently(self.spark, fresh.count, _merges)
+                if n_ins:
+                    self.table.write(fresh, mode="append")
+            else:
                 deleted = _merges()
-                n_ins = _f_fresh.result()
-            if n_ins:
-                self.table.write(fresh, mode="append")
-            fresh.unpersist()
-        else:
-            deleted = _merges()
-        for ch in (ch_a, ch_b):
-            if ch is not None:
-                ch.unpersist()
+        finally:
+            for df in (fresh, ch_a, ch_b):
+                if df is not None:
+                    df.unpersist()
         self._save({**d, "va": va1, "vb": vb1})
         return {
             "files_rewritten": deleted,
@@ -843,27 +840,28 @@ class MaterializedJoinView:
             .select(*self.table.read().columns)
             .persist()  # feeds both the count and the append
         )
-        # r15 (guide §2.6): the re-derivation join materializes from
-        # the batch + the OTHER base while the touched-pk delete-merge
-        # commits to the view table — independent inputs, so the two
-        # jobs overlap; the append still lands strictly after the
-        # merge's commit (same version chain, serial by contract).
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        with _TPE(max_workers=1) as _pool:
-            _f_fresh = _pool.submit(fresh.count)
-            deleted = self.table.merge(
-                touched,
-                on=[pk],
-                when_matched_update_all=False,
-                when_not_matched_insert_all=False,
-                matched_delete=True,
-            )["files_rewritten"]
-            n_ins = _f_fresh.result()
-        if n_ins:
-            self.table.write(fresh, mode="append")
-        fresh.unpersist()
-        ch.unpersist()
+        # the re-derivation join materializes from the batch + the
+        # OTHER base while the touched-pk delete-merge commits to the
+        # view table — independent inputs, so the two jobs overlap;
+        # the append still lands strictly after the merge's commit
+        # (same version chain, serial by contract).
+        try:
+            n_ins, deleted = run_concurrently(
+                self.spark,
+                fresh.count,
+                lambda: self.table.merge(
+                    touched,
+                    on=[pk],
+                    when_matched_update_all=False,
+                    when_not_matched_insert_all=False,
+                    matched_delete=True,
+                )["files_rewritten"],
+            )
+            if n_ins:
+                self.table.write(fresh, mode="append")
+        finally:
+            fresh.unpersist()
+            ch.unpersist()
         return {"files_rewritten": deleted, "pairs_inserted": n_ins}
 
     def streaming_sink(self, side: str):

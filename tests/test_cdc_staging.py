@@ -96,3 +96,38 @@ def test_merge_update_clause_cdc_pairing(spark, cdf_table):
     assert post == sorted((i, 1000.0 + i) for i in range(0, 30, 5))
     # every preimage has its postimage twin on the same key
     assert [p[0] for p in pre] == [p[0] for p in post]
+
+
+@pytest.mark.parametrize("verb", ["update", "merge"])
+def test_failed_cdc_staging_leaves_no_files_or_version(spark, cdf_table, monkeypatch, verb):
+    """A CDF UPDATE or MERGE stages its cdc files and data files side by
+    side; when the cdc side raises, the data files the other side
+    already moved into the table root are removed, nothing lands in
+    ``_change_data/``, and no log version is written."""
+    dl = cdf_table
+
+    def files() -> set[str]:
+        return {
+            os.path.join(d, f)
+            for d, _, fs in os.walk(dl.path)
+            if not d.startswith(dl.log_path)
+            for f in fs
+        }
+
+    def failing_cdc(self, *args, **kwargs):
+        raise RuntimeError("cdc staging failed")
+
+    before, v0 = files(), dl.latest_version()
+    monkeypatch.setattr(DeltaLogTable, "_stage_cdc", failing_cdc)
+    with pytest.raises(RuntimeError, match="cdc staging failed"):
+        if verb == "update":
+            dl.update({"bal": "bal + 1.0"}, "grp = 1")
+        else:
+            src = spark.createDataFrame(
+                [(1, 0, 5.0), (99, 0, 9.0)], "id BIGINT, grp BIGINT, bal DOUBLE"
+            )
+            dl.merge(src, on=["id"])
+    monkeypatch.undo()
+    assert files() == before
+    assert dl.latest_version() == v0
+    assert dl.read().count() == 30

@@ -444,6 +444,71 @@ def test_iceberg_stale_version_hint_recovers(spark, tmp_path):
     assert {r["k"] for r in t2.read().collect()} == {1, 2, 3}
 
 
+def test_iceberg_planned_append_stamps_commit_time(spark, tmp_path):
+    """An append planned before another writer's commit and committed
+    after it (q346's concurrent staging) carries a snapshot timestamp
+    no earlier than the winner's: the commit time is stamped per
+    attempt, not at planning."""
+    import time
+
+    from ent_fins_lakehouse_spark.sources.iceberg import IcebergTable
+
+    path = str(tmp_path / "t")
+    row = "k INT, v INT"
+    IcebergTable(spark, path).append(spark.createDataFrame([(1, 1)], row).coalesce(1))
+    late = IcebergTable(spark, path)
+    staged = late._plan_append(spark.createDataFrame([(2, 2)], row).coalesce(1))
+    time.sleep(0.05)
+    IcebergTable(spark, path).append(spark.createDataFrame([(3, 3)], row).coalesce(1))
+    late._commit_planned_append(staged, retries=1)
+    meta = IcebergTable(spark, path).metadata()
+    stamps = [s["timestamp-ms"] for s in meta["snapshots"]]
+    assert stamps == sorted(stamps), stamps
+    log = [e["timestamp-ms"] for e in meta["snapshot-log"]]
+    assert log == sorted(log) and meta["last-updated-ms"] == log[-1], meta
+
+
+def test_iceberg_lost_commit_attempts_leave_no_metadata_debris(spark, tmp_path, monkeypatch):
+    """A commit attempt that loses, to the staleness gate or to the
+    O_EXCL publish, removes the manifest and manifest list it wrote:
+    after one loss of each kind every ``.avro`` file in ``metadata/`` is
+    reachable from a snapshot."""
+    from ent_fins_lakehouse_spark.sources import iceberg
+    from ent_fins_lakehouse_spark.sources.avro_io import read_ocf
+    from ent_fins_lakehouse_spark.sources.iceberg import IcebergTable
+
+    path = str(tmp_path / "t")
+    row = "k INT, v INT"
+    IcebergTable(spark, path).append(spark.createDataFrame([(1, 1)], row).coalesce(1))
+    late = IcebergTable(spark, path)
+    staged = late._plan_append(spark.createDataFrame([(2, 2)], row).coalesce(1))
+    IcebergTable(spark, path).append(spark.createDataFrame([(3, 3)], row).coalesce(1))
+    # the first attempt loses to the staleness gate; the second loses
+    # the publish race once; the third commits
+    publish = iceberg.publish_exclusive
+    lost = []
+
+    def lose_once(target, payload):
+        if not lost:
+            lost.append(target)
+            raise FileExistsError(target)
+        publish(target, payload)
+
+    monkeypatch.setattr(iceberg, "publish_exclusive", lose_once)
+    late._commit_planned_append(staged, retries=2)
+    monkeypatch.undo()
+    assert lost
+    t = IcebergTable(spark, path)
+    reachable = set()
+    for snap in t.metadata()["snapshots"]:
+        reachable.add(os.path.basename(snap["manifest-list"]))
+        _, manifests = read_ocf(t._resolve(snap["manifest-list"]))
+        reachable |= {os.path.basename(m["manifest_path"]) for m in manifests}
+    on_disk = {f for f in os.listdir(os.path.join(path, "metadata")) if f.endswith(".avro")}
+    assert on_disk == reachable
+    assert {r["k"] for r in t.read().collect()} == {1, 2, 3}
+
+
 def test_crashed_publish_tmp_residue_reclaimed(spark, tmp_path):
     """A writer killed between publish_exclusive's tmp write and the
     hardlink leaves `.…​.tmp` staging residue beside the log/metadata —

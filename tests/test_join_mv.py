@@ -133,3 +133,40 @@ def test_streaming_side_sink_replay_is_noop(spark, mjv):
     sink(batch, 0)  # replay: must be a no-op
     assert {tuple(r) for r in mv.read().collect()} == state
     _assert_converged(a, b, mv)
+
+
+def test_refresh_and_side_changes_jobs_stay_in_caller_group(spark, mjv):
+    """Both maintenance verbs count the re-derived pairs while the
+    delete-merge commits; every job of either verb runs inside the
+    caller's job group, and neither leaves a persisted frame behind."""
+    a, b, mv = mjv
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    jsc = sc._jsc
+    n0 = jsc.getPersistentRDDs().size()
+
+    def in_group(group, fn):
+        ungrouped0 = set(st.getJobIdsForGroup(None))
+        sc.setJobGroup(group, "join view maintenance")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert st.getJobIdsForGroup(group), group
+        # only NEW ids count: the status store evicts its oldest jobs
+        assert not set(st.getJobIdsForGroup(None)) - ungrouped0, group
+
+    a.write(
+        spark.createDataFrame([(4, 20, 400.0)], "a_id LONG, k LONG, val DOUBLE").coalesce(1),
+        mode="append",
+    )
+    in_group("mv-refresh", mv.refresh)
+    assert (4, 20) in _pairs(mv)
+    v0 = a.latest_version()
+    a.update({"k": "30"}, "a_id = 4")
+    batch = a.read_changes(v0 + 1)
+    in_group("mv-side", lambda: mv.apply_side_changes(batch, "a"))
+    pairs = _pairs(mv)
+    assert (4, 20) not in pairs and (4, 30) in pairs
+    _assert_converged(a, b, mv)
+    assert jsc.getPersistentRDDs().size() == n0

@@ -1761,6 +1761,90 @@ def test_delta_write_emits_file_stats(spark, tmp_path):
     assert "s" not in stats["minValues"]  # truncation-safe omission
 
 
+def test_footer_stats_over_row_groups_match_the_data(spark, tmp_path):
+    """Delta stats JSON and Iceberg bounds of a file with several row
+    groups equal the min/max/null counts of the rows written: every
+    flat int, long, double, date, timestamp and boolean column gets
+    bounds in Delta (Iceberg bounds only its int, long and double
+    columns); decimal min/max (undecodable by pyarrow) and strings
+    (truncatable) get none, and struct leaves are skipped."""
+    import datetime
+    import decimal
+    import glob
+    import json
+    import struct
+
+    import pyarrow.parquet as pq
+
+    from ent_fins_lakehouse_spark.sources.avro_io import read_ocf
+    from ent_fins_lakehouse_spark.sources.iceberg import IcebergTable
+    from ent_fins_lakehouse_spark.sources.lakehouse import DeltaLogTable
+
+    utc = datetime.timezone.utc
+    cols = ["i", "l", "d", "dt", "ts", "b", "dec", "s"]
+    rows = [
+        (
+            None if n % 7 == 0 else n - 300,
+            None if n % 11 == 0 else n * 1_000_000_007,
+            None if n % 5 == 0 else n / 8 - 20,
+            None if n % 13 == 0 else datetime.date(2020, 1, 1) + datetime.timedelta(days=n),
+            None if n % 17 == 0 else datetime.datetime(2024, 1, 1, tzinfo=utc)
+            + datetime.timedelta(seconds=n * 3601, microseconds=n),
+            None if n % 3 == 0 else n % 2 == 0,
+            None if n % 19 == 0 else decimal.Decimal(n) / 100,
+            None if n % 23 == 0 else f"s{n:04d}",
+            (n, f"n{n}"),
+        )
+        for n in range(600)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "i INT, l BIGINT, d DOUBLE, dt DATE, ts TIMESTAMP, b BOOLEAN, "
+        "dec DECIMAL(10,2), s STRING, st STRUCT<x: INT, y: STRING>",
+    ).coalesce(1)
+    vals = {c: [r[j] for r in rows if r[j] is not None] for j, c in enumerate(cols)}
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    hconf.set("parquet.block.size", "4096")  # several row groups per file
+    try:
+        DeltaLogTable(spark, str(tmp_path / "dl")).write(df, mode="append")
+        # Iceberg appends take no struct column
+        IcebergTable(spark, str(tmp_path / "ice")).append(df.drop("st"))
+    finally:
+        hconf.unset("parquet.block.size")
+        spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    for f in glob.glob(str(tmp_path / "*" / "**" / "*.parquet"), recursive=True):
+        assert pq.ParquetFile(f).metadata.num_row_groups >= 2, f
+
+    with open(str(tmp_path / "dl" / "_delta_log" / f"{0:020d}.json")) as fh:
+        (add,) = [a["add"] for a in map(json.loads, fh) if "add" in a]
+    stats = json.loads(add["stats"])
+    ranged = ["i", "l", "d", "dt", "ts", "b"]
+
+    def jsonable(v):
+        return v.isoformat() if isinstance(v, datetime.date) else v
+
+    assert stats == {
+        "numRecords": len(rows),
+        "minValues": {c: jsonable(min(vals[c])) for c in ranged},
+        "maxValues": {c: jsonable(max(vals[c])) for c in ranged},
+        "nullCount": {c: len(rows) - len(vals[c]) for c in cols},
+    }
+
+    ice = IcebergTable(spark, str(tmp_path / "ice"))
+    meta = ice.metadata()
+    ids = {f["name"]: f["id"] for f in meta["schemas"][-1]["fields"]}
+    _, manifests = read_ocf(ice._resolve(meta["snapshots"][-1]["manifest-list"]))
+    (entry,) = [e for m in manifests for e in read_ocf(ice._resolve(m["manifest_path"]))[1]]
+    fmt = {"i": "<i", "l": "<q", "d": "<d"}
+    data_file = entry["data_file"]
+    assert data_file["record_count"] == len(rows)
+    for key, pick in (("lower_bounds", min), ("upper_bounds", max)):
+        assert {kv["key"]: kv["value"] for kv in data_file[key]} == {
+            ids[c]: struct.pack(f, pick(vals[c])) for c, f in fmt.items()
+        }, key
+
+
 def test_iceberg_catalog_style_metadata_names(spark, tmp_path):
     """Catalog-managed layouts name metadata <seq>-<uuid>.metadata.json
     with no version-hint: discovery must pick the highest sequence."""
@@ -6441,6 +6525,48 @@ def test_delta_merge_duplicate_source_keys_without_update_keep_target_rows(spark
 def _jobs_by_group(sc, group):
     st = sc.statusTracker()
     return set(st.getJobIdsForGroup(group)), set(st.getJobIdsForGroup(None))
+
+
+def test_run_concurrently_order_job_group_and_undo(spark):
+    """``run_concurrently`` returns results in thunk order and runs every
+    job in the caller's job group. When thunks raise it still awaits
+    the others, undoes each returned result exactly once and re-raises
+    the first error in thunk order, not the first in time."""
+    import threading
+    import time
+
+    from ent_fins_lakehouse_spark.session import run_concurrently
+
+    sc = spark.sparkContext
+    _, ungrouped0 = _jobs_by_group(sc, None)
+    sc.setJobGroup("run-concurrently", "side-by-side counts")
+    try:
+        got = run_concurrently(spark, spark.range(3).count, spark.range(5).count, lambda: "x")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == [3, 5, "x"]
+    grouped, ungrouped = _jobs_by_group(sc, "run-concurrently")
+    assert len(grouped) >= 2
+    assert not ungrouped - ungrouped0
+
+    second_raised = threading.Event()
+
+    def first():
+        second_raised.wait(10)
+        raise ValueError("first")
+
+    def second():
+        second_raised.set()
+        raise KeyError("second")
+
+    def slow():
+        time.sleep(0.3)
+        return "slow"
+
+    undone = []
+    with pytest.raises(ValueError, match="first"):
+        run_concurrently(spark, lambda: "a", first, slow, second, undo=undone.append)
+    assert sorted(undone) == ["a", "slow"]
 
 
 def test_delta_checkpoint_snapshot_runs_no_spark_job(spark, tmp_path):
